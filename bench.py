@@ -11,16 +11,15 @@ measured at ±70% on single runs, which made round-over-round per-query
 deltas unattributable; the median sheds the codegen-JIT first-run cost
 and scheduler noise) and BENCH_FULL.json carries the per-query
 max-min spread so regression triage can cite signal. The metric is the
-sum of per-query medians across the suite.
+sum of per-query medians across the suite. The warm-up and the timed
+region live in tools/timing.py.
 """
 
 from __future__ import annotations
 
 import json
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -69,50 +68,16 @@ HEADLINE = [
 def main() -> None:
     from distgrep_spark import queries as q
     from distgrep_spark.session import get_spark
+    from tools.timing import timed, warm
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("distgrep-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm-up: absorb JVM/codegen startup AND Hadoop filesystem + parquet
-    # reader initialization (~1-2 s one-time) so they aren't billed to q1.
-    spark.range(1).collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").groupBy().count().write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # Arrow / Pandas-UDF path warm-up: the FIRST Pandas-UDF stage in a
-    # session pays Python-worker spawn + pandas/pyarrow import per worker
-    # slot (measured: multimodal_byte_features first rep 4.18 s vs 0.72 s
-    # warm — the whole round-5 'worst per-query spread' was this one-time
-    # cost landing inside the timed reps). One tiny mapInPandas over one
-    # partition per core warms every slot once, unbilled.
-    def _warm_arrow(batches):
-        for b in batches:
-            yield b
-
-    # One row per partition, one partition per core: a fixed row count
-    # (the old 64) leaves empty partitions on >64-core hosts, those
-    # Python worker slots never spawn, and the import cost lands back in
-    # the first timed Pandas-UDF rep (round-6 advice).
-    _slots = spark.sparkContext.defaultParallelism
-    spark.range(_slots, numPartitions=_slots).mapInPandas(
-        _warm_arrow, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm(spark, sf_dir)
 
     names = [n for n in HEADLINE if n in q.QUERIES]
     names += [n for n in sorted(q.QUERIES) if n not in names]
-
-    # Shard mode (round-11 long-session A/B): SPARK_GRAFT_BENCH_SHARD=i/N
-    # runs names[i::N] in THIS process — a fresh session per shard, so
-    # summing N shards' timings measures the suite without accumulated
-    # session state (codegen caches, pinned py4j refs, JIT/GC history).
-    # tools/ab_bench_shards.py drives the comparison vs the monolithic
-    # run; the driver contract (no env) is unchanged.
-    shard = os.environ.get("SPARK_GRAFT_BENCH_SHARD")
-    if shard:
-        i, n_shards = (int(x) for x in shard.split("/"))
-        names = names[i::n_shards]
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     timings: dict[str, float] = {}
@@ -120,24 +85,12 @@ def main() -> None:
     for name in names:
         runs: list[float] = []
         for _ in range(reps):
-            t0 = time.perf_counter()
             try:
-                q.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.perf_counter() - t0, 3))
+                runs.append(round(timed(spark, q.QUERIES[name], sf_dir, name), 3))
             except Exception as e:  # noqa: BLE001
                 print(f"bench error in {name}: {e}", file=sys.stderr)
                 runs = []
                 break
-            # Release py4j references so the ContextCleaner frees each
-            # query's localCheckpoint blocks promptly: across hundreds of
-            # queries in ONE session the pinned blocks otherwise
-            # accumulate in storage memory (measured: the x16 prefix soak
-            # died with 'Could not allocate memory to grow
-            # BytesToBytesMap' at join_salted_skew, while the same query
-            # ran fine in a fresh session). Costs ~ms per query.
-            gc.collect()
         if runs:
             timings[name] = sorted(runs)[len(runs) // 2]
             spreads[name] = round(max(runs) - min(runs), 3)
@@ -153,7 +106,7 @@ def main() -> None:
     # other query alike; cross-round comparisons should divide by it
     # (r10->r11 lost all per-query signal to a 1.54x window). Additive
     # key only — metric/value/queries/sf and the noop-sink timing
-    # methodology are unchanged. None under shard mode (no tpch rows).
+    # methodology are unchanged. None when no tpch row ran.
     tpch_walls = sorted(
         t for n, t in timings.items() if n.startswith("tpch_q") and t >= 0
     )
@@ -189,7 +142,8 @@ def main() -> None:
     print(json.dumps(full), file=sys.stderr)
     try:
         here = os.path.dirname(os.path.abspath(__file__))
-        # shard runs must not clobber the committed BENCH_FULL.json
+        # SPARK_GRAFT_BENCH_OUT redirects the record so a probe run
+        # does not overwrite the committed BENCH_FULL.json
         out_path = os.environ.get(
             "SPARK_GRAFT_BENCH_OUT", os.path.join(here, "BENCH_FULL.json")
         )

@@ -33,8 +33,8 @@ is what makes 32k-entry tables cheap on short documents.
 Reference: massimostanzione/distgrep is grep-only (worker.go:33-42);
 tokenizer surface per the brief's text-analysis north star; Sennrich et
 al. 2016 for merge semantics. A/B vs the chained kernel (plan-construction
-and wall at k=4/64/1024) lives in SCALE.md round 11 and
-tools/ab_bpe_encode.py.
+and wall at k=4/64/1024) lives in SCALE.md round 11; the script is
+tools/ab_bpe_encode.py at cf796df.
 """
 
 from __future__ import annotations

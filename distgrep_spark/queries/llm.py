@@ -2503,7 +2503,7 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan grows one projection per merge rank, so this form holds only
     to k ≈ 10² (py4j/analyzer cost is linear in k, and every rank is a
     full HOF pass over every doc whether or not the pair occurs —
-    measured in tools/ab_bpe_encode.py at sf0.1: k=64 chained pays
+    measured at sf0.1, SCALE.md round 11: k=64 chained pays
     1.05 s plan + 6.6 s wall where the Arrow kernel pays 0.03 s +
     0.48 s; at k=900 the chained plan THROWS java.lang.
     StackOverflowError inside Catalyst's physical planner — a hard

@@ -302,8 +302,8 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over temp views, with the SAME checkpoints at the same fan-out
     # points and the same broadcast hints; the distributed plan shape,
     # every expression, and the result are unchanged (all-arms
-    # collect-equality in tools/ab_r12.py; interleaved A/B in
-    # OPTIMIZATION_r12.md). cg is additionally checkpointed (it fans
+    # collect-equality in tools/ab_r12.py at cf796df; interleaved A/B
+    # in OPTIMIZATION_r12.md). cg is additionally checkpointed (it fans
     # out to tstat, the corpus totals, and the dscore probe — the
     # tokenize + trigram pipeline previously re-executed 3x), and the
     # totals come straight from cg (sum over grams of f_t == sum over

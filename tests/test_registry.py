@@ -611,6 +611,26 @@ def test_ladder_advisories_catch_seeded_noise():
             assert set(json.load(f)) == {"other_writer_row", "my_row"}
 
 
+def test_warmup_lives_only_in_timing():
+    """The session warm-up exists once, in tools/timing.warm. bench.py
+    and the tools call it; none pastes its region.parquet scan or its
+    per-core mapInPandas (the block had been copied into six files)."""
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    paths = [os.path.join(root, "bench.py")] + glob.glob(
+        os.path.join(root, "tools", "*.py")
+    )
+    copies = sorted(
+        os.path.relpath(p, root)
+        for p in paths
+        if os.path.basename(p) != "timing.py"
+        and any(tok in open(p).read() for tok in ("mapInPandas", "region.parquet"))
+    )
+    assert copies == [], f"warm-up copied outside tools/timing.py: {copies}"
+
+
 def test_bench_normalized_baseline_is_committed_and_covers_registry():
     """The committed baseline must exist and cover the registry (minus
     queries newer than the last rebase - tracked by the note field);

@@ -28,7 +28,6 @@ query registered after round 7 to carry a LADDER.json row.
 
 from __future__ import annotations
 
-import gc
 import json
 import math
 import os
@@ -143,6 +142,7 @@ def main() -> None:
     from __spark_entry__ import SCOREBOARD_PREFIX
     from distgrep_spark.session import get_spark
     from tools.soak_prefix import build
+    from tools.timing import timed
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     ladder_path = os.path.join(here, "LADDER.json")
@@ -172,15 +172,6 @@ def main() -> None:
             build(spark, m, out)
             print(f"# built x{m} corpus in {time.time() - t0:.1f}s -> {out}")
 
-    def run(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        q.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = time.perf_counter() - t0
-        gc.collect()  # drop localCheckpoint refs (the x16 OOM lesson)
-        return dt
-
     rows = {}
     if os.path.exists(ladder_path):
         with open(ladder_path) as f:
@@ -191,12 +182,13 @@ def main() -> None:
     merged = rows
     for name in names:
         try:
+            fn = q.QUERIES[name]
             pts = []
             spreads = {}
             for m in MULTS:
                 d = f"/tmp/soak_sf_x{m}"
-                run(name, d)  # warm plan/JIT per rung
-                reps = [run(name, d) for _ in range(max(REPS, 1))]
+                timed(spark, fn, d, name)  # warm plan/JIT per rung
+                reps = [timed(spark, fn, d, name) for _ in range(max(REPS, 1))]
                 pts.append((m, min(reps)))
                 if len(reps) > 1:
                     spreads[str(m)] = round(max(reps) - min(reps), 2)

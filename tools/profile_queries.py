@@ -19,13 +19,41 @@ shuffles, fewer checkpoint jobs) or Python-boundary cost (Arrow batches).
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.timing import job_group, jobs, timed, warm  # noqa: E402
+
+
+def profile(spark, name: str, sf_dir: str, reps: int) -> dict:
+    """One query's build/exec split. Jobs are counted in the query's own
+    job group, so the counts stay exact after the session's 1,000th job
+    (see tools.timing.jobs)."""
+    from distgrep_spark import queries as q
+
+    j0 = jobs(spark, name)
+    with job_group(spark, name):
+        t0 = time.perf_counter()
+        df = q.QUERIES[name](spark, sf_dir)
+        t_build = time.perf_counter() - t0
+    j_build = jobs(spark, name) - j0
+    execs = [timed(spark, lambda *_: df, sf_dir, name) for _ in range(reps)]
+    j_total = jobs(spark, name) - j0
+    med = sorted(execs)[len(execs) // 2]
+    return dict(
+        name=name,
+        build=round(t_build, 3),
+        build_jobs=j_build,
+        exec0=round(execs[0], 3),
+        exec_med=round(med, 3),
+        exec_min=round(min(execs), 3),
+        jobs_per_exec=round((j_total - j_build) / reps, 1),
+        total_med=round(t_build + med, 3),
+    )
 
 
 def main() -> None:
@@ -36,22 +64,7 @@ def main() -> None:
     reps = max(1, int(os.environ.get("SPARK_GRAFT_PROFILE_REPS", "3")))
     spark = get_spark("distgrep-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    # Same warm-up discipline as bench.py.
-    spark.range(1).collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").groupBy().count().write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    def _warm(batches):
-        for b in batches:
-            yield b
-
-    slots = sc.defaultParallelism
-    spark.range(slots, numPartitions=slots).mapInPandas(_warm, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm(spark, sf_dir)
 
     names = sys.argv[1:]
     if not names:
@@ -59,40 +72,13 @@ def main() -> None:
         bench = json.load(open(os.path.join(here, "BENCH_FULL.json")))["queries"]
         names = [n for n, _ in sorted(bench.items(), key=lambda kv: -kv[1])[:40]]
 
-    tracker = sc._jsc.sc().statusTracker()
     rows = []
     for name in names:
         if name not in q.QUERIES:
             print(f"?? unknown query {name}", file=sys.stderr)
             continue
-        sc.setJobDescription(f"profile:{name}")
-        j0 = len(tracker.getJobIdsForGroup(None))
-        t0 = time.perf_counter()
-        df = q.QUERIES[name](spark, sf_dir)
-        t_build = time.perf_counter() - t0
-        j_build = len(tracker.getJobIdsForGroup(None)) - j0
-        execs = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            execs.append(time.perf_counter() - t0)
-        j_total = len(tracker.getJobIdsForGroup(None)) - j0
-        sc.setJobDescription(None)
-        gc.collect()
-        med = sorted(execs)[len(execs) // 2]
-        rows.append(
-            dict(
-                name=name,
-                build=round(t_build, 3),
-                build_jobs=j_build,
-                exec0=round(execs[0], 3),
-                exec_med=round(med, 3),
-                exec_min=round(min(execs), 3),
-                jobs_per_exec=round((j_total - j_build) / reps, 1),
-                total_med=round(t_build + med, 3),
-            )
-        )
-        r = rows[-1]
+        r = profile(spark, name, sf_dir, reps)
+        rows.append(r)
         print(
             f"{r['total_med']:7.3f} {name:40s} build={r['build']:6.3f} "
             f"(jobs={r['build_jobs']}) exec med={r['exec_med']:6.3f} "

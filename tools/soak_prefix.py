@@ -14,7 +14,6 @@ dims. Usage:
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
 import time
@@ -71,6 +70,7 @@ def main() -> None:
     import distgrep_spark.queries as q
     from __spark_entry__ import SCOREBOARD_PREFIX
     from distgrep_spark.session import get_spark
+    from tools.timing import timed
 
     spark = get_spark("prefix-soak")
     spark.sparkContext.setLogLevel("ERROR")
@@ -80,24 +80,14 @@ def main() -> None:
         build(spark, mult, out)
         print(f"# built x{mult} corpus in {time.time() - t0:.1f}s -> {out}")
 
-    def run(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        q.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        # free py4j refs -> ContextCleaner drops localCheckpoint blocks;
-        # without this the x16 soak OOMs at join_salted_skew on the
-        # storage memory pinned by 14 earlier queries' checkpoints
-        # (bench.py carries the same guard; measured round 4).
-        gc.collect()
-        return dt
-
     print(f"{'query':34s} {'x1':>7s} {'x' + str(mult):>7s}  ratio")
     tot1 = totm = 0.0
     worst: list[tuple[float, str]] = []
     for name in SCOREBOARD_PREFIX:
-        run(name, SF)  # warm the plan/JIT on the small side first
-        t1 = run(name, SF)
-        tm = run(name, out)
+        fn = q.QUERIES[name]
+        timed(spark, fn, SF, name)  # warm the plan/JIT on the small side first
+        t1 = timed(spark, fn, SF, name)
+        tm = timed(spark, fn, out, name)
         tot1 += t1
         totm += tm
         ratio = tm / t1 if t1 > 0 else float("inf")
