@@ -58,14 +58,6 @@ def ngrams_of_tokens(t: Column, n: int) -> Column:
     )
 
 
-def word_ngrams(col: Column, n: int) -> Column:
-    """Array of space-joined word n-grams (n >= 1) of a text column.
-
-    Convenience wrapper; prefer materializing ``tokens`` into a column
-    and calling ``ngrams_of_tokens`` in hot paths (see its docstring)."""
-    return ngrams_of_tokens(tokens(col), n)
-
-
 def stopword_ratio(col: Column, stopwords: tuple[str, ...]) -> Column:
     """Fraction of whitespace tokens that are stopwords (double)."""
     t = tokens(col)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
 # ---------------------------------------------------------------------------
@@ -78,6 +79,62 @@ def shingles(
     return g.distinct() if distinct else g
 
 
+def shingle_profiles(
+    df: DataFrame,
+    n: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> tuple[DataFrame, DataFrame]:
+    """PROFILE COLLAPSE + posting-list intersection counts: the shared
+    front half of the uncapped Jaccard and the containment scorers.
+
+    Returns ``(prof, scored)``:
+
+    - ``prof`` (pid, gs, members, n): one row per DISTINCT gram set
+      ``gs`` of size ``n``; ``members`` are the sorted ids sharing it and
+      ``pid = members[0]`` (min id: stable, collision-free);
+    - ``scored`` (pb, pa, c, ma, na, mb, nb): every profile pair
+      ``pa < pb`` sharing ``c >= 1`` grams, with both sides' members and
+      sizes joined on — scorers work on scalars, then expand members.
+
+    Docs are grouped by identical gram SET first, so coincident copies
+    (the densified mass; at 100 TB the mirrored/boilerplate mass) share
+    ONE profile and the pair algorithm runs on the deduplicated problem;
+    only the final member expansion is output-bound. The former
+    doc-level inverted-index self-join was quadratic in duplicate
+    multiplicity: the x64 key-shifted corpus (64 coincident copies per
+    doc) spilled >40 GB of shuffle before the round-8 full-registry
+    sweep killed it at the disk wall. Grouping by the sorted array is
+    one corpus-sized shuffle; arrays as a GROUP key are fine (the
+    never-join-on-arrays lesson is about join compares). The
+    intersection count comes straight from the posting-list C(df,2)
+    explode over profile grams — the LSH rollup pattern."""
+    g = shingles(df, n=n, text_col=text_col, id_col=id_col)
+    doc_grams = g.groupBy(id_col).agg(F.sort_array(F.collect_set("gram")).alias("gs"))
+    # prof fans out to 3 consumers (posting build, size/member
+    # slices, same-profile expansion) — checkpoint the fan-out
+    # point, not every stage (a mid-pipeline checkpoint serializes
+    # branches that would otherwise run concurrently).
+    prof = (
+        doc_grams.groupBy("gs")
+        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("members"))
+        .selectExpr("members[0] AS pid", "gs", "members", "size(gs) AS n")
+        .localCheckpoint(eager=False)
+    )
+    canon = (
+        prof.select("pid", F.explode("gs").alias("gram"))
+        .groupBy("gram")
+        .agg(F.sort_array(F.collect_set("pid")).alias("ps"))
+        .where(F.size("ps") >= 2)
+        .selectExpr(f"explode({list_pairs('ps', 'x AS pa, y AS pb')}) AS p")
+        .groupBy("p.pa", "p.pb")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    pa = prof.selectExpr("pid AS pa", "members AS ma", "n AS na")
+    pb = prof.selectExpr("pid AS pb", "members AS mb", "n AS nb")
+    return prof, canon.join(pa, "pa").join(pb, "pb")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     *,
@@ -105,8 +162,8 @@ def ngram_jaccard_pairs(
     coincident-duplicate multiplicity and died at the x64 sweep's disk
     wall; an AllPairs-prefix variant was A/B-rejected, see the branch
     comment). Only the final member expansion is output-bound."""
-    g = shingles(df, n=n, text_col=text_col, id_col=id_col)
     if max_df is not None:
+        g = shingles(df, n=n, text_col=text_col, id_col=id_col)
         # Posting-list plan: the per-gram doc list is built ONLY for
         # sub-cap grams, and pairs explode in-list (bounded by
         # max_df^2 per gram — the market_basket_lift pattern). The df
@@ -144,79 +201,29 @@ def ngram_jaccard_pairs(
             .agg(F.count(F.lit(1)).alias("n_grams"))
         )
         common = (
-            posts.selectExpr(
-                "explode(flatten(transform(ds, (x, i) ->"
-                " transform(slice(ds, i + 2, size(ds)),"
-                " y -> struct(x AS doc_a, y AS doc_b))))) AS p"
-            )
+            posts.selectExpr(f"explode({list_pairs('ds', 'x AS doc_a, y AS doc_b')}) AS p")
             .select("p.doc_a", "p.doc_b")
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("c"))
         )
     else:
-        # Uncapped EXACT path: PROFILE COLLAPSE + posting-list counting —
-        # the densification-immune algorithm of this family's DuckDB
-        # twin, as the engine plan. The former inverted-index self-join
-        # was quadratic in duplicate multiplicity: the x64 key-shifted
-        # corpus (64 coincident copies per doc) spilled >40 GB of
-        # shuffle before the round-8 full-registry sweep killed it at
-        # the disk wall. Collapsing docs to DISTINCT gram-SET profiles
-        # first removes the blowup entirely — coincident copies (the
-        # densified mass; at 100 TB the mirrored/boilerplate mass)
-        # share ONE profile, the pair algorithm runs on the
-        # deduplicated problem, and only the final answer (which IS
-        # output-bound) expands members back out.
-        #
-        # The intersection count c comes straight from the posting-list
-        # C(df,2) explode over profile grams (the capped-branch / LSH
-        # rollup pattern) — no per-candidate array_intersect verify and
-        # no AllPairs prefix machinery. A first cut used rarest-first
-        # AllPairs prefix filtering + array verify (Bayardo 2007, the
-        # twin's shape); A/B at sf0.1 measured it 4x slower (6.5 s vs
-        # ~2 s): the ordering/verify stages are pure overhead when c is
-        # countable map-side, and candidate pruning for hub grams is
-        # the max_df variant's job (a hub gram's C(df,2) explode is
-        # exactly what the cap exists to bound; an uncapped EXACT
-        # baseline must pay it in any algorithm).
-        #
-        # profile = exact gram set (groupBy the sorted array — one
-        # corpus-sized shuffle; arrays as a GROUP key are fine, the
-        # never-join-on-arrays lesson is about join compares);
-        # pid = members[0] (min doc id): stable, collision-free.
-        doc_grams = g.groupBy(id_col).agg(
-            F.sort_array(F.collect_set("gram")).alias("gs")
-        )
-        # prof fans out to 3 consumers (posting build, size/member
-        # slices, same-profile expansion) — checkpoint the fan-out
-        # point, not every stage (CLAUDE.md CTE fan-out lesson).
-        prof = (
-            doc_grams.groupBy("gs")
-            .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("members"))
-            .selectExpr("members[0] AS pid", "gs", "members", "size(gs) AS n")
-            .localCheckpoint(eager=False)
-        )
-        canon = (
-            prof.select("pid", F.explode("gs").alias("gram"))
-            .groupBy("gram")
-            .agg(F.sort_array(F.collect_set("pid")).alias("ps"))
-            .where(F.size("ps") >= 2)
-            .selectExpr(
-                "explode(flatten(transform(ps, (x, i) ->"
-                " transform(slice(ps, i + 2, size(ps)),"
-                " y -> struct(x AS pa, y AS pb))))) AS p"
-            )
-            .groupBy("p.pa", "p.pb")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        pa = prof.selectExpr("pid AS pa", "members AS ma", "n AS na")
-        pb = prof.selectExpr("pid AS pb", "members AS mb", "n AS nb")
+        # Uncapped EXACT path: shingle_profiles (PROFILE COLLAPSE +
+        # posting-list counting — the densification-immune algorithm of
+        # this family's DuckDB twin, as the engine plan), then score.
+        # A first cut used rarest-first AllPairs prefix filtering +
+        # array verify (Bayardo 2007, the twin's shape); A/B at sf0.1
+        # measured it 4x slower (6.5 s vs ~2 s): the ordering/verify
+        # stages are pure overhead when c is countable map-side, and
+        # candidate pruning for hub grams is the max_df variant's job
+        # (a hub gram's C(df,2) explode is exactly what the cap exists
+        # to bound; an uncapped EXACT baseline must pay it in any
+        # algorithm).
+        prof, scored = shingle_profiles(df, n, text_col, id_col)
         # score at the PROFILE level, then expand members carrying the
         # scalar jaccard (the dedup_embedding_cosine lesson: the
         # expansion shuffle moves scalars, never arrays).
         cross = (
-            canon.join(pa, "pa")
-            .join(pb, "pb")
-            .select(
+            scored.select(
                 "ma",
                 "mb",
                 (
@@ -237,9 +244,7 @@ def ngram_jaccard_pairs(
         same = (
             prof.where(F.size("members") >= 2)
             .selectExpr(
-                "explode(flatten(transform(members, (x, i) ->"
-                " transform(slice(members, i + 2, size(members)),"
-                " y -> struct(x AS doc_a, y AS doc_b))))) AS d",
+                f"explode({list_pairs('members', 'x AS doc_a, y AS doc_b')}) AS d",
                 "CAST(1.0 AS DOUBLE) AS jaccard",
             )
             .select("d.doc_a", "d.doc_b", "jaccard")

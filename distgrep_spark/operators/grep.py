@@ -54,13 +54,17 @@ def match_predicate(
 
     Pattern "" matches every line, matching Go's
     ``strings.Count(s, "") > 0 == true`` (documented in FIXTURES.md §5).
+
+    Case-insensitive regex uses ``(?iu)`` on the raw line: Java's bare
+    ``(?i)`` folds ASCII only, and regex mode must find what contains
+    mode finds ("ÉCOLE" matches "École").
     """
     if not case_sensitive:
-        line = F.lower(line)
         if mode == "contains":
+            line = F.lower(line)
             pattern = pattern.lower()
         else:
-            pattern = f"(?i){pattern}"  # lower() keeps plan simple; (?i) belt+braces
+            pattern = f"(?iu){pattern}"
     if mode == "contains":
         if pattern == "":
             return F.lit(True)

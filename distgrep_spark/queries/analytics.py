@@ -52,7 +52,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.numeric import dsum
-from distgrep_spark.operators.dedup import shingles
+from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.operators.dedup import shingle_profiles
 from distgrep_spark.operators.sketches import bitmap_build, bitmap_count
 from distgrep_spark.operators.spatial import grid_neighbor_pairs
 from distgrep_spark.queries.registry import query
@@ -760,8 +761,8 @@ def q_text_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed shingle containment |S(a) ∩ S(b)| / |S(a)| ≥ 0.8 — the
     sub/superset near-dup detector symmetric Jaccard misses (a short doc
     quoted wholesale inside a long one scores Jaccard ≈ |a|/|b| but
-    containment 1.0). Same one-shuffle inverted-index plan as
-    ``ngram_jaccard_pairs`` (distgrep_spark/operators/dedup.py:81), kept
+    containment 1.0). Same profile-collapsed posting plan as
+    ``ngram_jaccard_pairs`` (``operators/dedup.shingle_profiles``), kept
     directional (a ≠ b, not a < b) since containment is asymmetric. The
     0.8 threshold is the integer test ``5*n_common >= 4*n_a`` — no float
     on the keep/drop edge — and the emitted ratio is a single exact
@@ -770,39 +771,9 @@ def q_text_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_hash does vs dedup_exact) and hub shingles get the ``max_df``
     cap; the plan shape is unchanged."""
     docs = load_table(spark, sf_dir, "documents")
-    g = shingles(docs, n=3)
-    # Profile collapse (round 8, same redesign as the uncapped
-    # ngram_jaccard_pairs engine): docs grouped by exact gram SET, the
-    # posting join runs between DISTINCT profiles (coincident copies —
-    # the densified x64 corpus's whole quadratic mass — share one
-    # profile), and only the final directional expansion is
-    # output-bound. The former doc-level posting self-join spilled past
-    # the disk at x64. Containment is scored at the PROFILE level so
-    # the member expansion shuffles 3 scalars, never gram arrays.
-    prof = (
-        g.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("gram")).alias("gs"))
-        .groupBy("gs")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("members"))
-        .selectExpr("members[0] AS pid", "gs", "members", "size(gs) AS n")
-        .localCheckpoint(eager=False)
-    )
-    canon = (
-        prof.select(F.col("pid"), F.explode("gs").alias("gram"))
-        .groupBy("gram")
-        .agg(F.sort_array(F.collect_set("pid")).alias("ps"))
-        .where(F.size("ps") >= 2)
-        .selectExpr(
-            "explode(flatten(transform(ps, (x, i) ->"
-            " transform(slice(ps, i + 2, size(ps)),"
-            " y -> struct(x AS pa, y AS pb))))) AS p"
-        )
-        .groupBy("p.pa", "p.pb")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    pa = prof.selectExpr("pid AS pa", "members AS ma", "n AS na")
-    pb = prof.selectExpr("pid AS pb", "members AS mb", "n AS nb")
-    scored = canon.join(pa, "pa").join(pb, "pb")
+    # Containment is scored at the PROFILE level so the member
+    # expansion shuffles 3 scalars, never gram arrays.
+    prof, scored = shingle_profiles(docs, n=3)
     # directional emission from the symmetric intersection count: both
     # orientations of a cross-profile pair, then every ordered pair
     # within a profile (identical gram sets: containment exactly 1.0).
@@ -1136,13 +1107,7 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     two_hop = (
         nbrs.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ns, (x, i) ->"
-                    " transform(slice(ns, i + 2, size(ns)), y ->"
-                    "   struct(x AS part_a, y AS part_b))))"
-                )
-            ).alias("e")
+            F.explode(F.expr(list_pairs("ns", "x AS part_a, y AS part_b"))).alias("e")
         )
         .select("e.part_a", "e.part_b")
         .groupBy("part_a", "part_b")

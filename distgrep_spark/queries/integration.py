@@ -60,6 +60,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.queries.analytics import _ER_RECS_SQL
 from distgrep_spark.queries.registry import ORACLES, query
 from distgrep_spark.sources.catalog import load_table
@@ -662,6 +663,25 @@ def _brand_baskets(li: DataFrame, part: DataFrame) -> DataFrame:
     )
 
 
+def _bt_match_matrix(baskets: DataFrame) -> DataFrame:
+    """(bi, bj, n_ij, w_ij): per brand pair bi < bj, the number of
+    decided matches (equal quantities are ties, skipped) and bi's wins.
+    Pairing is in-basket, k(k-1)/2 per order; the rollup is
+    |brands|^2-bounded at any fact scale."""
+    return (
+        baskets.select(
+            F.explode(F.expr(list_pairs("bs", "x.b AS bi, y.b AS bj, x.q AS qi, y.q AS qj")))
+            .alias("m")
+        )
+        .where("m.qi <> m.qj")
+        .groupBy("m.bi", "m.bj")
+        .agg(
+            F.expr("CAST(count(*) AS BIGINT) AS n_ij"),
+            F.expr("CAST(sum(CASE WHEN m.qi > m.qj THEN 1 ELSE 0 END) AS BIGINT) AS w_ij"),
+        )
+    )
+
+
 @query(
     "orders_bradley_terry_step",
     oracle="""
@@ -746,31 +766,11 @@ def q_orders_bradley_terry_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     — broadcast-sized at any fact scale."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = _brand_baskets(li, part)
-    pair = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(bs, (x, i) ->"
-                    " transform(slice(bs, i + 2, size(bs)), y ->"
-                    "   struct(x.b AS bi, y.b AS bj,"
-                    "          x.q AS qi, y.q AS qj))))"
-                )
-            ).alias("m")
-        )
-        .where("m.qi <> m.qj")
-        .groupBy("m.bi", "m.bj")
-        .agg(
-            F.expr("CAST(count(*) AS BIGINT) AS n_ij"),
-            F.expr("CAST(sum(CASE WHEN m.qi > m.qj THEN 1 ELSE 0 END)"
-                   " AS BIGINT) AS w_ij"),
-        )
-        # |brands|^2-bounded match matrix: checkpoint so the w0 / term /
-        # denominator branches below read ~300 materialized rows instead
-        # of re-executing the fact-scan + basket explode once per branch
-        # (first audit of this plan counted 28 shuffles; 4 after)
-        .localCheckpoint(eager=False)
-    )
+    # |brands|^2-bounded match matrix: checkpoint so the w0 / term /
+    # denominator branches below read ~300 materialized rows instead
+    # of re-executing the fact-scan + basket explode once per branch
+    # (first audit of this plan counted 28 shuffles; 4 after)
+    pair = _bt_match_matrix(_brand_baskets(li, part)).localCheckpoint(eager=False)
     dirs = pair.selectExpr(
         "bi AS b", "bj AS o", "n_ij", "w_ij AS w"
     ).unionByName(
@@ -1010,28 +1010,7 @@ def _bt_iters(spark: SparkSession, sf_dir: str, k: int):
     orders_bradley_terry_step."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = _brand_baskets(li, part)
-    pair = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(bs, (x, i) ->"
-                    " transform(slice(bs, i + 2, size(bs)), y ->"
-                    "   struct(x.b AS bi, y.b AS bj,"
-                    "          x.q AS qi, y.q AS qj))))"
-                )
-            ).alias("m")
-        )
-        .where("m.qi <> m.qj")
-        .groupBy("m.bi", "m.bj")
-        .agg(
-            F.expr("CAST(count(*) AS BIGINT) AS n_ij"),
-            F.expr(
-                "CAST(sum(CASE WHEN m.qi > m.qj THEN 1 ELSE 0 END)"
-                " AS BIGINT) AS w_ij"
-            ),
-        )
-    )
+    pair = _bt_match_matrix(_brand_baskets(li, part))
     # Bounded codebook pull: |brands|^2 rows regardless of corpus size.
     mat = [
         (r["bi"], r["bj"], r["n_ij"], r["w_ij"]) for r in pair.collect()

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.operators.dedup import (
     dedup_by_hash,
     dedup_exact,
@@ -1340,11 +1341,7 @@ def q_dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .where(F.size("ids") >= 2)
-        .selectExpr(
-            "explode(flatten(transform(ids, (x, i) ->"
-            " transform(slice(ids, i + 2, size(ids)),"
-            " y -> struct(x AS doc_a, y AS doc_b))))) AS p"
-        )
+        .selectExpr(f"explode({list_pairs('ids', 'x AS doc_a, y AS doc_b')}) AS p")
         .select("p.doc_a", "p.doc_b")
     )
     return dedup_clusters(docs, pairs)
@@ -1770,9 +1767,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("cos_sim") >= 0.45)
         .selectExpr(
             "cluster",
-            "explode(flatten(transform(members, (p, i) ->"
-            " transform(slice(members, i + 2, size(members)),"
-            " q -> struct(p AS vec_a, q AS vec_b))))) AS d",
+            f"explode({list_pairs('members', 'x AS vec_a, y AS vec_b')}) AS d",
             "cos_sim",
         )
         .select("cluster", "d.vec_a", "d.vec_b", "cos_sim")
@@ -4381,8 +4376,14 @@ def q_dedup_simhash_radius_report(
         FROM sel GROUP BY pid
         """
     ).localCheckpoint(eager=False).createOrReplaceTempView("shr_sigs_v")
+    fields = (
+        "x.pid AS pa, y.pid AS pb,"
+        " bit_count(x.b0 ^ y.b0) + bit_count(x.b1 ^ y.b1)"
+        " + bit_count(x.b2 ^ y.b2) + bit_count(x.b3 ^ y.b3) AS d,"
+        " x.m * y.m AS mass"
+    )
     return spark.sql(
-        """
+        f"""
         WITH pm AS (
           SELECT pid, CAST(count(*) AS BIGINT) AS m
           FROM shr_prof_v GROUP BY pid
@@ -4405,13 +4406,7 @@ def q_dedup_simhash_radius_report(
         pairs AS (
           SELECT DISTINCT p.pa, p.pb, p.d, p.mass
           FROM posts
-          LATERAL VIEW explode(flatten(transform(s, (x, i) ->
-            transform(slice(s, i + 2, size(s)), y ->
-              struct(x.pid AS pa, y.pid AS pb,
-                     bit_count(x.b0 ^ y.b0) + bit_count(x.b1 ^ y.b1)
-                     + bit_count(x.b2 ^ y.b2) + bit_count(x.b3 ^ y.b3)
-                       AS d,
-                     x.m * y.m AS mass))))) AS p
+          LATERAL VIEW explode({list_pairs("s", fields)}) AS p
           WHERE p.d <= 2
         ),
         uni AS (

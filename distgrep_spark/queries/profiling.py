@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.operators.graph import degree_orient
 from distgrep_spark.operators.text import dup_span_fraction
 from distgrep_spark.queries.registry import query
@@ -549,9 +550,7 @@ def q_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.expr(
                 "concat("
-                " flatten(transform(ps, (x, i) ->"
-                "   transform(slice(ps, i + 2, size(ps)),"
-                "             y -> struct(x AS part_a, y AS part_b)))),"
+                f" {list_pairs('ps', 'x AS part_a, y AS part_b')},"
                 " transform(ps, x ->"
                 "   struct(x AS part_a, CAST(NULL AS BIGINT) AS part_b)),"
                 " transform(ps, x ->"
@@ -1553,13 +1552,7 @@ def q_graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # w>=2 SURVIVORS — the filtered edge list is graph-sized, not
     # explode-sized, so the mirror is free.
     pair_rows = baskets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ps, (x, i) ->"
-                " transform(slice(ps, i + 2, size(ps)), y ->"
-                "   struct(x AS a, y AS b))))"
-            )
-        ).alias("e")
+        F.explode(F.expr(list_pairs("ps", "x AS a, y AS b"))).alias("e")
     ).select("e.a", "e.b")
     edges = (
         pair_rows.groupBy("a", "b")
@@ -1704,13 +1697,7 @@ def q_graph_local_clustering_hubs(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     edges = (
         baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps)), y ->"
-                    "   struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
+            F.explode(F.expr(list_pairs("ps", "x AS u, y AS v"))).alias("e")
         )
         .select("e.u", "e.v")
         .groupBy("u", "v")

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.operators.text import SPLIT_CASE, remove_dup_sentences
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
@@ -1613,15 +1614,12 @@ def q_text_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-source gram counts land inside BOTH window partitions below
     # and the whole query stays one lineage (a broadcast-join
     # formulation recomputed the corpus scan 3x — ReusedExchange never
-    # fired; measured). slice() is 1-indexed: element i's successors
-    # start at position i + 2.
+    # fired; measured).
     rows = per_gram.select(
         F.explode(
             F.expr(
                 "concat("
-                " flatten(transform(srcs, (x, i) ->"
-                "   transform(slice(srcs, i + 2, size(srcs)),"
-                "             y -> struct(x AS source_a, y AS source_b)))),"
+                f" {list_pairs('srcs', 'x AS source_a, y AS source_b')},"
                 " transform(srcs, x ->"
                 "   struct(x AS source_a, CAST(NULL AS STRING) AS source_b)),"
                 " transform(srcs, x ->"

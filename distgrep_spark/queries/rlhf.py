@@ -29,6 +29,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.queries.analytics import _QUANT, _QUANT_DUCK
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
@@ -380,7 +381,7 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair is the |sources|^2-bounded match matrix (<= 400 rows at any
     # scale), checkpointed because dirs/w0/denom fan out from it.
     spark.sql(
-        """
+        f"""
         WITH bq AS (
           SELECT lang, n_chars DIV 256 AS bk, source, max(score_num) AS q
           FROM rlhf_scored_v GROUP BY lang, n_chars DIV 256, source
@@ -394,9 +395,8 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(CASE WHEN m.qi > m.qj THEN 1 ELSE 0 END)
                     AS BIGINT) AS w_ij
         FROM baskets
-        LATERAL VIEW explode(flatten(transform(bs, (x, i) ->
-          transform(slice(bs, i + 2, size(bs)), y ->
-            struct(x.s AS bi, y.s AS bj, x.q AS qi, y.q AS qj))))) AS m
+        LATERAL VIEW explode({list_pairs("bs", "x.s AS bi, y.s AS bj, x.q AS qi, y.q AS qj")})
+          AS m
         WHERE m.qi <> m.qj
         GROUP BY m.bi, m.bj
         """

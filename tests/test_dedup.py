@@ -127,7 +127,7 @@ def test_short_docs_do_not_crash_ansi(spark):
     column must be explicitly guarded for size(tokens) < n."""
     from pyspark.sql import functions as F
 
-    from distgrep_spark.functions.textfns import word_ngrams
+    from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
     df = spark.createDataFrame(
         [(0, ""), (1, "one"), (2, "two words"), (3, "now three tokens"),
@@ -136,7 +136,9 @@ def test_short_docs_do_not_crash_ansi(spark):
     )
     grams = {
         r["doc_id"]: r["g"]
-        for r in df.select("doc_id", word_ngrams(F.col("text"), 3).alias("g")).collect()
+        for r in df.select("doc_id", tokens(F.col("text")).alias("toks"))
+        .select("doc_id", ngrams_of_tokens(F.col("toks"), 3).alias("g"))
+        .collect()
     }
     assert grams[0] == [] and grams[1] == [] and grams[2] == []
     assert grams[3] == ["now three tokens"]

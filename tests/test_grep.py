@@ -71,6 +71,20 @@ def test_regex_mode(lines_df):
     assert got == {"Achille": 1}
 
 
+@pytest.mark.parametrize("pattern", ["ÉCOLE", "école", "σοφ"])
+def test_ignore_case_regex_folds_non_ascii(spark, tmp_path, pattern):
+    # Java's bare (?i) folds ASCII only; regex mode must find the same
+    # rows as contains mode, which lowercases both sides.
+    lines = ["École normale", "ÉCOLE", "ecole", "ΣΟΦΙΑ"]
+    p = tmp_path / "unicode.txt"
+    p.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    df = read_lines(spark, str(p))
+    regex = as_dict(distgrep(df, pattern, mode="regex", case_sensitive=False))
+    contains = as_dict(distgrep(df, pattern, case_sensitive=False))
+    assert contains
+    assert regex == contains
+
+
 def test_empty_pattern_matches_all(lines_df):
     # strings.Count(s, "") > 0 is true in Go → pattern "" matches every line.
     got = as_dict(distgrep(lines_df, ""))

@@ -631,6 +631,24 @@ def test_warmup_lives_only_in_timing():
     assert copies == [], f"warm-up copied outside tools/timing.py: {copies}"
 
 
+def test_pair_fragment_lives_only_in_pairs():
+    """The in-list i<j pair explode exists once, in
+    functions/pairs.list_pairs (it had been pasted into 15 places).
+    DuckDB oracles pair with generate_series, so they never match."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    copies = sorted(
+        os.path.relpath(p, pkg)
+        for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+        if os.path.relpath(p, pkg) != os.path.join("functions", "pairs.py")
+        and "slice(" in (src := open(p).read())
+        and "i + 2" in src
+    )
+    assert copies == [], f"pair fragment copied outside functions/pairs.py: {copies}"
+
+
 def test_bench_normalized_baseline_is_committed_and_covers_registry():
     """The committed baseline must exist and cover the registry (minus
     queries newer than the last rebase - tracked by the note field);
