@@ -101,7 +101,13 @@ def main(argv: list[str] | None = None) -> int:
             ordered=args.ordered,
         )
         if args.highlight != "none" and not args.regex:
-            df = highlight(df, args.pattern, column="line", style=args.highlight)
+            df = highlight(
+                df,
+                args.pattern,
+                column="line",
+                style=args.highlight,
+                case_sensitive=not args.ignore_case,
+            )
         print("Freq.\tLine\n---")
         for row in df.toLocalIterator():
             print(f"{row['freq']}\t{row['line']}")

@@ -5,7 +5,13 @@ inside the list, roll the pairs up) is the engine's map → shuffle →
 reduce with a map-side combine: the pairs are generated in the task that
 holds the list, never by a same-lineage self-join, which re-executes its
 input once per side. At 100 TB a hub list of length d emits d(d-1)/2
-rows, so this fragment is also the one place a hot-list cap belongs.
+rows, so this fragment is where a hot-list cap belongs.
+
+Two other in-list pair explodes remain and a cap must reach them too:
+``operators/dedup.minhash_lsh_pairs`` pairs a value-ordered
+``filter(ids, y -> y > x)`` over an unsorted ``collect_list``, and
+``text_shingle_containment``'s same-profile explode
+(``queries/analytics.py``) emits both orientations.
 """
 
 from __future__ import annotations

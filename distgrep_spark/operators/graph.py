@@ -21,6 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.pairs import list_pairs
+
+# Support floor of the part co-purchase graph: a pair is an edge only if
+# it was co-bought in at least this many orders.
+_COPURCHASE_MIN_ORDERS = 2
+
 
 def connected_components(
     vertices: DataFrame,
@@ -88,6 +94,60 @@ def dedup_clusters(
         df.select(id_col), pairs, id_col=id_col, src_col=pair_a, dst_col=pair_b
     )
     return comps.select(F.col("id").alias(id_col), F.col("comp").alias("cluster_rep"))
+
+
+def part_baskets(li: DataFrame) -> DataFrame:
+    """(l_orderkey, ps): every order's parts, ``ps =
+    sort_array(collect_set(l_partkey))``. ONE order-keyed shuffle; the
+    partial sets double as the (order, part) dedup, so a part listed on
+    two lines of one order counts once.
+
+    ``ps`` is sorted and distinct, so ``functions/pairs.list_pairs``
+    over it emits every co-bought pair exactly once, value-ordered
+    (x < y)."""
+    return (
+        li.select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
+    )
+
+
+def copurchase_edges(li: DataFrame, *, directed: bool = False) -> DataFrame:
+    """The part co-purchase graph of ``lineitem``: (u, v, w) for every
+    part pair u < v co-bought in w >= 2 orders.
+
+    The engine's map → shuffle → reduce with a map-side combine: pairs
+    are emitted in the task that holds the basket (bounded k(k-1)/2 per
+    order of k parts, never quadratic in the table), then rolled up per
+    (u, v) with the support floor applied before anything downstream.
+
+    ``directed=True`` returns (src, dst, w) with both orientations of
+    every surviving edge and the same w. The rollup still runs on the
+    u < v orientation only and the mirror happens on the survivors, so
+    the shuffle carries half the rows and the mirror is graph-sized,
+    not explode-sized. w is symmetric, so this equals rolling up both
+    orientations.
+
+    No checkpoint here: callers that read the edges more than once
+    checkpoint their own projection."""
+    edges = (
+        part_baskets(li)
+        .select(F.explode(F.expr(list_pairs("ps", "x AS u, y AS v"))).alias("e"))
+        .select("e.u", "e.v")
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .where(F.col("w") >= _COPURCHASE_MIN_ORDERS)
+    )
+    if not directed:
+        return edges
+    return edges.select(
+        F.explode(
+            F.expr(
+                "array(struct(u AS src, v AS dst, w),"
+                "      struct(v AS src, u AS dst, w))"
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst", "e.w")
 
 
 def degree_orient(edges: DataFrame, deg: DataFrame) -> DataFrame:

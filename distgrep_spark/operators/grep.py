@@ -128,12 +128,18 @@ def highlight(
     *,
     column: str = "line",
     style: str = "asterisks",
+    case_sensitive: bool = True,
 ) -> DataFrame:
     """Presentation-layer highlight (reference client.go:17-21, 69-79).
 
     ``classic`` wraps matches in ANSI bold-red, ``asterisks`` in ``*..*``,
     ``none`` is identity — same three modes as the reference client. Kept
     engine-side as a cheap ``replace`` projection (no UDF, no shuffle).
+
+    ``case_sensitive=False`` highlights what ``distgrep(...,
+    case_sensitive=False)`` found: a ``(?iu)`` regex over the quoted
+    literal pattern, wrapping each match as ``pre$0post`` so the line
+    keeps its own casing.
     """
     styles = {
         "classic": ("\x1b[1;31m", "\x1b[0m"),
@@ -145,6 +151,12 @@ def highlight(
     pre, post = styles[style]
     if style == "none" or pattern == "":
         return df
+    if not case_sensitive:
+        # Java's Pattern.quote: the pattern matches as a literal.
+        quoted = "\\Q" + pattern.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+        return df.withColumn(
+            column, F.regexp_replace(F.col(column), f"(?iu){quoted}", f"{pre}$0{post}")
+        )
     return df.withColumn(
         column, F.replace(F.col(column), F.lit(pattern), F.lit(f"{pre}{pattern}{post}"))
     )

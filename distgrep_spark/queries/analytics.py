@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from distgrep_spark.functions.numeric import dsum
 from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.operators.dedup import shingle_profiles
+from distgrep_spark.operators.graph import copurchase_edges
 from distgrep_spark.operators.sketches import bitmap_build, bitmap_count
 from distgrep_spark.operators.spatial import grid_neighbor_pairs
 from distgrep_spark.queries.registry import query
@@ -1064,28 +1065,7 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel, and the anti-join of candidates against existing edges is a
     shuffle on the canonical pair key."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x ->"
-                    " transform(filter(ps, y -> y > x),"
-                    "           y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    edges = copurchase_edges(li).select("u", "v").localCheckpoint(eager=False)
     adj = edges.select(F.col("u").alias("s"), F.col("v").alias("d")).unionAll(
         edges.select(F.col("v").alias("s"), F.col("u").alias("d"))
     )
@@ -2657,28 +2637,7 @@ def q_graph_modularity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     step, which is why you audit before you iterate."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x ->"
-                    " transform(filter(ps, y -> y > x),"
-                    "           y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    edges = copurchase_edges(li).select("u", "v").localCheckpoint(eager=False)
     pu = part.selectExpr("p_partkey AS u", "p_brand AS bu")
     pv = part.selectExpr("p_partkey AS v", "p_brand AS bv")
     labeled = edges.join(F.broadcast(pu), "u").join(F.broadcast(pv), "v")
@@ -2782,28 +2741,7 @@ def q_graph_assortativity_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     this whole graph-audit family shares one materialized edge
     artifact."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x ->"
-                    " transform(filter(ps, y -> y > x),"
-                    "           y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    edges = copurchase_edges(li).select("u", "v").localCheckpoint(eager=False)
     deg = (
         edges.selectExpr("u AS node")
         .unionAll(edges.selectExpr("v AS node"))

@@ -51,7 +51,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
-from distgrep_spark.operators.graph import degree_orient
+from distgrep_spark.operators.graph import (
+    copurchase_edges,
+    degree_orient,
+    part_baskets,
+)
 from distgrep_spark.operators.text import dup_span_fraction
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
@@ -541,12 +545,7 @@ def q_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lift is an exact integer ratio times 1.0 — bit-identical across
     engines."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    rows = baskets.select(
+    rows = part_baskets(li).select(
         F.explode(
             F.expr(
                 "concat("
@@ -695,10 +694,10 @@ def q_graph_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     just repeats this step; operators/graph.py's checkpoint discipline
     applies unchanged).
 
-    Plan: the edge list reuses market_basket_lift's basket pattern —
-    ONE lineitem shuffle builds per-order part sets, all ordered pairs
-    explode in-set (bounded k(k-1) per order), a support-2 floor prunes
-    noise edges. Out-degrees ride a window over the edge list keyed by
+    Plan: the edge list is ``operators/graph.copurchase_edges`` —
+    ONE lineitem shuffle builds per-order part sets, u < v pairs
+    explode in-set (bounded k(k-1)/2 per order), a support-2 floor
+    prunes noise edges and the survivors are mirrored to src -> dst. Out-degrees ride a window over the edge list keyed by
     src (the same exchange the dst rollup needs anyway repartitions
     it), so the whole query is a single lineage with one fact scan.
     Round 5: the node count is a bounded 1-scalar pull over the
@@ -713,26 +712,7 @@ def q_graph_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     last ulp and contrib rounds at 4 dp; pagerank then derives from
     identical doubles on both engines."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x ->"
-                    " transform(filter(ps, y -> y != x),"
-                    "           y -> struct(x AS src, y AS dst))))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-    )
+    edges = copurchase_edges(li, directed=True)
     wd = edges.withColumn(
         "deg_src", F.count(F.lit(1)).over(Window.partitionBy("src")).cast("bigint")
     )
@@ -820,26 +800,7 @@ def _pagerank_iters(spark: SparkSession, sf_dir: str, k: int):
     per-iteration join co-locates; here the checkpoint pins the same
     property at local[] scale."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x ->"
-                    " transform(filter(ps, y -> y != x),"
-                    "           y -> struct(x AS src, y AS dst))))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-    )
+    edges = copurchase_edges(li, directed=True)
     ew = (
         edges.withColumn(
             "deg_src",
@@ -894,7 +855,7 @@ def q_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-step: last-ulp fold error compounds per iteration. The
     truncation IS the algorithm on both engines, so the twin matches
     bit-for-bit at any k. The co-purchase graph is symmetric by
-    construction (ordered pairs both ways, symmetric support floor),
+    construction (every surviving edge is mirrored with its weight),
     so every node has both in- and out-edges — no dangling-mass term.
 
     Output: per-node pr at k-1 and k plus the signed per-node delta —
@@ -987,28 +948,7 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient is one BIGINT-ratio IEEE division, identical on both
     engines."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x ->"
-                    " transform(filter(ps, y -> y > x),"
-                    "           y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    edges = copurchase_edges(li).select("u", "v").localCheckpoint(eager=False)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -1327,26 +1267,7 @@ def q_graph_label_prop_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     own exchange rebalances, same as the checkpointed graph siblings."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x ->"
-                    " transform(filter(ps, y -> y != x),"
-                    "           y -> struct(x AS src, y AS dst))))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .groupBy("src", "dst")
-        .agg(F.expr("CAST(count(*) AS BIGINT) AS w"))
-        .where("w >= 2")
-    )
+    edges = copurchase_edges(li, directed=True)
     seeds = part.selectExpr("p_partkey AS sk", "p_brand AS cand")
     votes = (
         edges.join(F.broadcast(seeds), F.col("src") == F.col("sk"))
@@ -1526,11 +1447,11 @@ def q_graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINTs. No floats anywhere.
 
     The 100-TB shape: the edge list builds by basket explode — ONE
-    order-keyed shuffle to collect each basket, pairs emitted map-side
-    from the sorted set (both orientations), then the (src, dst)
-    rollup — not by the items-table self-join, which re-executed the
-    distinct projection on both branches and paid a join shuffle on
-    top (the graph_label_prop_step round-5 finding; measured here
+    order-keyed shuffle to collect each basket, u < v pairs emitted
+    map-side from the sorted set, the (u, v) rollup, then both
+    orientations mirrored on the survivors (``copurchase_edges``) —
+    not by the items-table self-join, which re-executed the distinct
+    projection on both branches and paid a join shuffle on top (the graph_label_prop_step round-5 finding; measured here
     ~3.4 s → ~2.1 s at sf0.1). Each hop then pre-aggregates the
     (seed, node) frontier to DISTINCT nodes carrying their seed set
     (collect_set), joins that compacted table against the edge list,
@@ -1542,31 +1463,9 @@ def q_graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hub-degree capping (degree_orient / max_df) is the production
     hardening for power-law graphs."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    # Roll up the a<b orientation only (halves the shuffle rows and the
-    # rollup key space), then mirror both directed orientations on the
-    # w>=2 SURVIVORS — the filtered edge list is graph-sized, not
-    # explode-sized, so the mirror is free.
-    pair_rows = baskets.select(
-        F.explode(F.expr(list_pairs("ps", "x AS a, y AS b"))).alias("e")
-    ).select("e.a", "e.b")
     edges = (
-        pair_rows.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where("w >= 2")
-        .select(
-            F.explode(
-                F.expr(
-                    "array(struct(a AS src, b AS dst),"
-                    "      struct(b AS src, a AS dst))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
+        copurchase_edges(li, directed=True)
+        .select("src", "dst")
         .localCheckpoint(eager=False)
     )
     seeds = edges.where("src % 97 = 0").selectExpr("src AS seed").distinct()
@@ -1682,30 +1581,16 @@ def q_graph_local_clustering_hubs(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregate; the graph family's fourth kernel (CC, PageRank,
     global triangles, local clustering)."""
     li = load_table(spark, sf_dir, "lineitem")
-    # Edge build by basket explode (r11): ONE order-keyed shuffle to
-    # collect each basket, u<v pairs emitted map-side from the sorted
-    # set, then the (u, v) rollup — not the items-table self-join,
-    # which re-executes the distinct projection on both branches and
-    # pays a join shuffle on top (the graph_label_prop_step round-5
-    # finding, applied here same as graph_khop_reach/assortativity).
+    # Edge build by basket explode (r11, ``copurchase_edges``): ONE
+    # order-keyed shuffle to collect each basket, u<v pairs emitted
+    # map-side from the sorted set, then the (u, v) rollup — not the
+    # items-table self-join, which re-executes the distinct projection
+    # on both branches and pays a join shuffle on top (the
+    # graph_label_prop_step round-5 finding, applied here same as
+    # graph_khop_reach/assortativity).
     # collect_set == DISTINCT per order, so the edge multiset is
     # identical to the old self-join's.
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(F.expr(list_pairs("ps", "x AS u, y AS v"))).alias("e")
-        )
-        .select("e.u", "e.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where("w >= 2")
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    edges = copurchase_edges(li).select("u", "v").localCheckpoint(eager=False)
     deg = (
         edges.selectExpr("u AS node")
         .unionByName(edges.selectExpr("v AS node"))

@@ -80,6 +80,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distgrep_spark.operators.graph import copurchase_edges
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
 
@@ -406,28 +407,7 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_triangle_count (ref has no graph ops; worker.go:24-43 is
     grep-only)."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x ->"
-                    " transform(filter(ps, y -> y > x),"
-                    "           y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    edges = copurchase_edges(li).select("u", "v").localCheckpoint(eager=False)
     und = edges.selectExpr("u AS a", "v AS b").unionAll(
         edges.selectExpr("v AS a", "u AS b")
     )

@@ -119,6 +119,77 @@ def test_degree_orient_random_graph_exact(spark):
 
 
 # ---------------------------------------------------------------------------
+# Part co-purchase graph (part_baskets / copurchase_edges), the edge list
+# of the graph_* queries, against a brute-force pair count.
+# ---------------------------------------------------------------------------
+
+_LINEITEM_SCHEMA = "l_orderkey long, l_partkey long, l_linenumber int"
+# order -> its lines' part keys
+_ORDERS = {
+    1: [10, 10, 20],  # part 10 on two lines: must count once
+    2: [30, 20, 10],
+    3: [20, 10],
+    4: [30, 40],  # (30, 40) co-bought once: dropped
+    5: [30, 10],
+    6: [50],  # single-part orders give no pairs
+    7: [50],
+}
+
+
+def _lineitem(spark, orders):
+    rows = [(o, p, i) for o, ps in orders.items() for i, p in enumerate(ps, 1)]
+    return spark.createDataFrame(rows, _LINEITEM_SCHEMA)
+
+
+def _brute_copurchase(orders):
+    import itertools
+    from collections import Counter
+
+    c = Counter(
+        pair
+        for ps in orders.values()
+        for pair in itertools.combinations(sorted(set(ps)), 2)
+    )
+    return {pair: w for pair, w in c.items() if w >= 2}
+
+
+def test_part_baskets_are_sorted_and_distinct(spark):
+    from distgrep_spark.operators.graph import part_baskets
+
+    got = {r["l_orderkey"]: r["ps"] for r in part_baskets(_lineitem(spark, _ORDERS)).collect()}
+    assert got == {o: sorted(set(ps)) for o, ps in _ORDERS.items()}
+
+
+def test_copurchase_edges_match_brute_force(spark):
+    from distgrep_spark.operators.graph import copurchase_edges
+
+    want = _brute_copurchase(_ORDERS)
+    # the fixture exercises both floors: w = 3 and w = 2 kept, w = 1 dropped
+    assert want == {(10, 20): 3, (10, 30): 2}
+    li = _lineitem(spark, _ORDERS)
+    und = copurchase_edges(li)
+    assert und.columns == ["u", "v", "w"]
+    got = [(r["u"], r["v"], r["w"]) for r in und.collect()]
+    assert sorted(got) == sorted((u, v, w) for (u, v), w in want.items())
+
+    directed = copurchase_edges(li, directed=True)
+    assert directed.columns == ["src", "dst", "w"]
+    got = [(r["src"], r["dst"], r["w"]) for r in directed.collect()]
+    mirrored = [(a, b, w) for (u, v), w in want.items() for a, b in ((u, v), (v, u))]
+    assert sorted(got) == sorted(mirrored)
+
+
+def test_copurchase_edges_empty_lineitem(spark):
+    from distgrep_spark.operators.graph import copurchase_edges
+
+    li = spark.createDataFrame([], _LINEITEM_SCHEMA)
+    for directed, cols in ((False, ["u", "v", "w"]), (True, ["src", "dst", "w"])):
+        out = copurchase_edges(li, directed=directed)
+        assert out.columns == cols
+        assert out.count() == 0
+
+
+# ---------------------------------------------------------------------------
 # Alternating large-star/small-star CC (round 9): the O(log n)-round
 # kernel for chain-shaped graphs, validated against a union-find oracle.
 

@@ -124,6 +124,26 @@ def test_highlight_styles(lines_df):
     assert "Achille" in plain
 
 
+def test_highlight_ignore_case_keeps_line_casing(spark):
+    # -i finds lines in any casing; the highlight must wrap those same
+    # matches in place, not only the literal pattern's casing.
+    def starred(lines, pattern):
+        df = spark.createDataFrame([(s,) for s in lines], "line string")
+        out = highlight(df, pattern, style="asterisks", case_sensitive=False)
+        return sorted(r["line"] for r in out.collect())
+
+    found = distgrep(
+        spark.createDataFrame([("Achille piè veloce",), ("ACHILLE",), ("Ettore",)], "value string"),
+        "achille",
+        case_sensitive=False,
+    )
+    got = highlight(found, "achille", style="asterisks", case_sensitive=False)
+    assert sorted(r["line"] for r in got.collect()) == ["*ACHILLE*", "*Achille* piè veloce"]
+    assert starred(["École normale"], "ÉCOLE") == ["*École* normale"]
+    # the pattern is a literal, not a regex
+    assert starred(["axb", "A.B"], "a.b") == ["*A.B*", "axb"]
+
+
 # ---------------------------------------------------------------------------
 # Property-based parity (hypothesis): arbitrary line multisets + patterns
 # ---------------------------------------------------------------------------

@@ -649,6 +649,30 @@ def test_pair_fragment_lives_only_in_pairs():
     assert copies == [], f"pair fragment copied outside functions/pairs.py: {copies}"
 
 
+def test_copurchase_graph_lives_only_in_graph():
+    """The part co-purchase graph is built once, by
+    operators/graph.part_baskets / copurchase_edges (it had been pasted
+    into 10 queries), and pairs only through list_pairs: no
+    hand-written filter(ps, y -> y ...) pairing anywhere."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    sources = {
+        os.path.relpath(p, pkg): open(p).read()
+        for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    }
+    baskets = sorted(
+        rel
+        for rel, src in sources.items()
+        if rel != os.path.join("operators", "graph.py")
+        and 'collect_set("l_partkey")' in src
+    )
+    assert baskets == [], f"part baskets built outside operators/graph.py: {baskets}"
+    pairings = sorted(rel for rel, src in sources.items() if "filter(ps, y -> y" in src)
+    assert pairings == [], f"hand-written basket pairing: {pairings}"
+
+
 def test_bench_normalized_baseline_is_committed_and_covers_registry():
     """The committed baseline must exist and cover the registry (minus
     queries newer than the last rebase - tracked by the note field);
