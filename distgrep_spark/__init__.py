@@ -9,8 +9,9 @@ text/LLM-pipeline surface:
   groupBy(line).count()), plus the regex superset.
 - ``operators.dedup``    — exact / hash / MinHash-LSH / SimHash / n-gram
   Jaccard deduplication.
-- ``operators.similarity`` — brute-force cosine top-k and LSH-bucketed ANN
-  over embedding columns.
+- ``operators.similarity`` — brute-force cosine top-k, IVF and LSH ANN
+  over embedding columns, and the shared vector kernels (int8 grid,
+  integer L2, PQ scoring, norm-cosine, top-k tail).
 - ``operators.text``     — language ID, quality scoring, token counting,
   fingerprinting.
 - ``operators.multimodal`` — binary-column plumbing (decode stubbed).

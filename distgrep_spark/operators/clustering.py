@@ -59,6 +59,25 @@ def centroids_by(
     )
 
 
+def codebook(emb: DataFrame, n: int) -> tuple[list[int], list[list[float]]]:
+    """The centroid list of the rows ``vec_id < n`` (the oracles' own
+    predicate; ``orderBy().limit(n)`` agrees only while ids start at 0
+    and are contiguous), ascending by id: ``(ids, cents)``. At most n
+    rows reach the driver. ``assign_to_centroids`` returns a list index,
+    so ``ids[cluster]`` maps it back to the centroid's vec_id, and the
+    ascending order makes index ties lowest-id ties."""
+    rows = (
+        emb.select("vec_id", "embedding")
+        .where(F.col("vec_id") < n)
+        .orderBy("vec_id")
+        .collect()
+    )
+    return (
+        [int(r["vec_id"]) for r in rows],
+        [[float(x) for x in r["embedding"]] for r in rows],
+    )
+
+
 def _assign(
     df: DataFrame,
     cents: list[list[float]],

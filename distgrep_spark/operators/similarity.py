@@ -19,6 +19,13 @@ Two paths:
 All arithmetic is promoted to double BEFORE multiplication (float32
 products lose bits and DuckDB's DOUBLE[] oracle computes in double;
 double-first makes Spark and DuckDB bit-identical — verified).
+
+The vector kernels the registry's search queries share live here once:
+the global int8 grid (``INT8_GRID``), the exact-BIGINT squared L2
+(``int_l2sq``), product-quantization subspace scoring (``pq_scored``),
+cosine over materialized norms (``cos_normed``, NULL on a zero norm)
+and the per-query top-k tail (``_topk``). The codebook pull is
+``operators/clustering.codebook``.
 """
 
 from __future__ import annotations
@@ -29,6 +36,54 @@ import pandas as pd  # module-level: pandas_udf type hints resolve in module glo
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+
+# The global int8 grid (fixed scale 1/200, clamped to ±127, rounded
+# half-up) as a SQL fragment over the ``embedding`` column. One scale for
+# every vector keeps subvectors of different vectors comparable, and
+# every distance on the grid is an exact BIGINT.
+INT8_GRID = (
+    "transform(embedding, v -> CAST(greatest(-127.0D, least(127.0D,"
+    " floor(CAST(v AS DOUBLE) * 200 + 0.5))) AS BIGINT))"
+)
+
+# Product quantization: PQ_M subspaces of PQ_D dims, PQ_K codebook
+# entries per subspace (the subvectors of ``vec_id < PQ_K``, the same
+# predicate on both engines).
+PQ_M = 4
+PQ_D = 16
+PQ_K = 8
+
+
+def int_l2sq(a: str, b: str) -> str:
+    """Exact squared L2 between two BIGINT array columns, as a SQL
+    fragment (pass column names). Max 64 * 254^2 on the int8 grid, so
+    no ANSI overflow."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (a, b) -> (a - b) * (a - b)),"
+        " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    )
+
+
+def pq_scored(q8: DataFrame) -> DataFrame:
+    """(vec_id, m, cid, dist) for every vector's subvector m against
+    every codebook entry cid of subspace m, from ``q8`` = (vec_id, qv)
+    on the int8 grid. The PQ_M-way subvector explode is narrow and the
+    PQ_M * PQ_K-row codebook broadcasts; callers take the integer argmin
+    ``min(dist * PQ_K + cid)`` (lowest cid on a tie) for codes, and
+    query rows as an asymmetric-distance lookup table."""
+    struct_items = ", ".join(
+        f"struct({m} AS m, slice(qv, {PQ_D * m + 1}, {PQ_D}) AS sub)"
+        for m in range(PQ_M)
+    )
+    subs = q8.selectExpr(
+        "vec_id", f"explode(array({struct_items})) AS s"
+    ).selectExpr("vec_id", "s.m AS m", "s.sub AS sub")
+    cents = subs.where(F.col("vec_id") < PQ_K).selectExpr(
+        "vec_id AS cid", "m", "sub AS cvec"
+    )
+    return subs.join(broadcast(cents), "m").selectExpr(
+        "vec_id", "m", "cid", f"{int_l2sq('sub', 'cvec')} AS dist"
+    )
 
 
 def as_double(col: Column) -> Column:
@@ -43,8 +98,30 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
+def cos_normed(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` over their materialized norms. A zero
+    norm on either side scores NULL (``try_divide``; ANSI ``/`` raises
+    DIVIDE_BY_ZERO), which ranks last under ``DESC`` and fails any
+    threshold filter."""
+    return F.try_divide(dot(a, b), na * nb)
+
+
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    return cos_normed(a, b, norm(a), norm(b))
+
+
+def _topk(
+    scored: DataFrame, k: int, query_id_col: str, id_col: str, exclude_self: bool
+) -> DataFrame:
+    """Per-query top-k of (query_id_col, id_col, cos_sim) rows: rank
+    1..k by (cos_sim DESC, id), after dropping the query's own row when
+    ``exclude_self``."""
+    if exclude_self:
+        scored = scored.where(F.col(query_id_col) != F.col(id_col))
+    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
+    return scored.select(
+        query_id_col, id_col, "cos_sim", F.row_number().over(w).alias("rank")
+    ).where(F.col("rank") <= k)
 
 
 def cosine_topk(
@@ -75,12 +152,7 @@ def cosine_topk(
         id_col,
         cosine(F.col("_cv"), F.col("_qv")).alias("cos_sim"),
     )
-    if exclude_self:
-        scored = scored.where(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return scored.select(
-        query_id_col, id_col, "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return _topk(scored, k, query_id_col, id_col, exclude_self)
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -155,12 +227,7 @@ def ann_ivf_topk(
         id_col,
         cosine(F.col("_cv"), F.col("_qv")).alias("cos_sim"),
     )
-    if exclude_self:
-        scored = scored.where(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return scored.select(
-        query_id_col, id_col, "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return _topk(scored, k, query_id_col, id_col, exclude_self)
 
 
 def _hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
@@ -290,18 +357,13 @@ def ann_lsh_topk(
         .select(
             query_id_col,
             id_col,
-            (dot(F.col("_cv"), F.col("_qv")) / (F.col("_ncv") * F.col("_nqv"))).alias(
+            cos_normed(F.col("_cv"), F.col("_qv"), F.col("_ncv"), F.col("_nqv")).alias(
                 "cos_sim"
             ),
         )
         .dropDuplicates([query_id_col, id_col])
     )
-    if exclude_self:
-        scored = scored.where(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return scored.select(
-        query_id_col, id_col, "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return _topk(scored, k, query_id_col, id_col, exclude_self)
 
 
 def cosine_pandas_udf():
@@ -346,9 +408,4 @@ def cosine_topk_pandas(
     scored = c.crossJoin(broadcast(q)).select(
         query_id_col, id_col, cos(F.col("_cv"), F.col("_qv")).alias("cos_sim")
     )
-    if exclude_self:
-        scored = scored.where(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return scored.select(
-        query_id_col, id_col, "cos_sim", F.row_number().over(w).alias("rank")
-    ).where(F.col("rank") <= k)
+    return _topk(scored, k, query_id_col, id_col, exclude_self)

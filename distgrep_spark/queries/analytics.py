@@ -55,6 +55,14 @@ from distgrep_spark.functions.numeric import dsum
 from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.operators.dedup import shingle_profiles
 from distgrep_spark.operators.graph import copurchase_edges
+from distgrep_spark.operators.similarity import (
+    INT8_GRID,
+    PQ_D,
+    PQ_K,
+    PQ_M,
+    int_l2sq,
+    pq_scored,
+)
 from distgrep_spark.operators.sketches import bitmap_build, bitmap_count
 from distgrep_spark.operators.spatial import grid_neighbor_pairs
 from distgrep_spark.queries.registry import query
@@ -331,11 +339,6 @@ def q_er_resolve_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Product quantization: integer codebook assignment
 # ---------------------------------------------------------------------------
 
-_PQ_M = 4  # subspaces
-_PQ_D = 16  # dims per subspace
-_PQ_K = 8  # centroids per subspace (vec_id < 8, same predicate both engines)
-
-
 @query(
     "embed_pq_assign",
     oracle=f"""
@@ -348,11 +351,11 @@ _PQ_K = 8  # centroids per subspace (vec_id < 8, same predicate both engines)
       FROM embeddings
     ),
     subs AS (
-      SELECT vec_id, m, qv[{_PQ_D}*m+1 : {_PQ_D}*m+{_PQ_D}] AS sub
-      FROM q, (SELECT unnest(range({_PQ_M})) AS m)
+      SELECT vec_id, m, qv[{PQ_D}*m+1 : {PQ_D}*m+{PQ_D}] AS sub
+      FROM q, (SELECT unnest(range({PQ_M})) AS m)
     ),
     cents AS (
-      SELECT vec_id AS cid, m, sub AS cvec FROM subs WHERE vec_id < {_PQ_K}
+      SELECT vec_id AS cid, m, sub AS cvec FROM subs WHERE vec_id < {PQ_K}
     ),
     scored AS (
       SELECT s.vec_id, s.m, c.cid,
@@ -361,15 +364,15 @@ _PQ_K = 8  # centroids per subspace (vec_id < 8, same predicate both engines)
       FROM subs s JOIN cents c ON s.m = c.m
     ),
     best AS (
-      SELECT vec_id, m, min(dist * {_PQ_K} + cid) AS enc
+      SELECT vec_id, m, min(dist * {PQ_K} + cid) AS enc
       FROM scored GROUP BY vec_id, m
     )
     SELECT vec_id,
-           CAST(max(CASE WHEN m = 0 THEN enc % {_PQ_K} END) AS BIGINT) AS code_0,
-           CAST(max(CASE WHEN m = 1 THEN enc % {_PQ_K} END) AS BIGINT) AS code_1,
-           CAST(max(CASE WHEN m = 2 THEN enc % {_PQ_K} END) AS BIGINT) AS code_2,
-           CAST(max(CASE WHEN m = 3 THEN enc % {_PQ_K} END) AS BIGINT) AS code_3,
-           CAST(sum(enc // {_PQ_K}) AS BIGINT) AS total_dist
+           CAST(max(CASE WHEN m = 0 THEN enc % {PQ_K} END) AS BIGINT) AS code_0,
+           CAST(max(CASE WHEN m = 1 THEN enc % {PQ_K} END) AS BIGINT) AS code_1,
+           CAST(max(CASE WHEN m = 2 THEN enc % {PQ_K} END) AS BIGINT) AS code_2,
+           CAST(max(CASE WHEN m = 3 THEN enc % {PQ_K} END) AS BIGINT) AS code_3,
+           CAST(sum(enc // {PQ_K}) AS BIGINT) AS total_dist
     FROM best GROUP BY vec_id
     """,
 )
@@ -392,39 +395,18 @@ def q_embed_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN scans precompute a (M x k) query-to-centroid table then score
     candidates by 4 table lookups, never touching raw floats."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.selectExpr(
-        "vec_id",
-        "transform(embedding, v -> CAST(greatest(-127.0D, least(127.0D, "
-        "floor(CAST(v AS DOUBLE) * 200 + 0.5))) AS BIGINT)) AS qv",
-    )
-    struct_items = ", ".join(
-        f"struct({m} AS m, slice(qv, {_PQ_D * m + 1}, {_PQ_D}) AS sub)"
-        for m in range(_PQ_M)
-    )
-    subs = q.selectExpr(
-        "vec_id", f"explode(array({struct_items})) AS s"
-    ).selectExpr("vec_id", "s.m AS m", "s.sub AS sub")
-    cents = subs.where(F.col("vec_id") < _PQ_K).selectExpr(
-        "vec_id AS cid", "m", "sub AS cvec"
-    )
-    scored = subs.join(F.broadcast(cents), "m").selectExpr(
-        "vec_id",
-        "m",
-        "cid",
-        "aggregate(zip_with(sub, cvec, (a, b) -> (a - b) * (a - b)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x) AS dist",
-    )
+    scored = pq_scored(emb.selectExpr("vec_id", f"{INT8_GRID} AS qv"))
     best = scored.groupBy("vec_id", "m").agg(
-        F.expr(f"min(dist * {_PQ_K} + cid)").alias("enc")
+        F.expr(f"min(dist * {PQ_K} + cid)").alias("enc")
     )
     return best.groupBy("vec_id").agg(
         *[
             F.expr(
-                f"CAST(max(CASE WHEN m = {m} THEN enc % {_PQ_K} END) AS BIGINT)"
+                f"CAST(max(CASE WHEN m = {m} THEN enc % {PQ_K} END) AS BIGINT)"
             ).alias(f"code_{m}")
-            for m in range(_PQ_M)
+            for m in range(PQ_M)
         ],
-        F.expr(f"CAST(sum(enc DIV {_PQ_K}) AS BIGINT)").alias("total_dist"),
+        F.expr(f"CAST(sum(enc DIV {PQ_K}) AS BIGINT)").alias("total_dist"),
     )
 
 
@@ -440,11 +422,11 @@ def q_embed_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings
     ),
     subs AS (
-      SELECT vec_id, m, qv[{_PQ_D}*m+1 : {_PQ_D}*m+{_PQ_D}] AS sub
-      FROM q8, (SELECT unnest(range({_PQ_M})) AS m)
+      SELECT vec_id, m, qv[{PQ_D}*m+1 : {PQ_D}*m+{PQ_D}] AS sub
+      FROM q8, (SELECT unnest(range({PQ_M})) AS m)
     ),
     cents AS (
-      SELECT vec_id AS cid, m, sub AS cvec FROM subs WHERE vec_id < {_PQ_K}
+      SELECT vec_id AS cid, m, sub AS cvec FROM subs WHERE vec_id < {PQ_K}
     ),
     scored AS (
       SELECT s.vec_id, s.m, c.cid,
@@ -453,7 +435,7 @@ def q_embed_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM subs s JOIN cents c ON s.m = c.m
     ),
     codes AS (
-      SELECT vec_id, m, min(dist * {_PQ_K} + cid) % {_PQ_K} AS code
+      SELECT vec_id, m, min(dist * {PQ_K} + cid) % {PQ_K} AS code
       FROM scored GROUP BY vec_id, m
     ),
     lut AS (
@@ -497,33 +479,12 @@ def q_sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject shape) and IVF probe lists (sim_ann_ivf)
     bound the candidate set per query before ADC scoring."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q8 = emb.selectExpr(
-        "vec_id",
-        "transform(embedding, v -> CAST(greatest(-127.0D, least(127.0D, "
-        "floor(CAST(v AS DOUBLE) * 200 + 0.5))) AS BIGINT)) AS qv",
-    )
-    struct_items = ", ".join(
-        f"struct({m} AS m, slice(qv, {_PQ_D * m + 1}, {_PQ_D}) AS sub)"
-        for m in range(_PQ_M)
-    )
-    subs = q8.selectExpr(
-        "vec_id", f"explode(array({struct_items})) AS s"
-    ).selectExpr("vec_id", "s.m AS m", "s.sub AS sub")
-    cents = subs.where(F.col("vec_id") < _PQ_K).selectExpr(
-        "vec_id AS cid", "m", "sub AS cvec"
-    )
-    scored = subs.join(F.broadcast(cents), "m").selectExpr(
-        "vec_id",
-        "m",
-        "cid",
-        "aggregate(zip_with(sub, cvec, (a, b) -> (a - b) * (a - b)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x) AS dist",
-    )
+    scored = pq_scored(emb.selectExpr("vec_id", f"{INT8_GRID} AS qv"))
     # codes and lut both descend from `scored`: rename the join keys on
     # each side so the equi-join binds across branches, not to itself
     codes = (
         scored.groupBy("vec_id", "m")
-        .agg(F.expr(f"min(dist * {_PQ_K} + cid) % {_PQ_K}").alias("code"))
+        .agg(F.expr(f"min(dist * {PQ_K} + cid) % {PQ_K}").alias("code"))
         .selectExpr("vec_id", "m AS cm", "code")
     )
     lut = scored.where(F.col("vec_id") < 5).selectExpr(
@@ -3373,10 +3334,6 @@ def q_embed_mahalanobis_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-3 batch 23: k-means++ seeding step (exact integer argmax)
 # ---------------------------------------------------------------------------
 
-_QUANT = (
-    "transform(embedding, v -> CAST(greatest(-127.0D, least(127.0D,"
-    " floor(CAST(v AS DOUBLE) * 200 + 0.5))) AS BIGINT))"
-)
 _QUANT_DUCK = (
     "list_transform(embedding, v -> CAST(greatest(-127.0, least(127.0,"
     " floor(v::DOUBLE * 200 + 0.5))) AS BIGINT))"
@@ -3423,7 +3380,7 @@ def q_kmeans_pp_seed_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     global row_number() form, whose unpartitioned WindowExec would
     sort the full per-vector table on one task at scale."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q_df = emb.selectExpr("vec_id", f"{_QUANT} AS qv")
+    q_df = emb.selectExpr("vec_id", f"{INT8_GRID} AS qv")
     seeds = q_df.where("vec_id < 2").selectExpr("vec_id AS sid", "qv AS sv")
     dmin = (
         q_df.where("vec_id >= 2")
@@ -3820,11 +3777,11 @@ _IVFPQ_NPROBE = 4
       ) WHERE pr <= {_IVFPQ_NPROBE}
     ),
     subs AS (
-      SELECT vec_id, m, qv[{_PQ_D}*m+1 : {_PQ_D}*m+{_PQ_D}] AS sub
-      FROM q8, (SELECT unnest(range({_PQ_M})) AS m)
+      SELECT vec_id, m, qv[{PQ_D}*m+1 : {PQ_D}*m+{PQ_D}] AS sub
+      FROM q8, (SELECT unnest(range({PQ_M})) AS m)
     ),
     cents AS (
-      SELECT vec_id AS cid, m, sub AS cvec FROM subs WHERE vec_id < {_PQ_K}
+      SELECT vec_id AS cid, m, sub AS cvec FROM subs WHERE vec_id < {PQ_K}
     ),
     scored AS (
       SELECT s.vec_id, s.m, c.cid,
@@ -3833,7 +3790,7 @@ _IVFPQ_NPROBE = 4
       FROM subs s JOIN cents c ON s.m = c.m
     ),
     codes AS (
-      SELECT vec_id, m, min(dist * {_PQ_K} + cid) % {_PQ_K} AS code
+      SELECT vec_id, m, min(dist * {PQ_K} + cid) % {PQ_K} AS code
       FROM scored GROUP BY vec_id, m
     ),
     lut AS (
@@ -3891,19 +3848,14 @@ def q_sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers — coarse, cents, probes, lut — were already cheap).
     # Lazy checkpoint: quantize once, scans 8 -> 0, walls flat at
     # sf0.1 (A/B x6 interleaved, results identical).
-    q8 = emb.selectExpr(
-        "vec_id",
-        "transform(embedding, v -> CAST(greatest(-127.0D, least(127.0D, "
-        "floor(CAST(v AS DOUBLE) * 200 + 0.5))) AS BIGINT)) AS qv",
-    ).localCheckpoint(eager=False)
+    q8 = emb.selectExpr("vec_id", f"{INT8_GRID} AS qv").localCheckpoint(eager=False)
     coarse = q8.where(F.col("vec_id") < _IVFPQ_COARSE_K).selectExpr(
         "vec_id AS ccid", "qv AS cvec"
     )
     cscored = q8.crossJoin(F.broadcast(coarse)).selectExpr(
         "vec_id",
         "ccid",
-        "aggregate(zip_with(qv, cvec, (a, b) -> (a - b) * (a - b)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x) AS cdist",
+        f"{int_l2sq('qv', 'cvec')} AS cdist",
     )
     assign = cscored.groupBy("vec_id").agg(
         F.expr(
@@ -3917,28 +3869,12 @@ def q_sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("pr") <= _IVFPQ_NPROBE)
         .selectExpr("vec_id AS query_id", "ccid AS list_id")
     )
-    struct_items = ", ".join(
-        f"struct({m} AS m, slice(qv, {_PQ_D * m + 1}, {_PQ_D}) AS sub)"
-        for m in range(_PQ_M)
-    )
-    subs = q8.selectExpr(
-        "vec_id", f"explode(array({struct_items})) AS s"
-    ).selectExpr("vec_id", "s.m AS m", "s.sub AS sub")
-    cents = subs.where(F.col("vec_id") < _PQ_K).selectExpr(
-        "vec_id AS cid", "m", "sub AS cvec"
-    )
-    scored = subs.join(F.broadcast(cents), "m").selectExpr(
-        "vec_id",
-        "m",
-        "cid",
-        "aggregate(zip_with(sub, cvec, (a, b) -> (a - b) * (a - b)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x) AS dist",
-    )
+    scored = pq_scored(q8)
     # every frame below descends from q8: rename join keys per side so
     # equi-joins bind across branches (the sim_ann_pq_adc convention)
     codes = (
         scored.groupBy("vec_id", "m")
-        .agg(F.expr(f"min(dist * {_PQ_K} + cid) % {_PQ_K}").alias("code"))
+        .agg(F.expr(f"min(dist * {PQ_K} + cid) % {PQ_K}").alias("code"))
         .selectExpr("vec_id AS code_vec", "m AS cm", "code")
     )
     lut = scored.where(F.col("vec_id") < 5).selectExpr(
@@ -4051,11 +3987,7 @@ def q_embed_rvq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained RVQ swaps the codebook selection predicates for k-means
     iterates (kmeans_assign_step) — the assignment plan is unchanged."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q8 = emb.selectExpr(
-        "vec_id",
-        "transform(embedding, v -> CAST(greatest(-127.0D, least(127.0D,"
-        " floor(CAST(v AS DOUBLE) * 200 + 0.5))) AS BIGINT)) AS qv",
-    )
+    q8 = emb.selectExpr("vec_id", f"{INT8_GRID} AS qv")
     cb1 = q8.where(F.col("vec_id") < 8).selectExpr(
         "vec_id AS cid1", "qv AS cvec1"
     )
@@ -4064,8 +3996,7 @@ def q_embed_rvq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid1",
         "qv",
         "cvec1",
-        "aggregate(zip_with(qv, cvec1, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d1",
+        f"{int_l2sq('qv', 'cvec1')} AS d1",
     )
     win1 = (
         s1.selectExpr(
@@ -4093,8 +4024,7 @@ def q_embed_rvq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c1",
         "e1",
         "cid2",
-        "aggregate(zip_with(r, cvec2, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d2",
+        f"{int_l2sq('r', 'cvec2')} AS d2",
     )
     enc = s2.groupBy("vec_id", "c1", "e1").agg(
         F.expr("min(d2 * 8 + cid2) AS enc2")
@@ -4528,9 +4458,9 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         SELECT vec_id, rel, aqv AS qv FROM (
           SELECT c.vec_id, c.aqv, {dot} AS rel
-          FROM (SELECT vec_id, {_QUANT} AS aqv FROM mmr_emb_v
+          FROM (SELECT vec_id, {INT8_GRID} AS aqv FROM mmr_emb_v
                 WHERE vec_id <> 0) c
-          CROSS JOIN (SELECT {_QUANT} AS bqv FROM mmr_emb_v
+          CROSS JOIN (SELECT {INT8_GRID} AS bqv FROM mmr_emb_v
                       WHERE vec_id = 0) q
         ) ORDER BY rel DESC, vec_id LIMIT 20
         """

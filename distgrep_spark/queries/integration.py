@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.operators.similarity import INT8_GRID, int_l2sq
 from distgrep_spark.queries.analytics import _ER_RECS_SQL
 from distgrep_spark.queries.registry import ORACLES, query
 from distgrep_spark.sources.catalog import load_table
@@ -288,11 +289,7 @@ def q_sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distgrep_spark.queries.analytics import q_sim_ann_pq_adc
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q8 = emb.selectExpr(
-        "vec_id",
-        "transform(embedding, v -> CAST(greatest(-127.0D, least(127.0D,"
-        " floor(CAST(v AS DOUBLE) * 200 + 0.5))) AS BIGINT)) AS qv",
-    )
+    q8 = emb.selectExpr("vec_id", f"{INT8_GRID} AS qv")
     qs = q8.where(F.col("vec_id") < 5).selectExpr(
         "vec_id AS query_id", "qv AS qqv"
     )
@@ -301,8 +298,7 @@ def q_sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id",
             "vec_id",
-            "aggregate(zip_with(qv, qqv, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x) AS dist",
+            f"{int_l2sq('qv', 'qqv')} AS dist",
         )
     )
     arm_l2 = (

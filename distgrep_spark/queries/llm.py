@@ -27,7 +27,7 @@ from distgrep_spark.operators.multimodal import (
     extract_byte_features,
     payload_metadata,
 )
-from distgrep_spark.operators.similarity import ann_lsh_topk, cosine_topk
+from distgrep_spark.operators.similarity import INT8_GRID, ann_lsh_topk, cosine_topk
 from distgrep_spark.operators.text import (
     SPLIT_CASE as _SPLIT_CASE,
     fingerprints,
@@ -1426,27 +1426,15 @@ def q_kmeans_assign_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     UPDATE step re-averages floats, but its per-round assignment is
     exactly this oracle-checked operator (measured 500/500 agreement at
     sf0.01)."""
-    from distgrep_spark.operators.clustering import assign_to_centroids
-
     import json
 
+    from distgrep_spark.operators.clustering import assign_to_centroids, codebook
+
     emb = load_table(spark, sf_dir, "embeddings")
-    # Same predicate as the oracle's `WHERE vec_id < 16` — NOT
-    # orderBy().limit(16), which is only equivalent while fixture
-    # vec_ids happen to start at 0 and be contiguous. The assignment
-    # returns a list INDEX; map it back to the centroid's vec_id so the
-    # label space matches the oracle's `cid` definitionally (ascending
-    # order makes index ties == lowest-cid ties).
-    init = (
-        emb.select("vec_id", "embedding")
-        .where(F.col("vec_id") < 16)
-        .orderBy("vec_id")
-        .collect()
-    )
-    cents = [[float(x) for x in r["embedding"]] for r in init]
-    cent_ids = F.from_json(
-        F.lit(json.dumps([int(r["vec_id"]) for r in init])), "array<bigint>"
-    )
+    # the oracle's `WHERE vec_id < 16` codebook; the assignment's list
+    # INDEX maps back to the centroid's vec_id, the oracle's `cid`
+    ids, cents = codebook(emb, 16)
+    cent_ids = F.from_json(F.lit(json.dumps(ids)), "array<bigint>")
     assigned = assign_to_centroids(emb, cents)
     return assigned.select(
         "vec_id",
@@ -1666,7 +1654,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism end-to-end: the assignment is kmeans_assign_step's
     bit-exact kernel (identical element-order fold of squared diffs,
     (dist, cid) argmin — both engines replay it), and the cosine is
-    dedup_embedding_cosine's proven hash-stable dot/(na*nb) tree vs
+    dedup_embedding_cosine's proven hash-stable cos_normed tree vs
     DuckDB list_cosine_similarity. Plan shape: centroids broadcast as a
     constant-folded literal, vectors+norms materialized ONCE and carried
     THROUGH assignment (assign_to_centroids keep= — the round-5
@@ -1681,20 +1669,12 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension surface."""
     import json
 
-    from distgrep_spark.operators.clustering import assign_to_centroids
-    from distgrep_spark.operators.similarity import as_double, dot, norm
+    from distgrep_spark.operators.clustering import assign_to_centroids, codebook
+    from distgrep_spark.operators.similarity import as_double, cos_normed, norm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    init = (
-        emb.select("vec_id", "embedding")
-        .where(F.col("vec_id") < 16)
-        .orderBy("vec_id")
-        .collect()
-    )
-    cents = [[float(x) for x in r["embedding"]] for r in init]
-    cent_ids = F.from_json(
-        F.lit(json.dumps([int(r["vec_id"]) for r in init])), "array<bigint>"
-    )
+    ids, cents = codebook(emb, 16)
+    cent_ids = F.from_json(F.lit(json.dumps(ids)), "array<bigint>")
     # Profile collapse (round 8, the ngram_jaccard_pairs redesign
     # applied to vectors): bit-identical embeddings — 64 coincident
     # copies of every vector on the x64 corpus, mirrored/boilerplate
@@ -1741,7 +1721,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster",
             "ma",
             "mb",
-            (dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))).alias(
+            cos_normed(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")).alias(
                 "cos_sim"
             ),
         )
@@ -1760,7 +1740,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "cluster",
             "members",
-            (dot(F.col("e"), F.col("e")) / (F.col("nrm") * F.col("nrm"))).alias(
+            cos_normed(F.col("e"), F.col("e"), F.col("nrm"), F.col("nrm")).alias(
                 "cos_sim"
             ),
         )
@@ -1795,7 +1775,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH/IVF bucketing of sim_ann_* so only bucket-mates are compared."""
     from pyspark.sql.functions import broadcast
 
-    from distgrep_spark.operators.similarity import as_double, dot, norm
+    from distgrep_spark.operators.similarity import as_double, cos_normed, norm
 
     # brute tier on a bounded, deterministic candidate set (vec_id<500):
     # all-pairs exact cosine is quadratic BY DESIGN and belongs behind
@@ -1826,7 +1806,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            (dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))).alias(
+            cos_normed(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")).alias(
                 "cos_sim"
             ),
         )
@@ -3224,11 +3204,7 @@ def q_embed_matryoshka_prefix_norms(spark: SparkSession, sf_dir: str) -> DataFra
     map-side-combined 4-row rollup; the 4-way prefix explode carries
     two BIGINTs per row, not the vector."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.selectExpr(
-        "vec_id",
-        "transform(embedding, v -> CAST(greatest(-127.0D, least(127.0D, "
-        "floor(CAST(v AS DOUBLE) * 200 + 0.5))) AS BIGINT)) AS qv",
-    )
+    q = emb.selectExpr("vec_id", f"{INT8_GRID} AS qv")
     per_vec = q.selectExpr(
         "vec_id",
         "explode(array(8, 16, 32, 64)) AS prefix_dims",

@@ -1434,7 +1434,7 @@ def q_embedding_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``r`` is now materialized ONCE, max_err derives from the
     materialized column, and max_err rides THROUGH the assignment
     (assign_to_centroids ``keep=``) — single scan, zero joins."""
-    from distgrep_spark.operators.clustering import assign_to_centroids
+    from distgrep_spark.operators.clustering import assign_to_centroids, codebook
 
     emb = load_table(spark, sf_dir, "embeddings")
     xd = emb.select(
@@ -1468,10 +1468,7 @@ def q_embedding_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.zip_with(F.col("r"), F.col("x"), lambda a, b: F.abs(a - b))
         ).alias("max_err"),
     )
-    cents = [
-        [float(v) for v in r["embedding"]]
-        for r in emb.where(F.col("vec_id") < 16).orderBy("vec_id").collect()
-    ]
+    _, cents = codebook(emb, 16)
     assigned = assign_to_centroids(rec, cents, vec_col="r", keep=["max_err"])
     return (
         assigned

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
-from distgrep_spark.queries.analytics import _QUANT, _QUANT_DUCK
+from distgrep_spark.operators.similarity import INT8_GRID
+from distgrep_spark.queries.analytics import _QUANT_DUCK
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
 
@@ -450,7 +451,7 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embedding, and the fixtures don't embed every doc (sf0.1: 2000
     # vectors / 5000 docs, measured).
     load_table(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id", f"{_QUANT} AS qv"
+        "vec_id", f"{INT8_GRID} AS qv"
     ).createOrReplaceTempView("rlhf_emb_v")
     cand = spark.sql(
         """

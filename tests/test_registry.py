@@ -673,6 +673,26 @@ def test_copurchase_graph_lives_only_in_graph():
     assert pairings == [], f"hand-written basket pairing: {pairings}"
 
 
+def test_vector_kernels_live_only_in_similarity():
+    """The int8 grid, the integer squared L2 and the PQ subvector
+    explode exist once, in operators/similarity.py (they had been
+    pasted 7, 7 and 3 times). The DuckDB oracle copies spell
+    `least(127.0,` and `list_zip`, so they never match."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    markers = ("least(127.0D", "(a - b) * (a - b)", "AS m, slice(qv")
+    copies = sorted(
+        (os.path.relpath(p, pkg), m)
+        for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+        if os.path.relpath(p, pkg) != os.path.join("operators", "similarity.py")
+        for m in markers
+        if m in open(p).read()
+    )
+    assert copies == [], f"vector kernel copied outside operators/similarity.py: {copies}"
+
+
 def test_bench_normalized_baseline_is_committed_and_covers_registry():
     """The committed baseline must exist and cover the registry (minus
     queries newer than the last rebase - tracked by the note field);

@@ -240,3 +240,115 @@ def test_er_resolve_planted_clusters(spark):
         expect = 1 + (custkey % 7 == 0) + (custkey % 13 == 0)
         assert r.n_members == expect, (custkey, r.n_members, expect)
         assert len(r.canonical_name) == 16
+
+
+# A corpus with an all-zero vector: vec 0 has no direction, so every
+# cosine it takes part in is undefined.
+ZERO_CORPUS = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])]
+
+
+def test_zero_vector_scores_null_and_ranks_last(spark):
+    """An all-zero corpus or query vector must not raise DIVIDE_BY_ZERO
+    under ANSI: its pairs score NULL, rank last (DESC is NULLS LAST,
+    then vec_id), every operator ranks like the Pandas-UDF scorer, and
+    the non-zero pairs keep their plain dot / (|a| |b|) score. The LSH
+    parameters (one plane, 16 tables) make every pair collide somewhere,
+    so the approximate operators see the full candidate set."""
+    from distgrep_spark.operators.similarity import ann_ivf_topk, cosine_topk_pandas
+
+    df = spark.createDataFrame(ZERO_CORPUS, "vec_id long, embedding array<float>")
+    qs = df.where(F.col("vec_id") < 2).withColumnRenamed("vec_id", "query_id")
+    vecs = {i: np.array(v, dtype=np.float64) for i, v in ZERO_CORPUS}
+
+    def ranked(rows):
+        return sorted((r["query_id"], r["vec_id"], r["rank"]) for r in rows)
+
+    want = ranked(cosine_topk_pandas(df, qs, k=10, exclude_self=True).collect())
+    assert want == [(0, 1, 1), (0, 2, 2), (0, 3, 3), (1, 0, 3), (1, 2, 2), (1, 3, 1)]
+    runs = {
+        "cosine_topk": cosine_topk(df, qs, k=10, exclude_self=True),
+        "ann_ivf_topk": ann_ivf_topk(df, qs, k=10, exclude_self=True),
+        "ann_lsh_topk": ann_lsh_topk(
+            df, qs, k=10, dim=2, num_planes=1, num_tables=16, exclude_self=True
+        ),
+    }
+    for name, topk in runs.items():
+        rows = topk.collect()
+        assert ranked(rows) == want, name
+        for r in rows:
+            a, b = vecs[r["query_id"]], vecs[r["vec_id"]]
+            if not a.any() or not b.any():
+                assert r["cos_sim"] is None, (name, r)
+            else:
+                want_sim = float(a @ b) / (np.sqrt(a @ a) * np.sqrt(b @ b))
+                assert r["cos_sim"] == want_sim, (name, r)
+
+
+def _int8_grid_np(x):
+    """numpy twin of INT8_GRID: float32 -> float64, then half-up."""
+    return np.clip(np.floor(x.astype(np.float64) * 200 + 0.5), -127, 127).astype(np.int64)
+
+
+def test_int8_grid_matches_numpy_on_edge_values(spark):
+    """The global int8 grid clamps to ±127, rounds half UP (floor(x*200
+    + 0.5): 12.5 -> 13 and -12.5 -> -12, where numpy's round would go
+    half-even), and maps 0 to 0; float32 inputs promote to double first."""
+    from distgrep_spark.operators.similarity import INT8_GRID
+
+    up, down = np.float32(1.0), np.float32(-1.0)
+    edges = np.array(
+        [
+            0.0, -0.0, 0.635, 0.64, 5.0, 3.0e38, -0.635, -0.64, -5.0, -3.0e38,
+            0.0025, -0.0025, 0.0075, -0.0075, 0.0625, -0.0625, 0.1875, -0.1875,
+            np.nextafter(np.float32(0.0025), up), np.nextafter(np.float32(0.0025), down),
+            np.nextafter(np.float32(-0.0025), up), np.nextafter(np.float32(-0.0025), down),
+        ],
+        dtype=np.float32,
+    )
+    df = spark.createDataFrame(
+        [(0, [float(x) for x in edges])], "vec_id long, embedding array<float>"
+    )
+    got = df.selectExpr(f"{INT8_GRID} AS qv").first()["qv"]
+    want = _int8_grid_np(edges)
+    assert got == want.tolist()
+    assert want[4] == 127 and want[8] == -127  # clamped
+    assert want[14] == 13 and want[15] == -12  # half-up, not half-even
+
+
+def test_pq_scored_matches_numpy_and_argmin_breaks_ties_low(spark):
+    """pq_scored's every dist is the exact integer squared L2 between
+    the quantized subvectors, and the code argmin min(dist * K + cid)
+    takes the lowest cid on a tie: codebook entries 3 and 5 are planted
+    identical, so vec 5 and its copy vec 10 encode as 3, not 5."""
+    from distgrep_spark.operators.similarity import INT8_GRID, PQ_D, PQ_K, PQ_M, pq_scored
+
+    rng = np.random.RandomState(11)
+    vecs = (rng.randn(12, PQ_M * PQ_D) * 0.2).astype(np.float32)
+    vecs[5] = vecs[3]
+    vecs[10] = vecs[3]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    scored = pq_scored(df.selectExpr("vec_id", f"{INT8_GRID} AS qv"))
+
+    q = _int8_grid_np(vecs).reshape(12, PQ_M, PQ_D)
+    dist = ((q[:, None, :, :] - q[None, :PQ_K, :, :]) ** 2).sum(axis=3)  # [v, cid, m]
+    got = {(r["vec_id"], r["m"], r["cid"]): r["dist"] for r in scored.collect()}
+    assert got == {
+        (v, m, c): int(dist[v, c, m])
+        for v in range(12)
+        for m in range(PQ_M)
+        for c in range(PQ_K)
+    }
+
+    codes = {
+        (r["vec_id"], r["m"]): r["code"]
+        for r in scored.groupBy("vec_id", "m")
+        .agg(F.expr(f"min(dist * {PQ_K} + cid) % {PQ_K}").alias("code"))
+        .collect()
+    }
+    assert codes == {
+        (v, m): int(np.argmin(dist[v, :, m])) for v in range(12) for m in range(PQ_M)
+    }
+    assert all(codes[(v, m)] == 3 for v in (3, 5, 10) for m in range(PQ_M))
