@@ -10,9 +10,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Whitespace tokenizer shared with the DuckDB oracles
-# (string_split_regex(trim(x), '\s+')).
-WS = r"\s+"
+# The token rule, spelled once per engine: Spark's regex (SQL and
+# Column forms are built from it) and the DuckDB oracle fragment.
+_TOKEN_RX = r"\s+"
+_TOKEN_RX_SQL = _TOKEN_RX.replace("\\", "\\\\")  # SQL literals unescape
+TOKENS_DUCK = r"string_split_regex(trim(text), '\s+')"
 
 # BPE-ish fallback token pattern: letter runs, digit runs, single symbols.
 BPE_ISH = r"[a-z]+|[A-Z]+|[0-9]+|[^\sa-zA-Z0-9]"
@@ -21,7 +23,12 @@ BPE_ISH = r"[a-z]+|[A-Z]+|[0-9]+|[^\sa-zA-Z0-9]"
 def tokens(col: Column) -> Column:
     """Whitespace tokens of a text column (trimmed first so edge
     whitespace doesn't produce empty tokens)."""
-    return F.split(F.trim(col), WS)
+    return F.split(F.trim(col), _TOKEN_RX)
+
+
+def tokens_sql(col: str = "text") -> str:
+    """``tokens`` as a Spark SQL fragment, for selectExpr / spark.sql."""
+    return f"split(trim({col}), '{_TOKEN_RX_SQL}')"
 
 
 def token_count(col: Column) -> Column:

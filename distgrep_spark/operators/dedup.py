@@ -448,7 +448,7 @@ def simhash(
     round trips at plan time (measured), SQL strings don't."""
     mask = 0x0001000100010001
     tok = df.select(
-        id_col, F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
+        id_col, F.explode(tokens(F.col(text_col))).alias("tok")
     )
     sums = (
         tok.selectExpr(id_col, "xxhash64(tok) AS h")

@@ -62,6 +62,8 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.textfns import tokens_sql
+
 N_BUCKETS = 256
 Q_ETA = 1024  # 1/(2*eta); provably stable for any corpus (see module doc)
 MICRO = 1_000_000
@@ -110,7 +112,7 @@ def per_doc_features(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataF
         "doc_id",
         *extra_cols,
         "CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y",
-        "array_distinct(transform(split(trim(text), '\\\\s+'), tok -> "
+        f"array_distinct(transform({tokens_sql()}, tok -> "
         + BUCKET_EXPR.format(tok="tok")
         + ")) AS bs",
     )

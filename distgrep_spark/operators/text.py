@@ -21,6 +21,7 @@ from distgrep_spark.functions.textfns import (
     stopword_ratio,
     token_count,
     tokens,
+    tokens_sql,
 )
 
 # Stopword probe set shared with the DuckDB oracles. The fixture vocabulary
@@ -333,7 +334,7 @@ def cdc_chunk_hashes(
     toks = df.selectExpr(
         id_col,
         *keep,
-        rf"posexplode(split(trim({text_col}), '\\s+')) AS (pos0, tok)",
+        f"posexplode({tokens_sql(text_col)}) AS (pos0, tok)",
     ).selectExpr(id_col, *keep, "tok", "pos0 + 1 AS pos")
     flags = toks.selectExpr(
         id_col,
@@ -402,7 +403,7 @@ def exact_substr_scrub(
     LLM-pipeline extension surface per SURVEY.md §2.2.
     """
     toks = df.selectExpr(
-        f"{id_col} AS doc_id", f"split(trim({text_col}), '\\\\s+') AS t"
+        f"{id_col} AS doc_id", f"{tokens_sql(text_col)} AS t"
     ).localCheckpoint(eager=False)
     # r11: toks fans out to THREE consumers (grams, pos, the n_tokens
     # projection) and re-tokenized the corpus per branch; the lazy

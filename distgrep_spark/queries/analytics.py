@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from distgrep_spark.functions.numeric import dsum
 from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
 from distgrep_spark.operators.dedup import shingle_profiles
 from distgrep_spark.operators.graph import copurchase_edges
 from distgrep_spark.operators.similarity import (
@@ -665,9 +666,9 @@ def q_orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engines). Equality vs the retired brute form is pinned at sf0.01
     # by tests/test_oracle_twins.py. MATERIALIZED throughout per the
     # CTE-inlining rules (re-execution + cross-product estimates).
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
@@ -1160,9 +1161,9 @@ def q_events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_winnowing_select",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     hashed AS (
       SELECT doc_id, i,
@@ -1681,9 +1682,9 @@ def q_stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_rake_keywords",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     idx AS (
       SELECT doc_id, i, lower(t[i]) AS tok,
@@ -1739,7 +1740,7 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     idx = docs.selectExpr(
         "doc_id",
-        "posexplode(split(trim(text), '\\\\s+')) AS (i, rawtok)",
+        f"posexplode({tokens_sql()}) AS (i, rawtok)",
     ).selectExpr(
         "doc_id",
         "i",
@@ -2475,7 +2476,7 @@ _BUDGET_TOKENS = 1_000_000
     oracle=f"""
     WITH per_source AS (
       SELECT source,
-             CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)
+             CAST(sum(len({TOKENS_DUCK})) AS BIGINT)
                AS tokens
       FROM documents GROUP BY source
     ),
@@ -2517,7 +2518,7 @@ def q_corpus_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFr
     per_source = (
         docs.selectExpr(
             "source",
-            "size(split(trim(text), '\\\\s+')) AS n_tok",
+            f"size({tokens_sql()}) AS n_tok",
         )
         .groupBy("source")
         .agg(F.expr("CAST(sum(n_tok) AS BIGINT) AS tokens"))
@@ -2738,10 +2739,10 @@ def q_graph_assortativity_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_batch_padding_plan",
-    oracle="""
+    oracle=f"""
     WITH lens AS (
       SELECT doc_id,
-             CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+             CAST(len({TOKENS_DUCK}) AS BIGINT)
                AS n_tok
       FROM documents
     ),
@@ -2783,7 +2784,7 @@ def q_text_batch_padding_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the fixed-batch-size variant with the waste metric."""
     docs = load_table(spark, sf_dir, "documents")
     lens = docs.selectExpr(
-        "doc_id", "CAST(size(split(trim(text), '\\\\s+')) AS BIGINT) AS n_tok"
+        "doc_id", f"CAST(size({tokens_sql()}) AS BIGINT) AS n_tok"
     )
     bucketed = lens.selectExpr(
         "doc_id",

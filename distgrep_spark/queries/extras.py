@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.textfns import TOKENS_DUCK
 from distgrep_spark.operators.asof import asof_join
 from distgrep_spark.operators.grep import grep_lines, highlight
 from distgrep_spark.queries.registry import query
@@ -487,9 +488,9 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lateral_explode_tokens",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     )
     SELECT doc_id, i AS pos, t[i] AS tok
     FROM toks, LATERAL unnest(generate_series(1, len(t))) AS u(i)

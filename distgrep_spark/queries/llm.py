@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
 from distgrep_spark.operators.dedup import (
     dedup_by_hash,
     dedup_exact,
@@ -78,9 +79,9 @@ def q_dedup_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # retired all-pairs posting self-join is pinned per-pytest-run in
 # tests/test_oracle_twins.py, and the full rationale + x16 measurements
 # live on dedup_minhash_recall's registration below.
-_EXACT_JACCARD_PROFILE_SQL = r"""
+_EXACT_JACCARD_PROFILE_SQL = rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
@@ -158,9 +159,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at x16 (DuckDB ran out of temp disk after tens of GB); the list form
 # streams pairs straight into the rollup. Output identical; equality vs
 # the brute-force SQL is pinned at sf0.01 by tests/test_oracle_twins.py.
-_CAPPED_POSTING_CORE = r"""
+_CAPPED_POSTING_CORE = rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     allgrams AS (
       SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
@@ -568,9 +569,9 @@ def q_sim_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_stats",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, text, {TOKENS_DUCK} AS t FROM documents
     )
     SELECT doc_id,
            length(text) AS n_chars_calc,
@@ -589,9 +590,9 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, text, {TOKENS_DUCK} AS t FROM documents
     )
     SELECT doc_id,
            0.4 * least(1.0, len(t) / 100.0)
@@ -621,7 +622,7 @@ _HEXPOS = "0123456789abcdef"
     oracle=rf"""
     WITH w AS (SELECT {_QLIN_W} AS wt),
     toks AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
+      SELECT doc_id, unnest({TOKENS_DUCK}) AS tok
       FROM documents
     ),
     feats AS (
@@ -704,7 +705,7 @@ def q_text_quality_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH docs_y AS MATERIALIZED (
       SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-             string_split_regex(trim(text), '\s+') AS t
+             {TOKENS_DUCK} AS t
       FROM documents
     ),
     n AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS nd FROM docs_y),
@@ -809,7 +810,7 @@ def q_text_quality_train_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH docs_y AS MATERIALIZED (
       SELECT doc_id, source, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-             string_split_regex(trim(text), '\s+') AS t
+             {TOKENS_DUCK} AS t
       FROM documents
     ),
     n AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS nd FROM docs_y),
@@ -932,10 +933,10 @@ def q_quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_probe_loso_influence",
-    oracle=r"""
+    oracle=rf"""
     WITH docs_y AS MATERIALIZED (
       SELECT doc_id, source, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-             string_split_regex(trim(text), '\s+') AS t
+             {TOKENS_DUCK} AS t
       FROM documents
     ),
     feats AS MATERIALIZED (
@@ -1062,13 +1063,13 @@ def q_quality_probe_loso_influence(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "text_curation_funnel",
-    oracle=r"""
+    oracle=rf"""
     WITH scored AS (
       SELECT doc_id, lang, n_chars,
              0.4 * least(1.0, len(t) / 100.0)
            + 0.3 * (len(list_filter(t, x -> x IN ('the', 'a', 'of', 'and'))) * 1.0 / len(t))
            + 0.3 * least(1.0, length(text) / 500.0) AS quality
-      FROM (SELECT *, string_split_regex(trim(text), '\s+') AS t FROM documents)
+      FROM (SELECT *, {TOKENS_DUCK} AS t FROM documents)
     )
     SELECT count(*) AS n_total,
            CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_lang,
@@ -1112,9 +1113,9 @@ def q_text_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_lang_guess",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     )
     SELECT doc_id,
            CASE WHEN len(list_filter(t, x -> x IN ('the', 'a', 'of', 'and'))) * 1.0 / len(t)
@@ -1130,10 +1131,10 @@ def q_text_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_token_counts",
-    oracle=r"""
+    oracle=rf"""
     SELECT lang,
            count(*) AS n_docs,
-           CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
+           CAST(sum(len({TOKENS_DUCK})) AS BIGINT)
              AS ws_tokens,
            CAST(sum(len(regexp_extract_all(text, '[a-z]+|[A-Z]+|[0-9]+|[^\sa-zA-Z0-9]')))
                 AS BIGINT) AS bpe_ish_tokens,
@@ -1349,9 +1350,9 @@ def q_dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_tfidf_top_terms",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
+      SELECT doc_id, unnest({TOKENS_DUCK}) AS tok
       FROM documents
     ),
     tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY doc_id, tok),
@@ -1458,9 +1459,9 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_chunk_documents",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     )
     SELECT doc_id,
            CAST((u.i - 1) // 48 AS INT)              AS chunk_id,
@@ -1531,9 +1532,9 @@ def q_dedup_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pack_token_budget",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, len(string_split_regex(trim(text), '\s+')) AS n_tokens
+      SELECT doc_id, len({TOKENS_DUCK}) AS n_tokens
       FROM documents
     )
     SELECT doc_id, n_tokens,
@@ -1863,9 +1864,9 @@ def q_corpus_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_repetition_score",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     grams AS (
       SELECT doc_id,
@@ -2268,9 +2269,9 @@ def q_sim_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_bpe_merge_step",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     pairs AS (
       SELECT t[i] || ' ' || t[i+1] AS pair
@@ -2377,9 +2378,9 @@ def _bpe_top_merges(toks, k: int):
 
 # The encode twin's WITH-body (toks -> trained m -> s1..s4), shared by
 # text_bpe_encode and tokenizer_mixture_pipeline's oracles verbatim.
-_BPE_ENCODE_CTES = r"""
+_BPE_ENCODE_CTES = rf"""
     WITH toks AS MATERIALIZED (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     m AS MATERIALIZED (
       SELECT max(CASE WHEN rnk = 1 THEN a END) AS a1,
@@ -2688,9 +2689,9 @@ def _bpe_train_oracle(k: int) -> str:
     re-executes the whole chain per reference, exponentially (CLAUDE.md
     inlined-CTE lessons)."""
     parts = [
-        r"""
+        rf"""
     WITH s0 AS MATERIALIZED (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     )"""
     ]
     for r in range(1, k + 1):
@@ -2802,9 +2803,9 @@ def _bpe_encode_deep_oracle(k: int) -> str:
     are multi-referenced -> AS MATERIALIZED (the inlined-CTE lessons);
     the s{r} chain is single-referenced and streams."""
     parts = [
-        r"""
+        rf"""
     WITH toks AS MATERIALIZED (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     m AS MATERIALIZED (
       SELECT a, b, row_number() OVER (ORDER BY n DESC, a, b) AS rnk
@@ -2971,9 +2972,9 @@ def q_embed_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_vocab_oov_rate",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT source, unnest(string_split_regex(trim(text), '\s+')) AS tok
+      SELECT source, unnest({TOKENS_DUCK}) AS tok
       FROM documents
     ),
     rolled AS (
@@ -3021,7 +3022,7 @@ def q_text_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     rolled = (
         docs.selectExpr(
-            "source", r"explode(split(trim(text), '\\s+')) AS tok"
+            "source", f"explode({tokens_sql()}) AS tok"
         )
         .groupBy("source", "tok")
         .agg(F.expr("CAST(count(*) AS BIGINT) AS n"))
@@ -3375,9 +3376,9 @@ def q_dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_cdc_chunks",
-    oracle=r"""
+    oracle=rf"""
     WITH tk AS (
-      SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, source, {TOKENS_DUCK} AS t
       FROM documents
     ), toks AS (
       SELECT doc_id, source, t[i] AS tok, i AS pos
@@ -3474,9 +3475,9 @@ def q_text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_ngram_novelty_decay",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, source, {TOKENS_DUCK} AS t
       FROM documents
     ), grams AS (
       SELECT DISTINCT doc_id, source,
@@ -3531,7 +3532,7 @@ def q_text_ngram_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.selectExpr(
-        "doc_id", "source", r"split(trim(text), '\\s+') AS t"
+        "doc_id", "source", f"{tokens_sql()} AS t"
     )
     # grams is the plan's fan-out point (firsts AND per_source consume
     # it; Spark reuses no exchange across branches), so without the
@@ -3591,9 +3592,9 @@ _BM25_QT = [
 
 @query(
     "text_bm25_topk",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
+      SELECT doc_id, {TOKENS_DUCK} AS t
       FROM documents
     ),
     dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
@@ -3672,7 +3673,7 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes constants, not the plan. Reference: the reference's grep
     predicate + combine (worker.go:33-42) is the df rollup's shape."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.selectExpr("doc_id", r"split(trim(text), '\\s+') AS t")
+    toks = docs.selectExpr("doc_id", f"{tokens_sql()} AS t")
     dl = toks.selectExpr("doc_id", "CAST(size(t) AS BIGINT) AS dl")
     sc = dl.agg(
         F.expr("CAST(count(*) AS BIGINT) AS n"),
@@ -3816,9 +3817,9 @@ def q_multimodal_dedup_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_knn_label_vote",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, lang, {TOKENS_DUCK} AS t
       FROM documents
     ),
     grams AS (
@@ -3909,9 +3910,9 @@ def q_text_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per branch (plan audit: 10 documents scans, 18 shuffles).
     # Materialize it once — it is the df<=8 slice, posting-list-sized.
     capped = spark.sql(
-        r"""
+        rf"""
         WITH toks AS (
-          SELECT doc_id, lang, split(trim(text), '\\s+') AS t
+          SELECT doc_id, lang, {tokens_sql()} AS t
           FROM knn_docs_v
         ),
         grams AS (
@@ -3993,9 +3994,9 @@ def q_text_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_dsir_importance",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, lang, {TOKENS_DUCK} AS t
       FROM documents
     ),
     grams AS (
@@ -4117,9 +4118,9 @@ def q_text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_simhash_radius_report",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, {TOKENS_DUCK} AS t
       FROM documents
     ),
     grams AS (
@@ -4286,9 +4287,9 @@ def q_dedup_simhash_radius_report(
     # Measured (sf0.1, interleaved): see OPTIMIZATION_r12.md; plan pair
     # in plans/r12/ (Exchange count 11 -> 6).
     spark.sql(
-        r"""
+        rf"""
         WITH toks AS (
-          SELECT doc_id, split(trim(text), '\\s+') AS t FROM shr_docs_v
+          SELECT doc_id, {tokens_sql()} AS t FROM shr_docs_v
         ),
         grams AS (
           SELECT doc_id, concat_ws(' ', t[i], t[i+1], t[i+2]) AS gram
@@ -4408,11 +4409,11 @@ def q_dedup_simhash_radius_report(
 
 @query(
     "mix_doremi_step",
-    oracle=r"""
+    oracle=rf"""
     WITH src AS MATERIALIZED (
       SELECT source,
              CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
+             CAST(sum(len({TOKENS_DUCK})) AS BIGINT)
                AS n_tokens
       FROM documents GROUP BY source
     ),
@@ -4477,7 +4478,7 @@ def q_mix_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.expr(
-            r"CAST(sum(size(split(trim(text), '\\s+'))) AS BIGINT)"
+            f"CAST(sum(size({tokens_sql()})) AS BIGINT)"
         ).alias("n_tokens"),
     )
     tot = src.agg(

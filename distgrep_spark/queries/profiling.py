@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.textfns import TOKENS_DUCK
 from distgrep_spark.operators.graph import (
     copurchase_edges,
     degree_orient,
@@ -292,9 +293,9 @@ def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_dup_span_fraction",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id,
@@ -1681,9 +1682,9 @@ def q_graph_cc_star_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_exact_substr_scrub",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS MATERIALIZED (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     grams AS MATERIALIZED (
       SELECT doc_id, i - 1 AS gp, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram

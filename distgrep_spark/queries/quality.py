@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
 from distgrep_spark.operators.text import SPLIT_CASE, remove_dup_sentences
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
@@ -77,7 +78,7 @@ _SPARK_KEEP = " AND ".join(f"({e})" for e in _SPARK_RULES.values())
     "text_gopher_rules",
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     )
     SELECT doc_id,
            len(t) AS n_tokens,
@@ -316,7 +317,7 @@ def q_layout_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_curation_pipeline",
     oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, lang, text, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, lang, text, {TOKENS_DUCK} AS t
       FROM documents
     ),
     kept AS (
@@ -1240,9 +1241,9 @@ def q_stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_bloom_decontaminate",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, source, {TOKENS_DUCK} AS t
       FROM documents
     ),
     grams AS (
@@ -1331,9 +1332,9 @@ def q_dedup_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_lang_confusion",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, lang, {TOKENS_DUCK} AS t
       FROM documents
     ),
     g AS (
@@ -1487,9 +1488,9 @@ def q_embedding_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_unigram_surprisal",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     words AS (
       SELECT doc_id, t[i] AS w
@@ -1552,9 +1553,9 @@ def q_text_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_source_overlap_matrix",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, source, {TOKENS_DUCK} AS t
       FROM documents
     ),
     grams AS (
@@ -1744,9 +1745,9 @@ def q_events_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "text_token_entropy",
-    oracle=r"""
+    oracle=rf"""
     WITH words AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
+      SELECT doc_id, unnest({TOKENS_DUCK}) AS w
       FROM documents
     ),
     wc AS (SELECT doc_id, w, count(*) AS c FROM words GROUP BY doc_id, w)
@@ -2120,9 +2121,9 @@ def q_events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_max_token_run",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     pos AS (
       SELECT doc_id, u.i, t[u.i] AS tok
@@ -3248,10 +3249,10 @@ def q_agg_kll_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "profile_dataset_card",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id, source, lang, CAST(n_chars AS BIGINT) AS n_chars,
-             CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+             CAST(len({TOKENS_DUCK}) AS BIGINT)
                AS n_tokens,
              md5(text) AS h
       FROM documents
@@ -3315,7 +3316,7 @@ def q_profile_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "lang",
         "CAST(n_chars AS BIGINT) AS n_chars",
-        r"CAST(size(split(trim(text), '\\s+')) AS BIGINT) AS n_tokens",
+        f"CAST(size({tokens_sql()}) AS BIGINT) AS n_tokens",
         "md5(text) AS h",
     ).localCheckpoint(eager=False)
     base = d.agg(
@@ -3357,10 +3358,10 @@ def q_profile_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_loo_source_deltas",
-    oracle=r"""
+    oracle=rf"""
     WITH per_doc AS (
       SELECT source,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
+             CAST(len({TOKENS_DUCK}) AS BIGINT)
                AS n_tokens,
              CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_en
       FROM documents

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
 from distgrep_spark.operators.similarity import INT8_GRID
 from distgrep_spark.queries.analytics import _QUANT_DUCK
 from distgrep_spark.queries.registry import query
@@ -114,7 +115,7 @@ _RLHF_ORACLE = rf"""
       FROM documents GROUP BY md5(text)
     ),
     toks AS (
-      SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS t
+      SELECT doc_id, lang, {TOKENS_DUCK} AS t
       FROM ded
     ),
     grams AS (
@@ -331,9 +332,9 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Stage 2: DSIR importance over survivors (exact BIGINT ratios).
     spark.sql(
-        r"""
+        rf"""
         WITH toks AS (
-          SELECT doc_id, lang, split(trim(text), '\\s+') AS t
+          SELECT doc_id, lang, {tokens_sql()} AS t
           FROM rlhf_ded_v
         ),
         grams AS (

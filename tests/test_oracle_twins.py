@@ -25,6 +25,7 @@ import duckdb
 import pytest
 
 import distgrep_spark.queries as q
+from distgrep_spark.functions.textfns import TOKENS_DUCK
 from tests.conftest import SF_ORACLE
 
 _JACCARD_BRUTE_TAIL = """
@@ -35,7 +36,8 @@ _JACCARD_BRUTE_TAIL = """
     WHERE c * 1.0 / (sa.n_grams + sb.n_grams - c) >= 0.5
 """
 
-# The pre-round-6 quadratic forms, verbatim.
+# The pre-round-6 quadratic forms, verbatim but for the shared token
+# fragment (the rule under test is the pairing, not the tokenizer).
 BRUTE = {
     "join_range": """
     SELECT s.s_suppkey, s.s_name, count(*) AS n_richer_customers
@@ -55,9 +57,9 @@ BRUTE = {
      AND abs(a.x - b.x) <= 2
      AND abs(a.y - b.y) <= 2
     """,
-    "dedup_ngram_jaccard_capped": r"""
+    "dedup_ngram_jaccard_capped": rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
@@ -73,9 +75,9 @@ BRUTE = {
     )
     """
     + _JACCARD_BRUTE_TAIL,
-    "dedup_cross_corpus": r"""
+    "dedup_cross_corpus": rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     allgrams AS (
       SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
@@ -102,9 +104,9 @@ BRUTE = {
       JOIN documents db ON doc_b = db.doc_id
     WHERE da.source <> db.source
     """,
-    "dedup_minhash_recall": r"""
+    "dedup_minhash_recall": rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
@@ -164,9 +166,9 @@ BRUTE["dedup_semdedup"] = """
 # Round 8: text_shingle_containment's twin moved to the profile-collapse
 # form (coincident copies share one profile) — the doc-level posting
 # self-join was quadratic in copy multiplicity at x64.
-BRUTE["text_shingle_containment"] = r"""
+BRUTE["text_shingle_containment"] = rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+      SELECT doc_id, {TOKENS_DUCK} AS t FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
