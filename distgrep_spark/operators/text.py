@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from distgrep_spark.functions.textfns import (
     avg_token_len,
     bpe_ish_count,
+    ngrams_of_tokens,
     stopword_ratio,
     token_count,
     tokens,
@@ -238,7 +239,6 @@ def dup_span_fraction(
     construction as the Jaccard dedup pass, so at 100 TB the inverted
     index is shareable between the two (and the gram key would be its
     8-byte xxhash64, exactly like dedup_hash vs dedup_exact)."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
     toks = df.select(id_col, tokens(F.col(text_col)).alias("_t"))
     grams = toks.select(

@@ -53,7 +53,12 @@ from pyspark.sql import functions as F
 
 from distgrep_spark.functions.numeric import dsum
 from distgrep_spark.functions.pairs import list_pairs
-from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
+from distgrep_spark.functions.textfns import (
+    TOKENS_DUCK,
+    ngrams_of_tokens,
+    tokens,
+    tokens_sql,
+)
 from distgrep_spark.operators.dedup import shingle_profiles
 from distgrep_spark.operators.graph import copurchase_edges
 from distgrep_spark.operators.similarity import (
@@ -1209,7 +1214,6 @@ def q_text_winnowing_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     of them, posting-list style, and near-dup candidate generation
     joins on the winnowed set only. One window pass per doc inside the
     doc_id partition; the fingerprint table shuffles 8-byte ints."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("t"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.textfns import TOKENS_DUCK
+from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens
 from distgrep_spark.operators.asof import asof_join
 from distgrep_spark.operators.grep import grep_lines, highlight
 from distgrep_spark.queries.registry import query
@@ -501,7 +501,6 @@ def q_lateral_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     its 1-based position. The explode multiplies rows ~300x here — at
     scale follow it with the aggregation you actually need (Catalyst
     pushes projections into the generate, it cannot un-multiply rows)."""
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(

@@ -15,7 +15,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
-from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
+from distgrep_spark.functions.textfns import (
+    BPE_ISH_DUCK,
+    TOKENS_DUCK,
+    ngrams_of_tokens,
+    token_count,
+    tokens,
+    tokens_sql,
+)
 from distgrep_spark.operators.dedup import (
     dedup_by_hash,
     dedup_exact,
@@ -670,7 +677,6 @@ def q_text_quality_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     (worker.go:24-43); this is the brief's LLM-pipeline surface."""
     import json
 
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     wlit = (
@@ -850,8 +856,11 @@ def q_text_quality_train_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM w2 JOIN g3 USING (bucket)
     ),
     scored AS MATERIALIZED (
-      SELECT f.doc_id, CAST(sum(w3.w) AS BIGINT) AS logit
-      FROM feats f JOIN w3 USING (bucket) GROUP BY f.doc_id
+      SELECT d.doc_id, CAST(coalesce(sum(w3.w), 0) AS BIGINT) AS logit
+      FROM docs_y d
+        LEFT JOIN feats f USING (doc_id)
+        LEFT JOIN w3 ON w3.bucket = f.bucket
+      GROUP BY d.doc_id
     ),
     tot AS MATERIALIZED (
       SELECT CAST(sum(logit) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS m
@@ -1136,7 +1145,7 @@ def q_text_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_docs,
            CAST(sum(len({TOKENS_DUCK})) AS BIGINT)
              AS ws_tokens,
-           CAST(sum(len(regexp_extract_all(text, '[a-z]+|[A-Z]+|[0-9]+|[^\sa-zA-Z0-9]')))
+           CAST(sum(len(regexp_extract_all(text, '{BPE_ISH_DUCK}')))
                 AS BIGINT) AS bpe_ish_tokens,
            CAST(sum(length(text)) AS BIGINT) AS total_chars
     FROM documents
@@ -1465,7 +1474,9 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id,
            CAST((u.i - 1) // 48 AS INT)              AS chunk_id,
-           array_to_string(list_slice(t, u.i, u.i + 63), ' ') AS chunk_text,
+           -- DuckDB joins an empty list to NULL; Spark's concat_ws gives ''
+           coalesce(array_to_string(list_slice(t, u.i, u.i + 63), ' '), '')
+             AS chunk_text,
            len(list_slice(t, u.i, u.i + 63))         AS n_tokens
     FROM toks,
          LATERAL unnest(generate_series(1, greatest(len(t) - 16, 1), 48)) AS u(i)
@@ -1556,7 +1567,6 @@ def q_pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     is localCheckpoint'ed so the boundary/offset passes don't re-split
     every document. No Exchange SinglePartition; the unchanged
     global-window oracle certifies the bucketed cumsum exactly."""
-    from distgrep_spark.functions.textfns import token_count
     from distgrep_spark.operators.distrank import (
         array_lit,
         bucket_expr,
@@ -1899,7 +1909,6 @@ def q_text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition, so filtering on _g would rebuild the whole trigram
     construction per row just to test emptiness (measured 6.4 s at
     sf0.1 with the _g filter)."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("_t")).where(
@@ -2302,7 +2311,6 @@ def q_text_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic tie-break (count DESC, pair ASC) on both engines. At
     100 TB the vocab rollup is the only exchange, and its key space is
     the pair vocabulary, not the corpus."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = (
@@ -2360,7 +2368,6 @@ def _bpe_top_merges(toks, k: int):
     """Bounded k-row codebook pull of the top adjacent pairs (count
     DESC, a, b; a != b) from one static pass — deterministic
     cross-engine (exact BIGINT counts, total order)."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens
 
     return (
         toks.select(F.explode(ngrams_of_tokens(F.col("t"), 2)).alias("pair"))
@@ -2441,7 +2448,7 @@ _BPE_ENCODE_CTES = rf"""
     oracle=_BPE_ENCODE_CTES + """
     SELECT doc_id, n_raw, CAST(len(t) AS BIGINT) AS n_encoded,
            n_raw - CAST(len(t) AS BIGINT) AS n_merged,
-           md5(array_to_string(t, ' ')) AS encoded_md5
+           md5(coalesce(array_to_string(t, ' '), '')) AS encoded_md5
     FROM s4
     """,
 )
@@ -2493,7 +2500,6 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     BPE applier. Reference: massimostanzione/distgrep is grep-only
     (worker.go:33-42); tokenizer surface per the brief's text-analysis
     north star; Sennrich et al. 2016 for the merge semantics."""
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("t"))
@@ -2603,7 +2609,6 @@ def q_tokenizer_mixture_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (flagship pipelines); Sennrich 2016 (BPE); the tau-weighted
     mixture is the corpus_unimax_waterfill/mix_temperature family
     applied to encoded-token mass."""
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "source", tokens(F.col("text")).alias("t"))
@@ -2758,7 +2763,6 @@ def q_text_bpe_train_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical. Reference: Sennrich et al. 2016; massimostanzione/
     distgrep is grep-only (worker.go:33-42), tokenizer surface per the
     brief's text-analysis north star."""
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     cur = docs.select("doc_id", tokens(F.col("text")).alias("t")).localCheckpoint(eager=False)
@@ -2837,7 +2841,7 @@ def _bpe_encode_deep_oracle(k: int) -> str:
     return "".join(parts) + f"""
     SELECT doc_id, n_raw, CAST(len(t) AS BIGINT) AS n_encoded,
            n_raw - CAST(len(t) AS BIGINT) AS n_merged,
-           md5(array_to_string(t, ' ')) AS encoded_md5
+           md5(coalesce(array_to_string(t, ' '), '')) AS encoded_md5
     FROM s{k}
     """
 
@@ -2873,7 +2877,6 @@ def q_text_bpe_encode_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     slow path: Arrow batches, never row-at-a-time py4j. Reference:
     Sennrich et al. 2016; massimostanzione/distgrep is grep-only
     (worker.go:33-42)."""
-    from distgrep_spark.functions.textfns import tokens
     from distgrep_spark.operators.bpe import bpe_encode_arrow
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3528,7 +3531,6 @@ def q_text_ngram_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     become 64-bit hashes (equal grams always collide; the 2^-64
     stray collision is absorbed by the count) — the
     shuffle-digests-not-rows posture throughout."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.selectExpr(
@@ -4058,7 +4060,6 @@ def q_text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     was A/B-measured a wash at sf0.1 and slightly NEGATIVE at x8 —
     3.86 s -> 4.06 s — because the re-executed branches run
     concurrently while materialization serializes)."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
     docs = load_table(spark, sf_dir, "documents")
     grams = docs.select(

@@ -34,7 +34,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.pairs import list_pairs
-from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
+from distgrep_spark.functions.textfns import (
+    TOKENS_DUCK,
+    ngrams_of_tokens,
+    token_count,
+    tokens,
+    tokens_sql,
+)
 from distgrep_spark.operators.text import SPLIT_CASE, remove_dup_sentences
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
@@ -64,11 +70,11 @@ _DUCK_RULES = {
 _SPARK_RULES = {
     "r_len": "size(t) BETWEEN 20 AND 1000",
     "r_wordlen": (
-        "aggregate(t, 0L, (acc, x) -> acc + length(x)) * 1.0 / size(t)"
+        "try_divide(aggregate(t, 0L, (acc, x) -> acc + length(x)) * 1.0, size(t))"
         " BETWEEN 3.5 AND 5.0"
     ),
     "r_stop": f"size(array_distinct(filter(t, x -> x IN {_STOPWORDS_SQL}))) >= 2",
-    "r_unique": "size(array_distinct(t)) * 1.0 / size(t) >= 0.4",
+    "r_unique": "try_divide(size(array_distinct(t)) * 1.0, size(t)) >= 0.4",
 }
 _DUCK_KEEP = " AND ".join(f"({e})" for e in _DUCK_RULES.values())
 _SPARK_KEEP = " AND ".join(f"({e})" for e in _SPARK_RULES.values())
@@ -99,7 +105,6 @@ def q_text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ngrams_of_tokens' HOF-inlining gotcha — the array is a real column,
     each rule reuses it), so the panel is a pure projection: map-side,
     shuffle-free."""
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens(F.col("text")).alias("t"))
@@ -380,7 +385,6 @@ def q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced to pure boilerplate (empty clean_text) dedup into one
     group whose digest is md5('') — they stay visible for audit rather
     than silently vanishing."""
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     kept = (
@@ -1281,7 +1285,6 @@ def q_dedup_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     training corpus at all. The exact side here exists to certify at
     test scale; production runs the bloom pass first and only the
     flagged minority reaches the exact verifier."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "source", tokens(F.col("text")).alias("t"))
@@ -1524,7 +1527,6 @@ def q_text_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded token stream, and at web scale (1e8+ types) the same plan
     degrades gracefully to a hash join keyed on the word — either way
     the doc-side rollup shuffles (doc_id, float) pairs, never text."""
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
@@ -1593,7 +1595,6 @@ def q_text_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized stage; the matrix itself is |sources|^2/2 rows.
     Containment is an exact integer ratio — bit-identical across
     engines."""
-    from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
     per_gram = (
@@ -1775,7 +1776,6 @@ def q_text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot reach 5e-5). At 100 TB the token would be its xxhash64 (the
     entropy only needs counts, not spellings) — same plan, 8-byte keys.
     """
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     wc = (
@@ -2168,7 +2168,6 @@ def q_text_max_token_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     as pure columnar windows; max_run 4 / 887 multi-token runs measured
     at sf0.01, so the screen discriminates without firing on healthy
     prose."""
-    from distgrep_spark.functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     pos = docs.select("doc_id", tokens(F.col("text")).alias("t")).select(
@@ -3408,7 +3407,6 @@ def q_corpus_loo_source_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded divisions of exact BIGINTs with a CASE NULL-guard
     on the single-source edge (the ANSI DIVIDE_BY_ZERO lesson — a
     one-source corpus makes docs_without = 0)."""
-    from distgrep_spark.functions.textfns import token_count
 
     docs = load_table(spark, sf_dir, "documents")
     per_src = (

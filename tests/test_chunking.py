@@ -85,11 +85,10 @@ try:
         # (mirrors the operator's 1-based sequence bound)
         limit = max(n_tokens - overlap, 1)
         starts = list(range(0, limit, stride))
-        # split('') yields [''] -> one 1-token chunk of the empty string,
-        # matching the operator's trim+split behavior on empty text
-        ref_toks = toks if toks else [""]
+        # empty text has zero tokens -> one 0-token chunk of the empty
+        # string (every document yields at least one chunk)
         want = [
-            (cid, " ".join(ref_toks[s : s + chunk]), len(ref_toks[s : s + chunk]))
+            (cid, " ".join(toks[s : s + chunk]), len(toks[s : s + chunk]))
             for cid, s in enumerate(starts)
         ]
         got = chunks_of(

@@ -84,3 +84,77 @@ def test_scored_prefix_survives_single_row_input(spark, single_row_sf):
         except Exception as e:  # noqa: BLE001 - collecting a report
             failures.append((name, str(e).splitlines()[0][:80]))
     assert not failures, failures
+
+
+# Planted documents whose whitespace the fixture corpus never has: blank,
+# all-whitespace, a leading newline, NBSP, U+3000 and the line
+# separators. Fresh doc_ids, existing source/lang values.
+RAGGED_DOCS = [
+    "",
+    "\t",
+    "\nthe fast key order sort table",
+    "spark\u00a0group query row data slow",
+    "join\u3000a filter window row\u2028join",
+    "  data stream\u000bcustomer \u0085line  ",
+]
+
+
+@pytest.fixture(scope="module")
+def ragged_ws_sf(tmp_path_factory):
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path_factory.mktemp("ragged_ws_sf")
+    for t in TABLES:
+        if t != "documents":
+            shutil.copy(f"{SF_SMALL}/{t}.parquet", root / f"{t}.parquet")
+    docs = pq.read_table(f"{SF_SMALL}/documents.parquet")
+    first = max(docs.column("doc_id").to_pylist()) + 1
+    planted = pa.table(
+        {
+            "doc_id": [first + i for i in range(len(RAGGED_DOCS))],
+            "text": RAGGED_DOCS,
+            "lang": ["en", "de", "en", "fr", "zh", "es"],
+            "source": ["src0", "src1", "src2", "src3", "src4", "src5"],
+            "n_chars": [len(t) for t in RAGGED_DOCS],
+        },
+        schema=docs.schema,
+    )
+    pq.write_table(pa.concat_tables([docs, planted]), root / "documents.parquet")
+    return str(root)
+
+
+def test_tokenizing_queries_match_twins_on_ragged_whitespace(spark, ragged_ws_sf):
+    """Every query whose twin tokenizes runs on blank and ragged-whitespace
+    documents without raising, and matches its DuckDB twin (one loop, as
+    above): both engines must agree on the token rule, and a doc with zero
+    tokens must not divide by zero."""
+    import duckdb
+
+    from distgrep_spark.functions.textfns import TOKENS_DUCK
+    from tools.check_oracles import only_float_noise, row_multiset
+
+    names = [n for n, sql in q.ORACLES.items() if TOKENS_DUCK in sql]
+    assert len(names) >= 50
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{ragged_ws_sf}/{t}.parquet'")
+    failures = []
+    for name in names:
+        try:
+            sdf = q.QUERIES[name](spark, ragged_ws_sf)
+            srows, scols = sdf.collect(), sdf.columns
+            cur = con.execute(q.ORACLES[name])
+            dcols, drows = [d[0] for d in cur.description], cur.fetchall()
+        except Exception as e:  # noqa: BLE001 - collecting a report
+            failures.append((name, str(e).splitlines()[0][:80]))
+            continue
+        if sorted(scols) != sorted(dcols):
+            failures.append((name, f"columns {sorted(scols)} != {sorted(dcols)}"))
+        elif row_multiset(srows, scols) != row_multiset(drows, dcols) and not (
+            only_float_noise(srows, scols, drows, dcols)
+        ):
+            failures.append((name, f"{len(srows)} spark rows != {len(drows)} duckdb rows"))
+    assert not failures, failures

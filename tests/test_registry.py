@@ -649,6 +649,26 @@ def test_pair_fragment_lives_only_in_pairs():
     assert copies == [], f"pair fragment copied outside functions/pairs.py: {copies}"
 
 
+def test_tokenizer_lives_only_in_textfns():
+    """The token rule is spelled once per engine, in functions/textfns.py
+    (tokens / tokens_sql / TOKENS_DUCK); it had been pasted into 15 Spark
+    sites and 46 DuckDB twins. No split-on-regex tokenizer survives, and
+    no other module spells the rule's regexes."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    banned = ("split(trim(", "F.split(F.trim(", "string_split_regex(")
+    rule = (r"(?U)\S+", r"(?U)\\S+", r"\p{Z}")  # Python and SQL spellings
+    copies = []
+    for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel, src = os.path.relpath(p, pkg), open(p).read()
+        copies += [(rel, b) for b in banned if b in src]
+        if rel != os.path.join("functions", "textfns.py"):
+            copies += [(rel, r) for r in rule if r in src]
+    assert copies == [], f"tokenizer spelled outside functions/textfns.py: {copies}"
+
+
 def test_copurchase_graph_lives_only_in_graph():
     """The part co-purchase graph is built once, by
     operators/graph.part_baskets / copurchase_edges (it had been pasted

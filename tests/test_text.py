@@ -3,9 +3,11 @@ doesn't cover: rolling fingerprint order-sensitivity, quality bounds)."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens, tokens_sql
 from distgrep_spark.operators.text import (
     STOPWORDS,
     fingerprints,
@@ -21,6 +23,42 @@ DOCS = [
     (2, "fox brown quick the", "en"),  # reordering of 0
     (3, "word", "de"),
 ]
+
+
+# Hand-written token rule: maximal runs of non-White_Space code points.
+TOKEN_CASES = [
+    ("hello world", ["hello", "world"]),
+    ("\nhello world", ["hello", "world"]),
+    ("\t", []),
+    ("", []),
+    ("  a  b  ", ["a", "b"]),
+    ("a\u00a0b", ["a", "b"]),  # NBSP
+    ("x\u3000y", ["x", "y"]),  # ideographic space
+    ("a\u000bb", ["a", "b"]),  # vertical tab
+    ("a\u0085b", ["a", "b"]),  # NEL
+    ("a\u2028b", ["a", "b"]),  # line separator
+    ("École\tnormale", ["École", "normale"]),
+]
+
+
+def test_tokens_hand_written_cases_on_both_engines(spark):
+    """tokens(), tokens_sql() and the DuckDB fragment all split exactly
+    at Unicode whitespace and never emit an empty token."""
+    want = [w for _, w in TOKEN_CASES]
+    df = spark.createDataFrame(
+        [(i, t) for i, (t, _) in enumerate(TOKEN_CASES)], "i INT, text STRING"
+    ).orderBy("i")
+    col_rows = df.select(tokens(F.col("text")).alias("t")).collect()
+    sql_rows = df.selectExpr(f"{tokens_sql()} AS t").collect()
+    assert [r["t"] for r in col_rows] == want
+    assert [r["t"] for r in sql_rows] == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (i INT, text VARCHAR)")
+    con.executemany(
+        "INSERT INTO d VALUES (?, ?)", [(i, t) for i, (t, _) in enumerate(TOKEN_CASES)]
+    )
+    duck = con.execute(f"SELECT {TOKENS_DUCK} FROM d ORDER BY i").fetchall()
+    assert [r[0] for r in duck] == want
 
 
 @pytest.fixture(scope="module")
