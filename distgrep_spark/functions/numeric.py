@@ -51,3 +51,20 @@ def sql_dsum(expr: str, alias: str) -> str:
 def sql_davg(expr: str, alias: str) -> str:
     """DuckDB twin of :func:`davg`."""
     return f"CAST(sum(CAST({expr} AS {_SQL_DEC})) AS DOUBLE) / count({expr}) AS {alias}"
+
+
+def sorted_sum(expr: str) -> str:
+    """Order-stable double sum of ``expr`` over a group, as a Spark SQL
+    aggregate expression: a sequential fold over the group's values in
+    ascending order. Double addition isn't associative, so a partial-
+    aggregated ``sum`` depends on partitioning; folding in canonical
+    order makes Spark and DuckDB run the identical sequence of IEEE
+    additions (use it where the values aren't ≤6-dp decimals, so
+    :func:`dsum` doesn't apply).
+
+    Memory bound: ``collect_list`` holds the WHOLE group in one array on
+    one task before the fold, so a group must fit in executor memory
+    (no partial aggregation, no spill). Fine for per-dimension or
+    per-vector groups of a fixture-sized table; at 100 TB a group of
+    billions of rows needs the two-pass exact form or :func:`dsum`."""
+    return f"aggregate(sort_array(collect_list({expr})), 0.0D, (a, x) -> a + x)"

@@ -19,6 +19,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.numeric import sorted_sum
 from distgrep_spark.operators.similarity import as_double, l2sq
 
 # Hard cap on the k x dim centroid matrix collected to the driver each
@@ -46,16 +47,10 @@ def centroids_by(
     avg depends on partitioning and can differ from the oracle engine in
     the last ulp. Folding in canonical ascending order makes both
     engines execute the identical sequence of IEEE additions."""
-    v_sorted = F.sort_array(F.collect_list("v"))
     return (
         df.select(group_col, F.posexplode(as_double(F.col(vec_col))).alias("dim", "v"))
         .groupBy(group_col, "dim")
-        .agg(
-            (
-                F.aggregate(v_sorted, F.lit(0.0), lambda acc, x: acc + x)
-                / F.count(F.lit(1))
-            ).alias("avg_val")
-        )
+        .agg((F.expr(sorted_sum("v")) / F.count(F.lit(1))).alias("avg_val"))
     )
 
 

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.numeric import dsum
+from distgrep_spark.functions.numeric import dsum, sorted_sum
 from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.functions.textfns import (
     TOKENS_DUCK,
@@ -3102,8 +3102,7 @@ def q_embed_feature_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dim", "v"
         )
     )
-    v_sorted = "aggregate(sort_array(collect_list(v)), 0.0D, (a, x) -> a + x)"
-    v2_sorted = "aggregate(sort_array(collect_list(v * v)), 0.0D, (a, x) -> a + x)"
+    v_sorted, v2_sorted = sorted_sum("v"), sorted_sum("v * v")
     return per_dim.groupBy("dim").agg(
         F.expr("CAST(count(*) AS BIGINT) AS n"),
         F.expr(f"{v_sorted} / count(*) AS mean_val"),
@@ -3304,8 +3303,7 @@ def q_embed_mahalanobis_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dim0", "v"
         )
     )
-    v_sorted = "aggregate(sort_array(collect_list(v)), 0.0D, (a, x) -> a + x)"
-    v2_sorted = "aggregate(sort_array(collect_list(v * v)), 0.0D, (a, x) -> a + x)"
+    v_sorted, v2_sorted = sorted_sum("v"), sorted_sum("v * v")
     stats = per_dim.groupBy("dim0").agg(
         F.expr(f"{v_sorted} / count(*) AS mu"),
         F.expr(

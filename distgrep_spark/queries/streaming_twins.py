@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
 from distgrep_spark.streaming.stateful import (
+    _THROTTLE_TTL_US,
     CUSUM_TARGET_CENTS as _CUSUM_TARGET,
     CUSUM_THRESHOLD_CENTS as _CUSUM_THRESHOLD,
     cusum_alerts,
@@ -362,9 +363,9 @@ def q_stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowed_topk(counts, k=3)
 
 
-@query(
-    "stream_dedup_within_watermark",
-    oracle="""
+# The TTL-suppression dedup oracle, shared by the arrival-order and the
+# watermark-buffered twins: both batch paths are the same lag() window.
+_THROTTLE_ORACLE = f"""
     WITH g AS (
       SELECT event_id, user_id, event_type, ts,
              lag(ts) OVER (PARTITION BY user_id, event_type
@@ -374,9 +375,11 @@ def q_stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, user_id, event_type, ts
     FROM g
     WHERE prev_ts IS NULL
-       OR epoch_us(ts) - epoch_us(prev_ts) > 7200000000
-    """,
-)
+       OR epoch_us(ts) - epoch_us(prev_ts) > {_THROTTLE_TTL_US}
+    """
+
+
+@query("stream_dedup_within_watermark", oracle=_THROTTLE_ORACLE)
 def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TTL-keyed suppression dedup (round-6 verdict ask #4): emit a
     (user_id, event_type) event only when no same-key event occurred in
@@ -401,21 +404,7 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     return throttle_dedup(load_table(spark, sf_dir, "events"))
 
 
-@query(
-    "stream_dedup_eventtime",
-    oracle="""
-    WITH g AS (
-      SELECT event_id, user_id, event_type, ts,
-             lag(ts) OVER (PARTITION BY user_id, event_type
-                           ORDER BY ts, event_id) AS prev_ts
-      FROM events
-    )
-    SELECT event_id, user_id, event_type, ts
-    FROM g
-    WHERE prev_ts IS NULL
-       OR epoch_us(ts) - epoch_us(prev_ts) > 7200000000
-    """,
-)
+@query("stream_dedup_eventtime", oracle=_THROTTLE_ORACLE)
 def q_stream_dedup_eventtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time-DETERMINISTIC TTL-keyed suppression dedup (round-7
     verdict ask #2): same 2 h quiet-period semantics as

@@ -21,6 +21,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
@@ -52,8 +53,6 @@ def running_user_totals(df: DataFrame) -> DataFrame:
     per user must equal the batch aggregate.
     """
     if not df.isStreaming:
-        import pyspark.sql.functions as F
-
         return df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("total_value"),
@@ -216,8 +215,6 @@ def cusum_alerts(df: DataFrame) -> DataFrame:
     statistic is a running fold, not a window), checkpoint size is
     bounded; deviations fold map-side within each Arrow batch."""
     if not df.isStreaming:
-        import pyspark.sql.functions as F
-
         w = "PARTITION BY event_type ORDER BY ts, event_id"
         dev = df.selectExpr(
             "event_type",
@@ -274,12 +271,18 @@ def cusum_alerts(df: DataFrame) -> DataFrame:
 # (not the previous EMITTED one), which is exactly a lag() window in
 # batch — so the twin carries a full DuckDB oracle, where
 # first-occurrence-per-epoch semantics would need recursion.
+#
+# Both streaming machines below (decide-at-arrival and watermark-
+# buffered) share one emit rule (_suppress), one expiry rule (_live) and
+# one bucketed-stream builder (_throttle_stream); they differ only in
+# WHICH rows they decide per call and in their timer rules.
 THROTTLE_TTL_MINUTES = 120
 _THROTTLE_TTL_US = THROTTLE_TTL_MINUTES * 60 * 1_000_000
 
 THROTTLE_OUTPUT_SCHEMA = (
     "event_id bigint, user_id bigint, event_type string, ts timestamp"
 )
+_OUT_COLS = ["event_id", "user_id", "event_type", "ts"]
 # Bucketed state: the machine groups on a 256-way key HASH, not the key
 # itself, and each bucket's state holds parallel (key, last_us) arrays.
 # Rationale (measured): applyInPandasWithState pays per-GROUP pandas +
@@ -292,8 +295,65 @@ _THROTTLE_BUCKETS = 256
 _KEY_SEP = "\x1f"
 
 
+def _ttl_us(ttl_seconds: int | None) -> int:
+    return _THROTTLE_TTL_US if ttl_seconds is None else ttl_seconds * 1_000_000
+
+
+def _suppress(rows, us, carry: dict, ttl_us: int):
+    """The TTL emit rule over ``rows`` sorted by (user_id, event_type,
+    us, event_id), with ``us`` their epoch-µs times: returns the emit
+    mask and folds each key's max ``us`` into ``carry`` (key -> last_us).
+
+    The rule vectorizes BECAUSE suppression anchors on the previous RAW
+    same-key event: each row's anchor is its shift-predecessor when that
+    is the same key, else the carried last_us — one shift + compare, no
+    sequential fold (an emitted-anchored rule would need the loop back).
+    A row emits when it has no anchor or lies strictly more than
+    ``ttl_us`` past it."""
+    kser = rows["user_id"].astype(str) + _KEY_SEP + rows["event_type"]
+    anchor = us.shift(1).where(kser.eq(kser.shift(1)), kser.map(carry))
+    emit = anchor.isna() | ((us - anchor) > ttl_us)
+    for k, u in us.groupby(kser.values).max().items():
+        prev = carry.get(k)
+        carry[k] = int(u) if prev is None or u > prev else prev
+    return emit.values
+
+
+def _live(carry: dict, wm_us: int, ttl_us: int) -> dict:
+    """TTL expiry: a key whose last event is TTL past the watermark can
+    never suppress again (the next arrival emits regardless), so dropping
+    it is semantics-preserving. Before the first watermark (``wm_us`` 0)
+    nothing expires."""
+    if wm_us <= 0:
+        return carry
+    return {k: v for k, v in carry.items() if v + ttl_us >= wm_us}
+
+
+def _throttle_stream(
+    df: DataFrame, fn, state_schema: str, watermark: str
+) -> DataFrame:
+    """Run a throttle machine ``fn`` over a stream: group on a 256-way
+    hash of (user_id, event_type), event-time watermark on ``ts``,
+    append output with EventTimeTimeout timers."""
+    return (
+        df.withColumn(
+            "_bucket",
+            F.pmod(F.xxhash64("user_id", "event_type"), F.lit(_THROTTLE_BUCKETS)),
+        )
+        .withWatermark("ts", watermark)
+        .groupBy("_bucket")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=THROTTLE_OUTPUT_SCHEMA,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
 def _make_throttle_bucketed(ttl_us: int):
-    """Build the bucketed TTL state machine for a given TTL (µs).
+    """Build the bucketed decide-at-arrival TTL machine for a TTL (µs).
 
     A closure (not a module global) so short-horizon soaks — the churn
     ladder needs seconds-scale expiry — and the production 2 h default
@@ -301,61 +361,27 @@ def _make_throttle_bucketed(ttl_us: int):
     with its captured ttl_us."""
 
     def _throttle_bucketed(key, pdfs, state: GroupState):
-        """Vectorized TTL-suppression for one key bucket.
-
-        The emit rule vectorizes BECAUSE suppression anchors on the
-        previous RAW same-key event: sorted by (key, ts, event_id),
-        each row's anchor is its shift-predecessor when that is the
-        same key, else the state's last_us — one shift + compare, no
-        sequential fold (an emitted-anchored rule would need the loop
-        back)."""
+        """Decide every arriving row of one key bucket at once, then
+        re-arm the bucket's timer at its earliest future expiry so idle
+        buckets still shed state."""
         import pandas as pd
 
-        ks, last = state.get if state.exists else ([], [])
-        d = dict(zip(ks, last))
-        rows = None
-        if not state.hasTimedOut:
-            chunks = list(pdfs)
-            rows = pd.concat(chunks) if chunks else None
-        if rows is not None and len(rows):
-            rows = rows.sort_values(
-                ["user_id", "event_type", "ts", "event_id"]
-            )
+        carry = dict(zip(*state.get)) if state.exists else {}
+        chunks = [] if state.hasTimedOut else list(pdfs)
+        out = pd.DataFrame(columns=_OUT_COLS)
+        if chunks and len(rows := pd.concat(chunks)):
+            rows = rows.sort_values(["user_id", "event_type", "ts", "event_id"])
             us = pd.to_datetime(rows["ts"]).astype("int64") // 1000
-            kser = rows["user_id"].astype(str) + _KEY_SEP + rows["event_type"]
-            prev_us = us.shift(1)
-            same_key = kser.eq(kser.shift(1))
-            anchor = prev_us.where(same_key, kser.map(d))
-            emit = anchor.isna() | ((us - anchor) > ttl_us)
-            out = rows.loc[
-                emit.values, ["event_id", "user_id", "event_type", "ts"]
-            ]
-            for k, u in us.groupby(kser.values).max().items():
-                prev = d.get(k)
-                d[k] = int(u) if prev is None or u > prev else prev
-        else:
-            out = pd.DataFrame(
-                columns=["event_id", "user_id", "event_type", "ts"]
-            )
-        # TTL expiry: a key whose last event is TTL past the watermark
-        # can never suppress again (the next arrival emits regardless),
-        # so dropping it is semantics-preserving. The bucket re-arms its
-        # timer at the earliest future expiry so idle buckets still shed
-        # state.
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if wm_us > 0:
-            d = {k: v for k, v in d.items() if v + ttl_us >= wm_us}
-        if d:
-            state.update((list(d.keys()), list(d.values())))
-            state.setTimeoutTimestamp(min(d.values()) // 1000 + ttl_us // 1000)
+            out = rows.loc[_suppress(rows, us, carry, ttl_us), _OUT_COLS]
+        carry = _live(carry, state.getCurrentWatermarkMs() * 1000, ttl_us)
+        if carry:
+            state.update((list(carry), list(carry.values())))
+            state.setTimeoutTimestamp(min(carry.values()) // 1000 + ttl_us // 1000)
         elif state.exists:
             state.remove()
         yield out
 
     return _throttle_bucketed
-
-
-_throttle_bucketed = _make_throttle_bucketed(_THROTTLE_TTL_US)
 
 
 def throttle_dedup(
@@ -398,34 +424,10 @@ def throttle_dedup(
     ``stateful_dedup`` (dropDuplicatesWithinWatermark): exact
     per-event-id dedup, state == distinct ids in the watermark horizon,
     which at 800k rows/s was the round-5 measured ceiling."""
-    ttl_us = (
-        _THROTTLE_TTL_US if ttl_seconds is None else ttl_seconds * 1_000_000
-    )
+    ttl_us = _ttl_us(ttl_seconds)
     if df.isStreaming:
-        from pyspark.sql import functions as F
-
-        fn = (
-            _throttle_bucketed
-            if ttl_us == _THROTTLE_TTL_US
-            else _make_throttle_bucketed(ttl_us)
-        )
-        return (
-            df.withColumn(
-                "_bucket",
-                F.pmod(
-                    F.xxhash64("user_id", "event_type"),
-                    F.lit(_THROTTLE_BUCKETS),
-                ),
-            )
-            .withWatermark("ts", watermark)
-            .groupBy("_bucket")
-            .applyInPandasWithState(
-                fn,
-                outputStructType=THROTTLE_OUTPUT_SCHEMA,
-                stateStructType=THROTTLE_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
+        return _throttle_stream(
+            df, _make_throttle_bucketed(ttl_us), THROTTLE_STATE_SCHEMA, watermark
         )
     return (
         df.selectExpr(
@@ -465,8 +467,6 @@ BUFFERED_STATE_SCHEMA = (
     " buf_us array<long>, ks array<string>, last_us array<long>"
 )
 
-_EMPTY_OUT_COLS = ["event_id", "user_id", "event_type", "ts"]
-
 
 def _make_throttle_buffered(ttl_us: int):
     """Bucketed watermark-buffered TTL machine for a given TTL (µs).
@@ -482,7 +482,7 @@ def _make_throttle_buffered(ttl_us: int):
             b_eid, b_uid, b_et, b_us, ks, last = state.get
         else:
             b_eid, b_uid, b_et, b_us, ks, last = [], [], [], [], [], []
-        d = dict(zip(ks or [], last or []))
+        carry = dict(zip(ks or [], last or []))
         buf = pd.DataFrame(
             {
                 "event_id": pd.Series(list(b_eid or []), dtype="int64"),
@@ -505,46 +505,31 @@ def _make_throttle_buffered(ttl_us: int):
             buf = pd.concat([buf, add], ignore_index=True) if len(buf) else add
         wm_ms = state.getCurrentWatermarkMs()
         wm_us = wm_ms * 1000
-        out = pd.DataFrame(columns=_EMPTY_OUT_COLS)
-        if len(buf) and wm_us > 0:
-            # finalize STRICTLY-older-than-watermark rows: the watermark
-            # contract says no row with ts < wm can still arrive, so the
-            # event-time predecessor of every finalized row is either in
-            # this finalize set or already in the carry — the decision
-            # is final and order-free.
-            fin_mask = (buf["us"] < wm_us).values
-            if fin_mask.any():
-                fin = buf.loc[fin_mask].sort_values(
-                    ["user_id", "event_type", "us", "event_id"]
-                )
-                kser = (
-                    fin["user_id"].astype(str)
-                    + _KEY_SEP
-                    + fin["event_type"]
-                )
-                prev_us = fin["us"].shift(1)
-                same_key = kser.eq(kser.shift(1))
-                anchor = prev_us.where(same_key, kser.map(d))
-                emit = anchor.isna() | ((fin["us"] - anchor) > ttl_us)
-                out = fin.loc[emit.values, ["event_id", "user_id",
-                                            "event_type", "us"]].copy()
-                for k, u in fin.groupby(kser.values)["us"].max().items():
-                    prev = d.get(k)
-                    d[k] = int(u) if prev is None or u > prev else prev
-                buf = buf.loc[~fin_mask]
-        # carry expiry: same semantics-preserving TTL rule as the
-        # arrival-order machine
-        if wm_us > 0:
-            d = {k: v for k, v in d.items() if v + ttl_us >= wm_us}
-        if len(buf) or d:
+        out = pd.DataFrame(columns=_OUT_COLS)
+        # finalize STRICTLY-older-than-watermark rows: the watermark
+        # contract says no row with ts < wm can still arrive, so the
+        # event-time predecessor of every finalized row is either in
+        # this finalize set or already in the carry — the decision is
+        # final and order-free.
+        fin_mask = (buf["us"] < wm_us).values & (wm_us > 0)
+        if fin_mask.any():
+            fin = buf.loc[fin_mask].sort_values(
+                ["user_id", "event_type", "us", "event_id"]
+            )
+            out = fin.loc[_suppress(fin, fin["us"], carry, ttl_us)].assign(
+                ts=lambda o: pd.to_datetime(o["us"] * 1000)
+            )[_OUT_COLS]
+            buf = buf.loc[~fin_mask]
+        carry = _live(carry, wm_us, ttl_us)
+        if len(buf) or carry:
             state.update(
                 (
                     buf["event_id"].tolist(),
                     buf["user_id"].tolist(),
                     buf["event_type"].tolist(),
                     buf["us"].tolist(),
-                    list(d.keys()),
-                    list(d.values()),
+                    list(carry),
+                    list(carry.values()),
                 )
             )
             # wake when the watermark passes the earliest buffered row
@@ -554,21 +539,13 @@ def _make_throttle_buffered(ttl_us: int):
             if len(buf):
                 t_ms = int(buf["us"].min()) // 1000 + 1
             else:
-                t_ms = min(d.values()) // 1000 + ttl_us // 1000
+                t_ms = min(carry.values()) // 1000 + ttl_us // 1000
             state.setTimeoutTimestamp(max(t_ms, wm_ms + 1))
         elif state.exists:
             state.remove()
-        if len(out):
-            out = out.rename(columns={"us": "ts"})
-            out["ts"] = pd.to_datetime(out["ts"] * 1000)
-            yield out[_EMPTY_OUT_COLS]
-        else:
-            yield pd.DataFrame(columns=_EMPTY_OUT_COLS)
+        yield out
 
     return _throttle_buffered
-
-
-_throttle_buffered_default = _make_throttle_buffered(_THROTTLE_TTL_US)
 
 
 def throttle_dedup_eventtime(
@@ -607,33 +584,11 @@ def throttle_dedup_eventtime(
     SCALE.md's soak table (tools/soak_streaming.py buffered mode).
     Reference: server.go:176-191 groups before reducing — the same
     buffer-then-decide shape, here gated by event-time completeness."""
-    ttl_us = (
-        _THROTTLE_TTL_US if ttl_seconds is None else ttl_seconds * 1_000_000
+    if not df.isStreaming:
+        return throttle_dedup(df, watermark=watermark, ttl_seconds=ttl_seconds)
+    return _throttle_stream(
+        df,
+        _make_throttle_buffered(_ttl_us(ttl_seconds)),
+        BUFFERED_STATE_SCHEMA,
+        watermark,
     )
-    if df.isStreaming:
-        from pyspark.sql import functions as F
-
-        fn = (
-            _throttle_buffered_default
-            if ttl_us == _THROTTLE_TTL_US
-            else _make_throttle_buffered(ttl_us)
-        )
-        return (
-            df.withColumn(
-                "_bucket",
-                F.pmod(
-                    F.xxhash64("user_id", "event_type"),
-                    F.lit(_THROTTLE_BUCKETS),
-                ),
-            )
-            .withWatermark("ts", watermark)
-            .groupBy("_bucket")
-            .applyInPandasWithState(
-                fn,
-                outputStructType=THROTTLE_OUTPUT_SCHEMA,
-                stateStructType=BUFFERED_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return throttle_dedup(df, watermark=watermark, ttl_seconds=ttl_seconds)

@@ -713,6 +713,44 @@ def test_vector_kernels_live_only_in_similarity():
     assert copies == [], f"vector kernel copied outside operators/similarity.py: {copies}"
 
 
+def test_throttle_rule_lives_once():
+    """The TTL-suppression rule exists once, in streaming/stateful.py:
+    _suppress holds the only shift-predecessor anchor and
+    _throttle_stream the only 256-bucket key hash (both had been pasted
+    into the arrival-order and the watermark-buffered machines)."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    hits: dict[str, list[str]] = {".shift(1)": [], "F.lit(_THROTTLE_BUCKETS)": []}
+    for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        for i, line in enumerate(open(p), 1):
+            for marker, where in hits.items():
+                if marker in line:
+                    where.append(f"{os.path.relpath(p, pkg)}:{i}")
+    assert len(hits[".shift(1)"]) == 1, f"shift anchor pasted: {hits['.shift(1)']}"
+    assert len(hits["F.lit(_THROTTLE_BUCKETS)"]) == 1, (
+        f"bucketed stream pasted: {hits['F.lit(_THROTTLE_BUCKETS)']}"
+    )
+
+
+def test_sorted_sum_lives_only_in_numeric():
+    """The order-stable sorted-fold sum is spelled once, in
+    functions/numeric.sorted_sum (it had been pasted five times: four SQL
+    strings and one Python-lambda Column)."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    copies = sorted(
+        os.path.relpath(p, pkg)
+        for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+        if os.path.relpath(p, pkg) != os.path.join("functions", "numeric.py")
+        and "aggregate(sort_array(collect_list(" in open(p).read()
+    )
+    assert copies == [], f"sorted-fold sum copied outside functions/numeric.py: {copies}"
+
+
 def test_bench_normalized_baseline_is_committed_and_covers_registry():
     """The committed baseline must exist and cover the registry (minus
     queries newer than the last rebase - tracked by the note field);

@@ -14,6 +14,8 @@ from hypothesis import strategies as st
 
 from distgrep_spark.streaming.stateful import (
     THROTTLE_TTL_MINUTES,
+    _make_throttle_bucketed,
+    _make_throttle_buffered,
     throttle_dedup,
 )
 
@@ -67,14 +69,18 @@ def test_throttle_batch_matches_sequential_reference(spark, events):
 
 
 # ---------------------------------------------------------------------------
-# Event-time-deterministic (watermark-buffered) variant: the emitted set
-# must be a PURE FUNCTION of the delivered event set — equal to the same
-# sequential reference for ARBITRARY batch splits and arrival orders.
-# The bucketed state machine is driven directly through a simulated
+# The two streaming machines, driven directly through a simulated
 # applyInPandasWithState protocol (per-batch watermark advance computed
 # Spark-style from the max event time of the PREVIOUS batch, pre-filter
-# of sub-watermark late rows, EventTimeTimeout firing) — no Spark
+# of sub-watermark late rows, timeout reset per call, PySpark's
+# setTimeoutTimestamp checks, EventTimeTimeout firing) — no Spark
 # session per example, so hypothesis can actually sweep.
+#
+# Event-time-deterministic (watermark-buffered) machine: the emitted set
+# must be a PURE FUNCTION of the delivered event set — equal to the same
+# sequential reference for ARBITRARY batch splits and arrival orders.
+# Decide-at-arrival machine: equal to the reference for any batch split
+# of an EVENT-TIME-ORDERED arrival (throttle_dedup's contract).
 # ---------------------------------------------------------------------------
 
 _DELAY_MIN = 60
@@ -107,18 +113,21 @@ class _FakeState:
         return self._wm_ms_ref()
 
     def setTimeoutTimestamp(self, ms):
+        # PySpark 4.1.2 GroupState.setTimeoutTimestamp rejects these
+        if ms <= 0:
+            raise ValueError(f"timeout timestamp {ms} is not positive")
+        if ms < self._wm_ms_ref():
+            raise ValueError(f"timeout {ms} is older than the watermark")
         self.timeout_ms = ms
 
 
-def _drive_buffered(batches_minutes, ttl_minutes=THROTTLE_TTL_MINUTES):
-    """Feed (eid, uid, etype, minutes) batches through the buffered
-    machine with Spark's watermark protocol; returns (emitted_ids,
-    delivered_rows)."""
+def _drive(make, batches_minutes, ttl_minutes=THROTTLE_TTL_MINUTES):
+    """Feed (eid, uid, etype, minutes) batches through the machine that
+    ``make(ttl_us)`` builds, with Spark's watermark protocol; returns
+    (emitted_ids, delivered_rows)."""
     import pandas as pd
 
-    from distgrep_spark.streaming.stateful import _make_throttle_buffered
-
-    fn = _make_throttle_buffered(ttl_minutes * 60_000_000)
+    fn = make(ttl_minutes * 60_000_000)
     wm_ms = 0
     state = _FakeState(lambda: wm_ms)
     max_ts_ms = 0
@@ -127,6 +136,7 @@ def _drive_buffered(batches_minutes, ttl_minutes=THROTTLE_TTL_MINUTES):
 
     def invoke(rows, timed_out):
         state.hasTimedOut = timed_out
+        state.timeout_ms = None  # Spark resets the timeout every call
         pdfs = []
         if rows:
             pdfs = [pd.DataFrame(
@@ -180,7 +190,39 @@ def test_buffered_machine_matches_reference_for_any_batch_split(events, cuts):
     # flush row advances the final watermark past every real event
     flush_min = max((m for _, _, _, m in rows), default=0) + _DELAY_MIN + 10_000
     batches.append([(_FLUSH_ID, 99, "flush", flush_min)])
-    emitted, delivered = _drive_buffered(batches)
+    emitted, delivered = _drive(_make_throttle_buffered, batches)
     want = _reference([r for r in delivered if r[0] != _FLUSH_ID])
     assert emitted - {_FLUSH_ID} == want, (batches, emitted, want)
     assert _FLUSH_ID not in emitted  # stays buffered above the watermark
+
+
+# offsets on a 30-minute grid: same-key gaps of exactly the TTL (four
+# steps) and same-time ties are common instead of rare
+_GRID_EVENTS = st.lists(
+    st.tuples(
+        st.integers(0, 1), st.integers(0, 1), st.integers(0, 16).map(lambda k: 30 * k)
+    ),
+    min_size=1,
+    max_size=10,
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(events=_GRID_EVENTS, cuts=_SPLITS)
+def test_arrival_machine_matches_reference_for_event_time_ordered_splits(
+    events, cuts
+):
+    # event-time-ordered arrival (ties by event_id, the reference's
+    # order), cut into arbitrary batches; a trailing far-future row of a
+    # fresh key advances the watermark so every carry entry expires
+    rows = sorted(
+        ((i, u, f"t{t}", m) for i, (u, t, m) in enumerate(events)),
+        key=lambda r: (r[3], r[0]),
+    )
+    bounds = sorted({min(c, len(rows)) for c in cuts} | {0, len(rows)})
+    batches = [rows[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
+    flush_min = rows[-1][3] + _DELAY_MIN + 10_000
+    batches.append([(_FLUSH_ID, 99, "flush", flush_min)])
+    emitted, delivered = _drive(_make_throttle_bucketed, batches)
+    assert len(delivered) == len(rows) + 1  # nothing arrives late
+    assert emitted == _reference(rows) | {_FLUSH_ID}, (batches, emitted)

@@ -1,7 +1,10 @@
 """Dump .explain("formatted") for named queries to plans/<dir>/<name>_<tag>.txt.
 
 Usage: python tools/dump_plans.py <outdir> <tag> <query> [query ...]
-e.g.   python tools/dump_plans.py plans/r11 after kmeans_clusters
+e.g.   python tools/dump_plans.py plans/r12 after kmeans_clusters
+
+Retired dumps stay readable from history, e.g.
+git show 41a315b:plans/r11/kmeans_clusters_after.txt
 
 Run from ANY checkout (a worktree at an older commit produces the
 matching "before" plans). The judge checks plan claims against these
