@@ -179,9 +179,24 @@ def _drive(make, batches_minutes, ttl_minutes=THROTTLE_TTL_MINUTES):
 
 _SPLITS = st.lists(st.integers(0, 9), min_size=0, max_size=3)
 
+# offsets on a 30-minute grid: same-key gaps of exactly the TTL (four
+# steps) and same-time ties are common instead of rare
+_GRID_EVENTS = st.lists(
+    st.tuples(
+        st.integers(0, 1), st.integers(0, 1), st.integers(0, 16).map(lambda k: 30 * k)
+    ),
+    min_size=1,
+    max_size=10,
+)
 
-@settings(max_examples=60, deadline=None)
-@given(events=_EVENTS, cuts=_SPLITS)
+
+# half the examples come from each strategy: the uniform offsets cover
+# arbitrary gaps and the grid covers the exact-TTL boundary. An arbitrary
+# arrival order drops most rows as late, so few grid examples keep an
+# exact-TTL pair: a `>=` boundary mutant passed 2 of 11 fresh-database
+# runs at 60 examples, 1 of 10 at 120 and 0 of 12 at 250
+@settings(max_examples=250, deadline=None)
+@given(events=st.one_of(_EVENTS, _GRID_EVENTS), cuts=_SPLITS)
 def test_buffered_machine_matches_reference_for_any_batch_split(events, cuts):
     rows = [(i, u, f"t{t}", m) for i, (u, t, m) in enumerate(events)]
     # arbitrary batch split of the ARRIVAL order hypothesis chose
@@ -194,17 +209,6 @@ def test_buffered_machine_matches_reference_for_any_batch_split(events, cuts):
     want = _reference([r for r in delivered if r[0] != _FLUSH_ID])
     assert emitted - {_FLUSH_ID} == want, (batches, emitted, want)
     assert _FLUSH_ID not in emitted  # stays buffered above the watermark
-
-
-# offsets on a 30-minute grid: same-key gaps of exactly the TTL (four
-# steps) and same-time ties are common instead of rare
-_GRID_EVENTS = st.lists(
-    st.tuples(
-        st.integers(0, 1), st.integers(0, 1), st.integers(0, 16).map(lambda k: 30 * k)
-    ),
-    min_size=1,
-    max_size=10,
-)
 
 
 @settings(max_examples=60, deadline=None)

@@ -7,6 +7,9 @@ For each named query (default: the 40 slowest in BENCH_FULL.json), measure
   exec[k]  — wall of rep k's noop-sink write (codegen JIT lands in exec[0])
   jobs     — Spark jobs triggered during build + one exec (scheduler floor:
              each job is ~10-40 ms of fixed latency at fixture scale)
+  compiles — classes Janino compiled during build and per exec rep (a
+             warm rep whose classes stay in Spark's codegen cache
+             compiles 0)
 
 Usage:  python tools/profile_queries.py [name ...]
 Output: one line per query, sorted by median exec, TSV-ish.
@@ -26,7 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.timing import job_group, jobs, timed, warm  # noqa: E402
+from tools.timing import compiles, job_group, jobs, timed, warm  # noqa: E402
 
 
 def profile(spark, name: str, sf_dir: str, reps: int) -> dict:
@@ -35,14 +38,14 @@ def profile(spark, name: str, sf_dir: str, reps: int) -> dict:
     (see tools.timing.jobs)."""
     from distgrep_spark import queries as q
 
-    j0 = jobs(spark, name)
+    j0, c0 = jobs(spark, name), compiles(spark)
     with job_group(spark, name):
         t0 = time.perf_counter()
         df = q.QUERIES[name](spark, sf_dir)
         t_build = time.perf_counter() - t0
-    j_build = jobs(spark, name) - j0
+    j_build, c_build = jobs(spark, name) - j0, compiles(spark) - c0
     execs = [timed(spark, lambda *_: df, sf_dir, name) for _ in range(reps)]
-    j_total = jobs(spark, name) - j0
+    j_total, c_total = jobs(spark, name) - j0, compiles(spark) - c0
     med = sorted(execs)[len(execs) // 2]
     return dict(
         name=name,
@@ -52,6 +55,8 @@ def profile(spark, name: str, sf_dir: str, reps: int) -> dict:
         exec_med=round(med, 3),
         exec_min=round(min(execs), 3),
         jobs_per_exec=round((j_total - j_build) / reps, 1),
+        build_compiles=c_build,
+        compiles_per_exec=round((c_total - c_build) / reps, 1),
         total_med=round(t_build + med, 3),
     )
 
@@ -83,7 +88,8 @@ def main() -> None:
             f"{r['total_med']:7.3f} {name:40s} build={r['build']:6.3f} "
             f"(jobs={r['build_jobs']}) exec med={r['exec_med']:6.3f} "
             f"min={r['exec_min']:6.3f} first={r['exec0']:6.3f} "
-            f"jobs/exec={r['jobs_per_exec']}",
+            f"jobs/exec={r['jobs_per_exec']} compiles={r['build_compiles']}"
+            f"+{r['compiles_per_exec']}/exec",
             file=sys.stderr,
         )
 

@@ -6,6 +6,7 @@ tools/soak_prefix.py all time a query the same way:
     warm(spark, sf_dir)                         # once per session, unbilled
     secs = timed(spark, fn, sf_dir, name)       # per rep
     n = jobs(spark, name)                       # Spark jobs tagged ``name``
+    c = compiles(spark)                         # classes compiled so far
 
 ``timed`` builds ``fn(spark, sf_dir)`` and runs it through the ``noop``
 sink: every operator executes, no rows travel to the driver (collect()
@@ -74,6 +75,17 @@ def jobs(spark, name: str) -> int:
     # that has just finished is counted.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def compiles(spark) -> int:
+    """Classes the JVM has compiled with Janino since it started.
+
+    Every miss in Spark's generated-class cache compiles one class, so
+    the delta across a region is its codegen work; a region whose
+    classes are all cached compiles 0. The count is JVM-wide: it also
+    counts classes that concurrent jobs compile."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def timed(spark, fn, sf_dir: str, name: str) -> float:
