@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.pairs import cross_pairs, list_pairs, postings
 from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 
 # ---------------------------------------------------------------------------
@@ -110,21 +110,18 @@ def shingle_profiles(
     intersection count comes straight from the posting-list C(df,2)
     explode over profile grams — the LSH rollup pattern."""
     g = shingles(df, n=n, text_col=text_col, id_col=id_col)
-    doc_grams = g.groupBy(id_col).agg(F.sort_array(F.collect_set("gram")).alias("gs"))
+    doc_grams = postings(g, id_col, "gram", "gs")
     # prof fans out to 3 consumers (posting build, size/member
     # slices, same-profile expansion) — checkpoint the fan-out
     # point, not every stage (a mid-pipeline checkpoint serializes
     # branches that would otherwise run concurrently).
     prof = (
-        doc_grams.groupBy("gs")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("members"))
+        postings(doc_grams, "gs", id_col, "members")
         .selectExpr("members[0] AS pid", "gs", "members", "size(gs) AS n")
         .localCheckpoint(eager=False)
     )
     canon = (
-        prof.select("pid", F.explode("gs").alias("gram"))
-        .groupBy("gram")
-        .agg(F.sort_array(F.collect_set("pid")).alias("ps"))
+        postings(prof.select("pid", F.explode("gs").alias("gram")), "gram", "pid", "ps")
         .where(F.size("ps") >= 2)
         .selectExpr(f"explode({list_pairs('ps', 'x AS pa, y AS pb')}) AS p")
         .groupBy("p.pa", "p.pb")
@@ -189,11 +186,8 @@ def ngram_jaccard_pairs(
         # consumer (measured: the shuffle count doubles back to the
         # old plan's 15). Rows are (gram, <=max_df ids): the bounded
         # working set of the algorithm.
-        posts = (
-            g.join(rare, "gram")
-            .groupBy("gram")
-            .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("ds"))
-            .localCheckpoint(eager=False)
+        posts = postings(g.join(rare, "gram"), "gram", id_col, "ds").localCheckpoint(
+            eager=False
         )
         sizes = (
             posts.select(F.explode("ds").alias(id_col))
@@ -222,6 +216,7 @@ def ngram_jaccard_pairs(
         # score at the PROFILE level, then expand members carrying the
         # scalar jaccard (the dedup_embedding_cosine lesson: the
         # expansion shuffle moves scalars, never arrays).
+        pair = cross_pairs("ma", "mb", "least(x, y) AS doc_a, greatest(x, y) AS doc_b")
         cross = (
             scored.select(
                 "ma",
@@ -231,12 +226,7 @@ def ngram_jaccard_pairs(
                 ).alias("jaccard"),
             )
             .where(F.col("jaccard") >= threshold)
-            .selectExpr(
-                "explode(flatten(transform(ma, x ->"
-                " transform(mb, y -> struct(least(x, y) AS doc_a,"
-                " greatest(x, y) AS doc_b))))) AS d",
-                "jaccard",
-            )
+            .selectExpr(f"explode({pair}) AS d", "jaccard")
             .select("d.doc_a", "d.doc_b", "jaccard")
         )
         # same-profile members are identical gram sets: J = 1.0 by
@@ -373,25 +363,17 @@ def minhash_lsh_pairs(
     # Posting-list pairing, not a two-sided self-join: ONE shuffle of
     # the band rows (groupBy bkey), buckets of size 1 — the vast
     # majority — vanish before any pairing, and in-bucket ordered pairs
-    # explode from the id list (round-5 A/B at 1M docs: ~2x over the
+    # explode from the id set; bkey hashes the band index, so a doc
+    # sits in a bucket once (round-5 A/B at 1M docs: ~2x over the
     # bkey self-join, which itself was ~5x over the array-key join).
     # The per-bucket m^2 blowup shares the operator's documented
     # RUN-EXACT-DEDUP-FIRST precondition: after exact dedup, bucket
     # membership = near-dup cluster size; a bucket that breaks the
     # list-aggregate would have broken the join's pair output worse.
     cand = (
-        banded.groupBy("bkey")
-        .agg(F.collect_list(id_col).alias("ids"))
+        postings(banded, "bkey", id_col, "ids")
         .where(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, x -> transform("
-                    "filter(ids, y -> y > x), "
-                    "y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("p")
-        )
+        .selectExpr(f"explode({list_pairs('ids', 'x AS doc_a, y AS doc_b')}) AS p")
         .select("p.doc_a", "p.doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )

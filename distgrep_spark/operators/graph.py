@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.pairs import list_pairs, postings
 
 # Support floor of the part co-purchase graph: a pair is an edge only if
 # it was co-bought in at least this many orders.
@@ -97,19 +97,11 @@ def dedup_clusters(
 
 
 def part_baskets(li: DataFrame) -> DataFrame:
-    """(l_orderkey, ps): every order's parts, ``ps =
-    sort_array(collect_set(l_partkey))``. ONE order-keyed shuffle; the
-    partial sets double as the (order, part) dedup, so a part listed on
-    two lines of one order counts once.
-
-    ``ps`` is sorted and distinct, so ``functions/pairs.list_pairs``
-    over it emits every co-bought pair exactly once, value-ordered
-    (x < y)."""
-    return (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
+    """(l_orderkey, ps): every order's parts as a ``functions/pairs``
+    posting list, so a part listed on two lines of one order counts
+    once and ``list_pairs`` over ``ps`` emits every co-bought pair
+    exactly once, value-ordered (x < y)."""
+    return postings(li, "l_orderkey", "l_partkey", "ps")
 
 
 def copurchase_edges(li: DataFrame, *, directed: bool = False) -> DataFrame:

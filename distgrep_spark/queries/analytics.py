@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.numeric import dsum, sorted_sum
-from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.pairs import cross_pairs, list_pairs, postings
 from distgrep_spark.functions.textfns import (
     TOKENS_DUCK,
     ngrams_of_tokens,
@@ -746,21 +746,19 @@ def q_text_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orientations of a cross-profile pair, then every ordered pair
     # within a profile (identical gram sets: containment exactly 1.0).
     fwd = scored.where(5 * F.col("c") >= 4 * F.col("na")).selectExpr(
-        "explode(flatten(transform(ma, x ->"
-        " transform(mb, y -> struct(x AS doc_a, y AS doc_b))))) AS d",
+        f"explode({cross_pairs('ma', 'mb', 'x AS doc_a, y AS doc_b')}) AS d",
         "c AS n_common",
         "CAST(c AS DOUBLE) / CAST(na AS DOUBLE) AS containment",
     )
     rev = scored.where(5 * F.col("c") >= 4 * F.col("nb")).selectExpr(
-        "explode(flatten(transform(mb, x ->"
-        " transform(ma, y -> struct(x AS doc_a, y AS doc_b))))) AS d",
+        f"explode({cross_pairs('mb', 'ma', 'x AS doc_a, y AS doc_b')}) AS d",
         "c AS n_common",
         "CAST(c AS DOUBLE) / CAST(nb AS DOUBLE) AS containment",
     )
     same = prof.where(F.size("members") >= 2).selectExpr(
-        "explode(flatten(transform(members, x ->"
-        " transform(filter(members, y -> y != x),"
-        " y -> struct(x AS doc_a, y AS doc_b))))) AS d",
+        "explode(concat("
+        f" {list_pairs('members', 'x AS doc_a, y AS doc_b')},"
+        f" {list_pairs('members', 'y AS doc_a, x AS doc_b')})) AS d",
         "CAST(n AS BIGINT) AS n_common",
         "CAST(1.0 AS DOUBLE) AS containment",
     )
@@ -1044,11 +1042,7 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one map-side-combined pair rollup. deg = size(ns) falls out of
     # the same rollup (adj rows are distinct), so adj executes once
     # instead of three times; nbrs carries the fan-out checkpoint.
-    nbrs = (
-        adj.groupBy(F.col("s").alias("via"))
-        .agg(F.sort_array(F.collect_set("d")).alias("ns"))
-        .localCheckpoint(eager=False)
-    )
+    nbrs = postings(adj, F.col("s").alias("via"), "d", "ns").localCheckpoint(eager=False)
     deg = nbrs.select(
         F.col("via").alias("node"), F.expr("CAST(size(ns) AS BIGINT) AS dg")
     )

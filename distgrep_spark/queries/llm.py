@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.pairs import cross_pairs, list_pairs, postings
 from distgrep_spark.functions.textfns import (
     BPE_ISH_DUCK,
     TOKENS_DUCK,
@@ -1347,9 +1347,7 @@ def q_dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = (
-        docs.select(F.md5("text").alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        postings(docs.select(F.md5("text").alias("h"), "doc_id"), "h", "doc_id", "ids")
         .where(F.size("ids") >= 2)
         .selectExpr(f"explode({list_pairs('ids', 'x AS doc_a, y AS doc_b')}) AS p")
         .select("p.doc_a", "p.doc_b")
@@ -1612,7 +1610,7 @@ def q_pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     prof AS MATERIALIZED (
-      SELECT min(vec_id) AS pid, v, list(vec_id ORDER BY vec_id) AS members
+      SELECT min(vec_id) AS pid, v, list(DISTINCT vec_id ORDER BY vec_id) AS members
       FROM e GROUP BY v
     ),
     c AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
@@ -1695,8 +1693,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # did ~4096x the pair work at x64. Scoring stays at the profile
     # level so the expansion shuffles scalars, not vectors.
     prof = (
-        emb.groupBy("embedding")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("members"))
+        postings(emb, "embedding", "vec_id", "members")
         .selectExpr("members[0] AS pid", "embedding", "members")
         .localCheckpoint(eager=False)
     )
@@ -1725,6 +1722,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
+    pair = cross_pairs("ma", "mb", "least(x, y) AS vec_a, greatest(x, y) AS vec_b")
     cross = (
         x.join(y, ["cluster"])
         .where(F.col("pa") < F.col("pb"))
@@ -1739,9 +1737,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("cos_sim") >= 0.45)
         .selectExpr(
             "cluster",
-            "explode(flatten(transform(ma, p ->"
-            " transform(mb, q -> struct(least(p, q) AS vec_a,"
-            " greatest(p, q) AS vec_b))))) AS d",
+            f"explode({pair}) AS d",
             "cos_sim",
         )
         .select("cluster", "d.vec_a", "d.vec_b", "cos_sim")

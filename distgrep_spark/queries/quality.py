@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.pairs import list_pairs, postings
 from distgrep_spark.functions.textfns import (
     TOKENS_DUCK,
     ngrams_of_tokens,
@@ -1597,16 +1597,14 @@ def q_text_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines."""
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    per_gram = (
-        # Materialize the token array BEFORE the n-gram HOF — an inline
-        # tokens() re-runs the split regex at all 5 element_at sites per
-        # gram (textfns.ngrams_of_tokens docstring; measured 11.7 s ->
-        # 0.6 s for this explode at sf0.1).
-        docs.select("source", tokens(F.col("text")).alias("toks"))
-        .select("source", F.explode(ngrams_of_tokens(F.col("toks"), 5)).alias("gram"))
-        .groupBy("gram")
-        .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
+    # Materialize the token array BEFORE the n-gram HOF — an inline
+    # tokens() re-runs the split regex at all 5 element_at sites per
+    # gram (textfns.ngrams_of_tokens docstring; measured 11.7 s ->
+    # 0.6 s for this explode at sf0.1).
+    grams = docs.select("source", tokens(F.col("text")).alias("toks")).select(
+        "source", F.explode(ngrams_of_tokens(F.col("toks"), 5)).alias("gram")
     )
+    per_gram = postings(grams, "gram", "source", "srcs")
     # For each gram: every ordered source pair (a < b — srcs is sorted,
     # so pairing each element with its successors is exactly that) plus
     # TWO singleton markers per member, (s, NULL) and (NULL, s), so the

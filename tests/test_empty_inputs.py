@@ -71,6 +71,42 @@ def single_row_sf(spark, tmp_path_factory):
     return str(root)
 
 
+@pytest.fixture(scope="module")
+def all_dup_sf(tmp_path_factory):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path_factory.mktemp("all_dup_sf")
+    for t in TABLES:
+        rows = pq.read_table(f"{SF_SMALL}/{t}.parquet")
+        pq.write_table(pa.concat_tables([rows, rows]), root / f"{t}.parquet")
+    return str(root)
+
+
+def _duck(root):
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{root}/{t}.parquet'")
+    return con
+
+
+def _twin_mismatch(con, name, srows, scols):
+    """None when the DuckDB twin returns the same row multiset as Spark."""
+    from tools.check_oracles import only_float_noise, row_multiset
+
+    cur = con.execute(q.ORACLES[name])
+    dcols, drows = [d[0] for d in cur.description], cur.fetchall()
+    if sorted(scols) != sorted(dcols):
+        return f"columns {sorted(scols)} != {sorted(dcols)}"
+    if row_multiset(srows, scols) != row_multiset(drows, dcols) and not (
+        only_float_noise(srows, scols, drows, dcols)
+    ):
+        return f"{len(srows)} spark rows != {len(drows)} duckdb rows"
+    return None
+
+
 def test_scored_prefix_survives_single_row_input(spark, single_row_sf):
     """Degenerate one-row tables: the ANSI divide-by-zero hazard class
     (variance with n=1, OLS on one point, shares of a zero total).
@@ -131,30 +167,64 @@ def test_tokenizing_queries_match_twins_on_ragged_whitespace(spark, ragged_ws_sf
     documents without raising, and matches its DuckDB twin (one loop, as
     above): both engines must agree on the token rule, and a doc with zero
     tokens must not divide by zero."""
-    import duckdb
-
     from distgrep_spark.functions.textfns import TOKENS_DUCK
-    from tools.check_oracles import only_float_noise, row_multiset
 
     names = [n for n, sql in q.ORACLES.items() if TOKENS_DUCK in sql]
     assert len(names) >= 50
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{ragged_ws_sf}/{t}.parquet'")
+    con = _duck(ragged_ws_sf)
     failures = []
     for name in names:
         try:
             sdf = q.QUERIES[name](spark, ragged_ws_sf)
-            srows, scols = sdf.collect(), sdf.columns
-            cur = con.execute(q.ORACLES[name])
-            dcols, drows = [d[0] for d in cur.description], cur.fetchall()
+            why = _twin_mismatch(con, name, sdf.collect(), sdf.columns)
         except Exception as e:  # noqa: BLE001 - collecting a report
-            failures.append((name, str(e).splitlines()[0][:80]))
-            continue
-        if sorted(scols) != sorted(dcols):
-            failures.append((name, f"columns {sorted(scols)} != {sorted(dcols)}"))
-        elif row_multiset(srows, scols) != row_multiset(drows, dcols) and not (
-            only_float_noise(srows, scols, drows, dcols)
-        ):
-            failures.append((name, f"{len(srows)} spark rows != {len(drows)} duckdb rows"))
+            why = str(e).splitlines()[0][:80]
+        if why:
+            failures.append((name, why))
+    assert not failures, failures
+
+
+# Every query that builds a posting list through functions/pairs.postings
+# or pairs through cross_pairs, and the pair columns they emit.
+POSTING_QUERIES = [
+    "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_capped",
+    "dedup_minhash_lsh",
+    "dedup_minhash_recall",
+    "dedup_cross_corpus",
+    "dedup_cross_corpus_exact",
+    "dq_split_leakage_neardup",
+    "text_shingle_containment",
+    "dedup_clusters_cc",
+    "dedup_semdedup",
+    "graph_link_prediction",
+    "text_source_overlap_matrix",
+]
+PAIR_COLS = [
+    ("doc_a", "doc_b"), ("vec_a", "vec_b"), ("part_a", "part_b"), ("source_a", "source_b"),
+]
+
+
+def test_posting_queries_on_all_duplicate_input(spark, all_dup_sf):
+    """Every table unioned with itself: each member of a posting list
+    arrives twice. A list must still never pair a member with itself
+    (no row with equal pair columns), and the twins must agree. The
+    semdedup member list once kept the repeats on both engines and
+    paired every vector with itself."""
+    con = _duck(all_dup_sf)
+    failures = []
+    for name in POSTING_QUERIES:
+        try:
+            sdf = q.QUERIES[name](spark, all_dup_sf)
+            srows, scols = sdf.collect(), sdf.columns
+            self_pairs = [
+                r for r in srows for a, b in PAIR_COLS if a in scols and r[a] == r[b]
+            ]
+            why = f"{len(self_pairs)} self-pairs" if self_pairs else None
+            if not why and name in q.ORACLES:
+                why = _twin_mismatch(con, name, srows, scols)
+        except Exception as e:  # noqa: BLE001 - collecting a report
+            why = str(e).splitlines()[0][:80]
+        if why:
+            failures.append((name, why))
     assert not failures, failures

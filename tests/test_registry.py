@@ -649,6 +649,82 @@ def test_pair_fragment_lives_only_in_pairs():
     assert copies == [], f"pair fragment copied outside functions/pairs.py: {copies}"
 
 
+_POSTING_SPELLINGS = {
+    "posting list": re.compile(r"sort_array\((?:F\.)?collect_(?:set|list)\("),
+    "filter pairing": re.compile(r"filter\(\s*\w+\s*,\s*y\s*->\s*y\b"),
+    "cross expansion": re.compile(r"transform\(\s*\w+\s*,\s*\w+\s*->\s*transform\(\s*\w+\s*,"),
+}
+
+
+def _posting_sites(src: str) -> dict[tuple[str, str], int]:
+    """{(top-level def, spelling): count} of hand-built posting lists and
+    pair expansions in one module's code. ``ast.unparse`` merges adjacent
+    string literals, so a fragment split over lines is seen whole;
+    docstrings and decorators (the DuckDB twins) are dropped first."""
+    import ast
+    from collections import Counter
+
+    tree = ast.parse(src)
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if isinstance(body, list) and body and isinstance(body[0], ast.Expr):
+            if isinstance(body[0].value, ast.Constant) and isinstance(body[0].value.value, str):
+                node.body = body[1:] or [ast.Pass()]
+        if hasattr(node, "decorator_list"):
+            node.decorator_list = []
+    sites: Counter = Counter()
+    for stmt in tree.body:
+        code = ast.unparse(stmt)
+        for spelling, rx in _POSTING_SPELLINGS.items():
+            sites[(getattr(stmt, "name", "<module>"), spelling)] += len(rx.findall(code))
+    return {k: n for k, n in sites.items() if n}
+
+
+def test_posting_lists_live_only_in_pairs():
+    """Every posting list is built by functions/pairs.postings and paired
+    only by list_pairs / cross_pairs (10 lists, 4 cross expansions and 2
+    filter pairings had been written by hand). The allowlist names exact
+    sites: three ordered multisets (the sorted-fold sum and extras.py's
+    per-order quantity lists), where repeats are data, and the two
+    spark.sql texts that still spell their lists inline."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    allowed = {
+        ("functions/numeric.py", "sorted_sum", "posting list"): 1,
+        ("queries/extras.py", "q_scalar_array_fns", "posting list"): 1,
+        ("queries/extras.py", "q_scalar_map_fns", "posting list"): 1,
+        ("queries/rlhf.py", "q_rlhf_preference_curation", "posting list"): 1,
+        ("queries/llm.py", "q_dedup_simhash_radius_report", "posting list"): 3,
+    }
+    found = {}
+    for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(p, pkg).replace(os.sep, "/")
+        if rel != "functions/pairs.py":
+            for (site, spelling), n in _posting_sites(open(p).read()).items():
+                found[(rel, site, spelling)] = n
+    assert found == allowed
+
+
+def test_posting_lint_catches_seeded_copies():
+    seeded = '''
+@query("q", oracle="SELECT list_filter(ids, y -> y > 1)")
+def q_seeded(df):
+    """sort_array(collect_set(x)) in a docstring is prose."""
+    a = df.groupBy("k").agg(F.sort_array(F.collect_list("v")).alias("ids"))
+    b = a.selectExpr("explode(flatten(transform(ids, x -> transform("
+                     "filter(ids, y -> y > x), y -> struct(x, y)))))")
+    return b.selectExpr("flatten(transform(ma, p ->"
+                        " transform(mb, q -> struct(p, q))))")
+'''
+    assert _posting_sites(seeded) == {
+        ("q_seeded", "posting list"): 1,
+        ("q_seeded", "filter pairing"): 1,
+        ("q_seeded", "cross expansion"): 1,
+    }
+
+
 def test_tokenizer_lives_only_in_textfns():
     """The token rule is spelled once per engine, in functions/textfns.py
     (tokens / tokens_sql / TOKENS_DUCK); it had been pasted into 15 Spark
