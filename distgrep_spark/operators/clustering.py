@@ -14,11 +14,10 @@ over everything.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import col_lit
 from distgrep_spark.functions.numeric import sorted_sum
 from distgrep_spark.operators.similarity import as_double, l2sq
 
@@ -80,7 +79,7 @@ def _assign(
     vec_col: str,
     keep: list[str] | None = None,
 ) -> DataFrame:
-    cents_lit = F.from_json(F.lit(json.dumps(cents)), "array<array<double>>")
+    cents_lit = col_lit(cents, "array<array<double>>")
     keep = keep or []
     return (
         df.select(F.col(id_col), *keep, as_double(F.col(vec_col)).alias("_v"))
@@ -180,7 +179,7 @@ def kmeans(
         ).limit(0)
 
     def _argmin(cs: list[list[float]]):
-        cl = F.from_json(F.lit(json.dumps(cs)), "array<array<double>>")
+        cl = col_lit(cs, "array<array<double>>")
         d = F.transform(cl, lambda c: l2sq(F.col("_v"), c))
         return (F.array_position(d, F.array_min(d)) - 1).cast("int")
 

@@ -16,15 +16,15 @@ oracles (which use plain global windows) are unchanged:
    centroid / PQ codebook pulls (operators/clustering.py:99): O(B)
    scalars, never rows.
 2. **Map-side bucket assignment** — ``bucket = sum_i CAST(key > b_i)``
-   over the boundary array shipped as ONE ``from_json`` literal
-   (constant-folded; CLAUDE.md py4j-literal rule). Equal keys always land
-   in the same bucket, and bucket index is monotone along the target
-   order, so per-bucket windows + per-bucket offsets reconstruct the
-   EXACT global result regardless of how approximate the boundaries are —
-   boundary quality only affects balance, never values.
+   as a flat comparison sum over the boundaries (``bucket_expr``).
+   Equal keys always land in the same bucket, and bucket index is
+   monotone along the target order, so per-bucket windows + per-bucket
+   offsets reconstruct the EXACT global result regardless of how
+   approximate the boundaries are — boundary quality only affects
+   balance, never values.
 3. **Offset pass** — per-bucket aggregates (count / sum / max) are
    collected (<= B rows) and folded into *exclusive* prefix arrays on the
-   driver, re-shipped as one literal.
+   driver, re-shipped as one ``functions.literals.array_lit`` constant.
 4. **Final plan** — ``row_number()/sum()/max() OVER (PARTITION BY bucket
    ORDER BY ...)`` + ``element_at(offsets, bucket + 1)``. The window is
    hash-partitioned by bucket: distributed, AQE-splittable, no
@@ -51,30 +51,17 @@ order statistics at all — this module exists for the SURVEY §2.2 window
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "array_lit",
     "bucket_expr",
     "exclusive_prefixes",
     "ntile_expr",
     "percentile_boundaries",
 ]
-
-
-def array_lit(values: list[Any], sql_type: str) -> str:
-    """SQL fragment for a constant array shipped as ONE from_json literal.
-
-    ``None`` elements serialize as JSON null and read back as SQL NULL
-    (used by prefix-max, where "no prior bucket" is NULL). Values must be
-    numeric (no quoting issues).
-    """
-    payload = json.dumps(values)
-    return f"from_json('{payload}', 'array<{sql_type}>')"
 
 
 def percentile_boundaries(

@@ -57,11 +57,10 @@ LLM-pipeline north star (fastText/CCNet-style quality classifiers).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import array_lit, col_lit, local_table
 from distgrep_spark.functions.textfns import tokens_sql
 
 N_BUCKETS = 256
@@ -78,19 +77,13 @@ BUCKET_EXPR = (
 )
 
 
-def _wlit(w: list[int]) -> str:
-    """256 BIGINT micros as ONE constant-folded literal (the from_json
-    trick — element-wise F.lit costs ~2.4 s per 4096 values)."""
-    return f"from_json('{json.dumps(w)}', 'array<bigint>')"
-
-
 def _resid_expr(w: list[int]) -> str:
     """Map-side residual: y*1e6 minus the HOF fold of the broadcast
     weight table over the doc's own bucket set. Single-level lambda
     (nested HOF lambdas fall out of codegen — CLAUDE.md)."""
     return (
         f"CAST(y AS BIGINT) * {MICRO} - aggregate(bs, CAST(0 AS BIGINT),"
-        f" (acc, b) -> acc + element_at({_wlit(w)}, b + 1)) AS resid"
+        f" (acc, b) -> acc + element_at({array_lit(w, 'bigint')}, b + 1)) AS resid"
     )
 
 
@@ -100,7 +93,7 @@ def logit_expr(w: list[int]) -> str:
     shape as the residual, minus the label term."""
     return (
         f"aggregate(bs, CAST(0 AS BIGINT),"
-        f" (acc, b) -> acc + element_at({_wlit(w)}, b + 1)) AS logit_micros"
+        f" (acc, b) -> acc + element_at({array_lit(w, 'bigint')}, b + 1)) AS logit_micros"
     )
 
 
@@ -155,7 +148,7 @@ def final_epoch_plan(
     div = Q_ETA * n_docs
     w_prev = trajectory[-1]
     traj_cols = [
-        f"element_at({_wlit(wr)}, bucket + 1) AS w{i + 1}_micros"
+        f"element_at({array_lit(wr, 'bigint')}, bucket + 1) AS w{i + 1}_micros"
         for i, wr in enumerate(trajectory)
     ]
     return (
@@ -172,7 +165,7 @@ def final_epoch_plan(
             "n_docs",
             "n_pos",
             *traj_cols,
-            f"element_at({_wlit(w_prev)}, bucket + 1)"
+            f"element_at({array_lit(w_prev, 'bigint')}, bucket + 1)"
             f" + ((g + {MICRO * div}) DIV {div} - {MICRO})"
             f" AS w{len(trajectory) + 1}_micros",
         )
@@ -293,15 +286,8 @@ def loso_influence(docs: DataFrame, epochs: int = 3) -> DataFrame:
         # resid-to-buckets join shuffle, and its localCheckpoint
         # compiled every exchange into driver-blocking jobs at build
         # (24 jobs / ~3.1 s -> 9 jobs / ~1.7 s at sf0.1, r11).
-        wmap = F.from_json(
-            F.lit(
-                json.dumps(
-                    {
-                        h: [wb.get(b, 0) for b in range(N_BUCKETS)]
-                        for h, wb in w.items()
-                    }
-                )
-            ),
+        wmap = col_lit(
+            {h: [wb.get(b, 0) for b in range(N_BUCKETS)] for h, wb in w.items()},
             "map<string,array<bigint>>",
         )
         rep = (
@@ -309,11 +295,7 @@ def loso_influence(docs: DataFrame, epochs: int = 3) -> DataFrame:
                 "source",
                 "y",
                 "bs",
-                F.explode(
-                    F.from_json(
-                        F.lit(json.dumps(models)), "array<string>"
-                    )
-                ).alias("h"),
+                F.explode(col_lit(models, "array<string>")).alias("h"),
             )
             .where("h = '__full__' OR source <> h")
             # materialize the model's vector ONCE per (h, doc) row —
@@ -358,22 +340,10 @@ def loso_influence(docs: DataFrame, epochs: int = 3) -> DataFrame:
             l1 += abs(vf - vh)
             moved += 1 if vh != vf else 0
             flips += 1 if (vh > 0) != (vf > 0) else 0
-        out.append(
-            {
-                "heldout_source": h,
-                "n_docs_held": total_docs - nd[h],
-                "l1_shift_micros": l1,
-                "n_buckets_moved": moved,
-                "n_sign_flips": flips,
-            }
-        )
-    return spark.range(0, 1, 1, 1).select(
-        F.inline(
-            F.from_json(
-                F.lit(json.dumps(sorted(out, key=lambda r: r["heldout_source"]))),
-                "array<struct<heldout_source:string,n_docs_held:bigint,"
-                "l1_shift_micros:bigint,n_buckets_moved:bigint,"
-                "n_sign_flips:bigint>>",
-            )
-        )
+        out.append((h, total_docs - nd[h], l1, moved, flips))
+    return local_table(
+        spark,
+        sorted(out),
+        "heldout_source string, n_docs_held bigint, l1_shift_micros bigint,"
+        " n_buckets_moved bigint, n_sign_flips bigint",
     )

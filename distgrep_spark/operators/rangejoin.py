@@ -50,8 +50,8 @@ def count_greater_join(
     than the probe's. Returns ``keys + [n_greater]``, omitting probes
     with a zero count (inner-join semantics, matching the plain theta
     join + groupBy it replaces). ``keys`` must identify probe rows."""
+    from distgrep_spark.functions.literals import array_lit
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,

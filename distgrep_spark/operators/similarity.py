@@ -30,12 +30,12 @@ and the per-query top-k tail (``_topk``). The codebook pull is
 
 from __future__ import annotations
 
-import json
-
 import pandas as pd  # module-level: pandas_udf type hints resolve in module globals
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+
+from distgrep_spark.functions.literals import array_lit, col_lit
 
 # The global int8 grid (fixed scale 1/200, clamped to ±127, rounded
 # half-up) as a SQL fragment over the ``embedding`` column. One scale for
@@ -190,7 +190,7 @@ def ann_ivf_topk(
         corpus.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
     )
     cents = [[float(x) for x in r[vec_col]] for r in cent_rows]
-    cents_lit = F.from_json(F.lit(json.dumps(cents)), "array<array<double>>")
+    cents_lit = col_lit(cents, "array<array<double>>")
 
     c = (
         corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("_cv"))
@@ -246,19 +246,10 @@ def _hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
 
 def plane_dots(vec_name: str, planes: list[list[float]]) -> Column:
     """Array of dot products of the ``vec_name`` column against every
-    hyperplane.
-
-    The planes ship as ONE string literal parsed by ``from_json``: a
-    4096-float nested ``F.lit`` costs ~2.4 s of element-wise py4j
-    round-trips at plan-build time (measured), while a JSON literal is
-    one call — and Catalyst constant-folds the deterministic
-    ``from_json(literal)`` to a plain array literal, so runtime cost is
-    identical (verified via explain). The whole expression is one
-    ``F.expr`` string for the same reason: plan construction is driver
-    py4j traffic, not Catalyst work."""
-    planes_json = json.dumps(planes)
+    hyperplane, built as one ``F.expr`` string: plan construction is
+    driver py4j traffic, not Catalyst work."""
     return F.expr(
-        f"transform(from_json('{planes_json}', 'array<array<double>>'), "
+        f"transform({array_lit(planes, 'array<double>')}, "
         f"p -> aggregate(zip_with({vec_name}, p, (x, y) -> x * y), "
         "0.0D, (acc, v) -> acc + v))"
     )

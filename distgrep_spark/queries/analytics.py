@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import array_lit, local_table
 from distgrep_spark.functions.numeric import dsum, sorted_sum
 from distgrep_spark.functions.pairs import cross_pairs, list_pairs, postings
 from distgrep_spark.functions.textfns import (
@@ -564,7 +565,6 @@ def q_orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Companion ``orders_rfm_quartiles`` keeps the approximate-boundary
     map-side-assignment variant (no rank at all)."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         ntile_expr,
     )
@@ -1476,7 +1476,6 @@ def q_part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     window anywhere. Exactness is boundary-independent (the unchanged
     quadratic-free oracle certifies it)."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,
@@ -2250,7 +2249,6 @@ def q_part_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame
     Exchange SinglePartition; the unchanged global-window oracle
     certifies exactness."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,
@@ -2941,7 +2939,6 @@ def q_orders_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-dependent; no Exchange SinglePartition over the rollup. The
     unchanged global-window oracle certifies exactness."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,
@@ -4121,7 +4118,6 @@ def q_orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver passes per period, and a key-partitioned full-outer join —
     nothing funnels through one task as customers grow."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,
@@ -4491,7 +4487,8 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = [
         (o, v, rel, red, 3 * rel - red) for (o, v, rel, red) in picked
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         out,
         "pick_order bigint, vec_id bigint, rel bigint,"
         " redundancy bigint, mmr_score bigint",
@@ -4559,7 +4556,6 @@ def q_orders_fsegment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned self-join on customer for the matrix; output is
     <= 36 cells."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         ntile_expr,
         percentile_boundaries,

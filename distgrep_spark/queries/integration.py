@@ -55,11 +55,10 @@ LLM-pipeline surface.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import array_lit, local_table
 from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.operators.similarity import INT8_GRID, int_l2sq
 from distgrep_spark.queries.analytics import _ER_RECS_SQL
@@ -439,7 +438,6 @@ def q_corpus_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile grouped by source) — the machinery is
     composition-ready, the shipped plan shows the pooled side."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,
@@ -1033,28 +1031,15 @@ def _bt_iters(spark: SparkSession, sf_dir: str, k: int):
             for b, os in dirs.items()
         }
 
-    def _tbl(d: dict, names: list[str], typ: str) -> DataFrame:
-        # ONE from_json literal + inline: pure-JVM constant-folded
-        # local relation, one partition. createDataFrame here would be
-        # a Python-pickled RDD that pays a Python-worker launch PER
-        # TASK PER EVALUATION (measured ~0.6 s/stage).
-        data = [
-            dict(zip(names, [b, *v] if isinstance(v, tuple) else [b, v]))
-            for b, v in sorted(d.items())
-        ]
-        return spark.range(0, 1, 1, 1).select(
-            F.inline(F.from_json(F.lit(json.dumps(data)), typ))
-        )
-
-    tot = _tbl(
-        tot_py,
-        ["b", "n_i", "wins_i"],
-        "array<struct<b:string,n_i:bigint,wins_i:bigint>>",
+    tot = local_table(
+        spark,
+        [(b, *v) for b, v in sorted(tot_py.items())],
+        "b string, n_i bigint, wins_i bigint",
     )
-    u_typ = "array<struct<b:string,u:bigint>>"
-    u0 = _tbl(u0_py, ["b", "u"], u_typ)
-    prev = _tbl(prev_py, ["b", "u"], u_typ)
-    u = _tbl(u_py, ["b", "u"], u_typ)
+    u0, prev, u = (
+        local_table(spark, sorted(d.items()), "b string, u bigint")
+        for d in (u0_py, prev_py, u_py)
+    )
     return tot, u0, prev, u
 
 

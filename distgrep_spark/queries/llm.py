@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import array_lit, col_lit, local_table
 from distgrep_spark.functions.pairs import cross_pairs, list_pairs, postings
 from distgrep_spark.functions.textfns import (
     BPE_ISH_DUCK,
@@ -675,13 +676,8 @@ def q_text_quality_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: massimostanzione/distgrep has no scoring operators
     (worker.go:24-43); this is the brief's LLM-pipeline surface."""
-    import json
-
-
     docs = load_table(spark, sf_dir, "documents")
-    wlit = (
-        f"from_json('{json.dumps(_QLIN_W)}', 'array<bigint>')"
-    )
+    wlit = array_lit(_QLIN_W, "bigint")
     toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     feats = toks.selectExpr(
         "doc_id",
@@ -1434,15 +1430,13 @@ def q_kmeans_assign_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     UPDATE step re-averages floats, but its per-round assignment is
     exactly this oracle-checked operator (measured 500/500 agreement at
     sf0.01)."""
-    import json
-
     from distgrep_spark.operators.clustering import assign_to_centroids, codebook
 
     emb = load_table(spark, sf_dir, "embeddings")
     # the oracle's `WHERE vec_id < 16` codebook; the assignment's list
     # INDEX maps back to the centroid's vec_id, the oracle's `cid`
     ids, cents = codebook(emb, 16)
-    cent_ids = F.from_json(F.lit(json.dumps(ids)), "array<bigint>")
+    cent_ids = col_lit(ids, "array<bigint>")
     assigned = assign_to_centroids(emb, cents)
     return assigned.select(
         "vec_id",
@@ -1566,7 +1560,6 @@ def q_pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document. No Exchange SinglePartition; the unchanged
     global-window oracle certifies the bucketed cumsum exactly."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,
@@ -1676,14 +1669,12 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: massimostanzione/distgrep has no embedding operators
     (worker.go:24-43 is grep-only); this is the brief's LLM-pipeline
     extension surface."""
-    import json
-
     from distgrep_spark.operators.clustering import assign_to_centroids, codebook
     from distgrep_spark.operators.similarity import as_double, cos_normed, norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     ids, cents = codebook(emb, 16)
-    cent_ids = F.from_json(F.lit(json.dumps(ids)), "array<bigint>")
+    cent_ids = col_lit(ids, "array<bigint>")
     # Profile collapse (round 8, the ngram_jaccard_pairs redesign
     # applied to vectors): bit-identical embeddings — 64 coincident
     # copies of every vector on the x64 corpus, mirrored/boilerplate
@@ -2785,8 +2776,8 @@ def q_text_bpe_train_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = cur.selectExpr(
             "doc_id", _bpe_step_expr(a, b)
         ).localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, "merge_rank bigint, pair_a string, pair_b string, n bigint"
+    return local_table(
+        spark, merges, "merge_rank bigint, pair_a string, pair_b string, n bigint"
     )
 
 

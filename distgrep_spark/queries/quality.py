@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import array_lit
 from distgrep_spark.functions.pairs import list_pairs, postings
 from distgrep_spark.functions.textfns import (
     TOKENS_DUCK,
@@ -1694,7 +1695,6 @@ def q_events_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     order-free; the unchanged global-window oracle certifies the
     bucketed form exactly."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,

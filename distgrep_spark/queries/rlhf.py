@@ -24,11 +24,10 @@ stage on keys that stay bounded (digests, grams, |sources|² matrices,
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import local_table
 from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
 from distgrep_spark.operators.similarity import INT8_GRID
@@ -506,19 +505,11 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for d in rel
     ]
-    # one from_json literal, not createDataFrame: a Python-pickled
-    # local RDD pays a Python-worker launch per task per evaluation
-    # (measured ~0.6 s/stage on the BT kernel); the literal
-    # constant-folds into a pure-JVM local relation (r11)
-    pick_cols = ["doc_id", "rel_rank", "pick_order", "redundancy", "mmr_score"]
-    picks = spark.range(0, 1, 1, 1).select(
-        F.inline(
-            F.from_json(
-                F.lit(json.dumps([dict(zip(pick_cols, r)) for r in pick_rows])),
-                "array<struct<doc_id:bigint,rel_rank:bigint,"
-                "pick_order:bigint,redundancy:bigint,mmr_score:bigint>>",
-            )
-        )
+    picks = local_table(
+        spark,
+        pick_rows,
+        "doc_id bigint, rel_rank bigint, pick_order bigint, redundancy bigint,"
+        " mmr_score bigint",
     )
 
     return (

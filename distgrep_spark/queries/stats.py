@@ -80,6 +80,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import array_lit
 from distgrep_spark.operators.graph import copurchase_edges
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
@@ -1416,7 +1417,6 @@ def q_stats_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin is the plain global window — the same exactness certificate as
     orders_gini_spend."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,
@@ -2337,7 +2337,6 @@ def q_stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable conditional-min aggregate — sequential
     semantics without a sequential executor."""
     from distgrep_spark.operators.distrank import (
-        array_lit,
         bucket_expr,
         exclusive_prefixes,
         percentile_boundaries,

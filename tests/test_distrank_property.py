@@ -12,8 +12,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from distgrep_spark.functions.literals import array_lit
 from distgrep_spark.operators.distrank import (
-    array_lit,
     bucket_expr,
     exclusive_prefixes,
     ntile_expr,

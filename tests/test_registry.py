@@ -725,6 +725,57 @@ def q_seeded(df):
     }
 
 
+_LITERAL_SPELLINGS = {
+    "json.dumps": re.compile(r"json\.dumps\("),
+    "createDataFrame": re.compile(r"createDataFrame\("),
+    "one-row range": re.compile(r"range\(\s*0\s*,\s*1\s*,\s*1\s*,\s*1\s*\)"),
+}
+
+
+def _literal_sites(rel: str, src: str) -> dict[str, int]:
+    """{spelling: count} of driver-value-to-plan spellings in one package
+    module. functions/literals.py is their home; sources/jsonl_sink.py
+    may json.dumps the rows it writes to output files."""
+    if rel == "functions/literals.py":
+        return {}
+    allowed = {"json.dumps"} if rel == "sources/jsonl_sink.py" else set()
+    sites = {s: len(rx.findall(src)) for s, rx in _LITERAL_SPELLINGS.items() if s not in allowed}
+    return {s: n for s, n in sites.items() if n}
+
+
+def test_driver_literals_live_only_in_literals():
+    """Every driver-computed constant enters a plan through
+    functions/literals (array_lit, col_lit, local_table); the from_json
+    literal and the one-row inline table had been written by hand in 15
+    places, two of them as a Python-pickled createDataFrame."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    found = {}
+    for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(p, pkg).replace(os.sep, "/")
+        for spelling, n in _literal_sites(rel, open(p).read()).items():
+            found[(rel, spelling)] = n
+    assert found == {}
+
+
+def test_literal_lint_catches_seeded_copies():
+    seeded = """
+def q_seeded(spark, cents, rows):
+    c = F.from_json(F.lit(json.dumps(cents)), "array<array<double>>")
+    t = spark.range(0, 1, 1, 1).select(F.inline(F.from_json(F.lit(json.dumps(rows)), T)))
+    return spark.createDataFrame(rows, "a bigint").crossJoin(t).select(c)
+"""
+    everything = {"json.dumps": 2, "createDataFrame": 1, "one-row range": 1}
+    assert _literal_sites("queries/seeded.py", seeded) == everything
+    assert _literal_sites("sources/jsonl_sink.py", seeded) == {
+        "createDataFrame": 1,
+        "one-row range": 1,
+    }
+    assert _literal_sites("functions/literals.py", seeded) == {}
+
+
 def test_tokenizer_lives_only_in_textfns():
     """The token rule is spelled once per engine, in functions/textfns.py
     (tokens / tokens_sql / TOKENS_DUCK); it had been pasted into 15 Spark
