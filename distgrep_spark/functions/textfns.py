@@ -49,9 +49,10 @@ def tokens(col: Column) -> Column:
     return F.regexp_extract_all(col, F.lit(_TOKEN_RX), 0)
 
 
-def tokens_sql(col: str = "text") -> str:
-    """``tokens`` as a Spark SQL fragment, for selectExpr / spark.sql."""
-    return f"regexp_extract_all({col}, '{_TOKEN_RX_SQL}', 0)"
+def tokens_sql() -> str:
+    """``tokens`` of the ``text`` column as a Spark SQL fragment, for
+    selectExpr / spark.sql."""
+    return f"regexp_extract_all(text, '{_TOKEN_RX_SQL}', 0)"
 
 
 def token_count(col: Column) -> Column:

@@ -32,12 +32,7 @@ from distgrep_spark.operators.similarity import as_double, l2sq
 _MAX_CODEBOOK_CELLS = 1 << 20
 
 
-def centroids_by(
-    df: DataFrame,
-    group_col: str = "label",
-    *,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroids_by(df: DataFrame, group_col: str = "label") -> DataFrame:
     """Long-form per-group centroids: (group, dim, avg_val) — one row
     per dimension so the oracle is a plain posexplode/unnest + avg.
 
@@ -47,7 +42,7 @@ def centroids_by(
     the last ulp. Folding in canonical ascending order makes both
     engines execute the identical sequence of IEEE additions."""
     return (
-        df.select(group_col, F.posexplode(as_double(F.col(vec_col))).alias("dim", "v"))
+        df.select(group_col, F.posexplode(as_double(F.col("embedding"))).alias("dim", "v"))
         .groupBy(group_col, "dim")
         .agg((F.expr(sorted_sum("v")) / F.count(F.lit(1))).alias("avg_val"))
     )
@@ -125,8 +120,6 @@ def kmeans(
     *,
     k: int,
     max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd k-means: returns (id, cluster) with cluster in [0, k).
 
@@ -166,17 +159,13 @@ def kmeans(
     2.9 s); this form keeps the one-job round at one argmin pass
     (2.7 s, and at 100 TB each round saves a full distance pass over
     the corpus)."""
-    init = (
-        df.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    )
-    cents = [[float(x) for x in r[vec_col]] for r in init]
+    init = df.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
+    cents = [[float(x) for x in r["embedding"]] for r in init]
     if not cents:
         # empty input: no centroids to seed — degrade to an empty,
         # schema-stable result (the reference's empty-input discipline,
         # server.go:154-156; without this guard cents[0] IndexErrors)
-        return df.select(
-            F.col(id_col), F.lit(0).cast("int").alias("cluster")
-        ).limit(0)
+        return df.select(F.col("vec_id"), F.lit(0).cast("int").alias("cluster")).limit(0)
 
     def _argmin(cs: list[list[float]]):
         cl = col_lit(cs, "array<array<double>>")
@@ -193,7 +182,7 @@ def kmeans(
         )
     for _ in range(max_iter):
         rows = (
-            df.select(as_double(F.col(vec_col)).alias("_v"))
+            df.select(as_double(F.col("embedding")).alias("_v"))
             .withColumn("_c", _argmin(cents))
             .select("_c", F.posexplode("_v").alias("dim", "v"))
             .groupBy("_c", "dim")
@@ -216,4 +205,4 @@ def kmeans(
     # Converged: `cents` is the fixpoint table. Ran out of budget:
     # `cents` is C_max_iter (the classic loop's final assigned =
     # A(C_max_iter)). Either way the result is one map-side pass.
-    return _assign(df, cents, id_col, vec_col).select(id_col, "cluster")
+    return _assign(df, cents, "vec_id", "embedding").select("vec_id", "cluster")

@@ -34,23 +34,23 @@ from distgrep_spark.functions.textfns import ngrams_of_tokens, tokens
 # ---------------------------------------------------------------------------
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """One row per distinct text: the min-id representative + copy count.
 
     ``min(id)`` (not ``dropDuplicates``) so the survivor is deterministic —
     dropDuplicates keeps an arbitrary partition-order-dependent row, which
     would be irreproducible run to run."""
-    return df.groupBy(text_col).agg(
-        F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies")
+    return df.groupBy("text").agg(
+        F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies")
     )
 
 
-def dedup_by_hash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_by_hash(df: DataFrame) -> DataFrame:
     """Exact dedup keyed on md5(text): shuffles digests, not documents."""
     return (
-        df.select(id_col, F.md5(F.col(text_col)).alias("text_md5"))
+        df.select("doc_id", F.md5(F.col("text")).alias("text_md5"))
         .groupBy("text_md5")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -62,8 +62,6 @@ def dedup_by_hash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 def shingles(
     df: DataFrame,
     n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     distinct: bool = True,
 ) -> DataFrame:
@@ -74,16 +72,14 @@ def shingles(
     docstring). ``distinct=False`` skips the dedup shuffle for consumers
     that are invariant to repeated shingles (MinHash: min over a multiset
     equals min over its support)."""
-    toks = df.select(id_col, tokens(F.col(text_col)).alias("_toks"))
-    g = toks.select(id_col, F.explode(ngrams_of_tokens(F.col("_toks"), n)).alias("gram"))
+    toks = df.select("doc_id", tokens(F.col("text")).alias("_toks"))
+    g = toks.select("doc_id", F.explode(ngrams_of_tokens(F.col("_toks"), n)).alias("gram"))
     return g.distinct() if distinct else g
 
 
 def shingle_profiles(
     df: DataFrame,
     n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> tuple[DataFrame, DataFrame]:
     """PROFILE COLLAPSE + posting-list intersection counts: the shared
     front half of the uncapped Jaccard and the containment scorers.
@@ -109,14 +105,14 @@ def shingle_profiles(
     never-join-on-arrays lesson is about join compares). The
     intersection count comes straight from the posting-list C(df,2)
     explode over profile grams — the LSH rollup pattern."""
-    g = shingles(df, n=n, text_col=text_col, id_col=id_col)
-    doc_grams = postings(g, id_col, "gram", "gs")
+    g = shingles(df, n=n)
+    doc_grams = postings(g, "doc_id", "gram", "gs")
     # prof fans out to 3 consumers (posting build, size/member
     # slices, same-profile expansion) — checkpoint the fan-out
     # point, not every stage (a mid-pipeline checkpoint serializes
     # branches that would otherwise run concurrently).
     prof = (
-        postings(doc_grams, "gs", id_col, "members")
+        postings(doc_grams, "gs", "doc_id", "members")
         .selectExpr("members[0] AS pid", "gs", "members", "size(gs) AS n")
         .localCheckpoint(eager=False)
     )
@@ -138,8 +134,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via shingle inverted index.
 
@@ -160,7 +154,7 @@ def ngram_jaccard_pairs(
     wall; an AllPairs-prefix variant was A/B-rejected, see the branch
     comment). Only the final member expansion is output-bound."""
     if max_df is not None:
-        g = shingles(df, n=n, text_col=text_col, id_col=id_col)
+        g = shingles(df, n=n)
         # Posting-list plan: the per-gram doc list is built ONLY for
         # sub-cap grams, and pairs explode in-list (bounded by
         # max_df^2 per gram — the market_basket_lift pattern). The df
@@ -186,12 +180,12 @@ def ngram_jaccard_pairs(
         # consumer (measured: the shuffle count doubles back to the
         # old plan's 15). Rows are (gram, <=max_df ids): the bounded
         # working set of the algorithm.
-        posts = postings(g.join(rare, "gram"), "gram", id_col, "ds").localCheckpoint(
+        posts = postings(g.join(rare, "gram"), "gram", "doc_id", "ds").localCheckpoint(
             eager=False
         )
         sizes = (
-            posts.select(F.explode("ds").alias(id_col))
-            .groupBy(id_col)
+            posts.select(F.explode("ds").alias("doc_id"))
+            .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_grams"))
         )
         common = (
@@ -212,7 +206,7 @@ def ngram_jaccard_pairs(
         # (a hub gram's C(df,2) explode is exactly what the cap exists
         # to bound; an uncapped EXACT baseline must pay it in any
         # algorithm).
-        prof, scored = shingle_profiles(df, n, text_col, id_col)
+        prof, scored = shingle_profiles(df, n)
         # score at the PROFILE level, then expand members carrying the
         # scalar jaccard (the dedup_embedding_cosine lesson: the
         # expansion shuffle moves scalars, never arrays).
@@ -241,8 +235,8 @@ def ngram_jaccard_pairs(
         )
         return cross.unionByName(same)
     return (
-        common.join(sizes.select(F.col(id_col).alias("doc_a"), F.col("n_grams").alias("na")), "doc_a")
-        .join(sizes.select(F.col(id_col).alias("doc_b"), F.col("n_grams").alias("nb")), "doc_b")
+        common.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_grams").alias("na")), "doc_a")
+        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_grams").alias("nb")), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -262,8 +256,6 @@ def minhash_signatures(
     *,
     n: int = 3,
     num_hashes: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(id, sig: array<bigint>) — sig[i] = min over shingles of
     xxhash64(seed=i, xxhash64(gram)). TWO-LEVEL hashing (round 4): the
@@ -282,13 +274,13 @@ def minhash_signatures(
     (measured), SQL strings cost milliseconds. Seeds stay plain int
     literals (CLAUDE.md xxhash64 seed-type gotcha); signatures remain
     deterministic and partition-layout-independent."""
-    g = shingles(df, n=n, text_col=text_col, id_col=id_col, distinct=False)
-    gh = g.select(id_col, F.expr("xxhash64(gram) AS gh"))
-    mins = gh.groupBy(id_col).agg(
+    g = shingles(df, n=n, distinct=False)
+    gh = g.select("doc_id", F.expr("xxhash64(gram) AS gh"))
+    mins = gh.groupBy("doc_id").agg(
         *[F.expr(f"min(xxhash64({i}, gh)) AS h{i}") for i in range(num_hashes)]
     )
     sig = ", ".join(f"h{i}" for i in range(num_hashes))
-    return mins.selectExpr(id_col, f"array({sig}) AS sig")
+    return mins.selectExpr("doc_id", f"array({sig}) AS sig")
 
 
 def minhash_lsh_pairs(
@@ -298,8 +290,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     min_est_jaccard: float | None = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH.
 
@@ -330,9 +320,7 @@ def minhash_lsh_pairs(
     # across branches; materializing |docs| x (k longs) (~10 MB at
     # sf0.1) beats re-running the shingle explode + 64 min-aggregates
     # per branch.
-    sigs = minhash_signatures(
-        df, n=n, num_hashes=num_hashes, text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=False)
+    sigs = minhash_signatures(df, n=n, num_hashes=num_hashes).localCheckpoint(eager=False)
     # The band join carries ONLY (id, bkey): routing the 64-long
     # signature array through the banding explode would replicate it
     # x16 per side into the join shuffle (~8 KB/doc, measured round 4);
@@ -352,7 +340,7 @@ def minhash_lsh_pairs(
     # gate's exact side) filters — the same argument as the two-level
     # gram hashing above. Deterministic and layout-independent.
     banded = sigs.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -371,14 +359,14 @@ def minhash_lsh_pairs(
     # membership = near-dup cluster size; a bucket that breaks the
     # list-aggregate would have broken the join's pair output worse.
     cand = (
-        postings(banded, "bkey", id_col, "ids")
+        postings(banded, "bkey", "doc_id", "ids")
         .where(F.size("ids") > 1)
         .selectExpr(f"explode({list_pairs('ids', 'x AS doc_a, y AS doc_b')}) AS p")
         .select("p.doc_a", "p.doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sa = sigs.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"))
+    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     est = cand.join(sa, "doc_a").join(sb, "doc_b").select(
         "doc_a",
         "doc_b",
@@ -400,9 +388,7 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash as a single LONG (bit i = sign of per-bit sum).
 
     Per token: xxhash64 → ±1 per bit; per doc: elementwise sum over
@@ -429,12 +415,10 @@ def simhash(
     ``expr`` strings — 64 per-Column builder chains cost ~2 s of py4j
     round trips at plan time (measured), SQL strings don't."""
     mask = 0x0001000100010001
-    tok = df.select(
-        id_col, F.explode(tokens(F.col(text_col))).alias("tok")
-    )
+    tok = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     sums = (
-        tok.selectExpr(id_col, "xxhash64(tok) AS h")
-        .groupBy(id_col)
+        tok.selectExpr("doc_id", "xxhash64(tok) AS h")
+        .groupBy("doc_id")
         .agg(
             F.expr("count(*) AS n"),
             *[F.expr(f"sum(shiftright(h, {j}) & {mask}) AS w{j}") for j in range(16)],
@@ -445,15 +429,13 @@ def simhash(
         f" AS BIGINT), {i})"
         for i in range(64)
     )
-    return sums.selectExpr(id_col, f"({fp}) AS simhash")
+    return sums.selectExpr("doc_id", f"({fp}) AS simhash")
 
 
 def simhash_pairs(
     df: DataFrame,
     *,
     max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-dup pairs within Hamming distance ``max_hamming``.
 
@@ -466,11 +448,9 @@ def simhash_pairs(
     # so without the checkpoint the tokenize-explode + 16-word signature
     # aggregate (the expensive part) executes twice. Materialized form is
     # 16 bytes/row (doc_id, simhash).
-    sh = simhash(df, text_col=text_col, id_col=id_col).localCheckpoint(
-        eager=False
-    )
+    sh = simhash(df).localCheckpoint(eager=False)
     quarters = sh.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.explode(
             F.array(
@@ -487,9 +467,9 @@ def simhash_pairs(
                 ]
             )
         ).alias("bk"),
-    ).select(id_col, "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = quarters.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "key")
-    b = quarters.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("sh_b"), "band", "key")
+    ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    a = quarters.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "key")
+    b = quarters.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"), "band", "key")
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
         a.join(b, ["band", "key"])

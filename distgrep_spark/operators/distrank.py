@@ -69,7 +69,6 @@ def percentile_boundaries(
     key_sql: str,
     n_buckets: int = 64,
     descending: bool = False,
-    accuracy: int = 10_000,
 ) -> list[Any]:
     """Bucket cut points for ``key_sql``: <= n_buckets-1 approximate
     percentiles, deduped, sorted in bucket order (ascending key order, or
@@ -81,7 +80,7 @@ def percentile_boundaries(
         repr(i / n_buckets) + "D" for i in range(1, n_buckets)
     )
     row = df.agg(
-        F.expr(f"approx_percentile({key_sql}, array({fracs}), {accuracy})")
+        F.expr(f"approx_percentile({key_sql}, array({fracs}), 10000)")
     ).first()
     raw = [] if row is None or row[0] is None else list(row[0])
     return sorted({b for b in raw if b is not None}, reverse=descending)

@@ -79,21 +79,14 @@ def connected_components(
     )
 
 
-def dedup_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    pair_a: str = "doc_a",
-    pair_b: str = "doc_b",
-) -> DataFrame:
-    """Cluster assignment from near-dup pairs: every document labeled
-    with its component's min doc id (``cluster_rep``). Downstream dedup
-    keeps ``doc_id == cluster_rep`` rows only."""
+def dedup_clusters(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Cluster assignment from near-dup (doc_a, doc_b) pairs: every
+    document labeled with its component's min doc id (``cluster_rep``).
+    Downstream dedup keeps ``doc_id == cluster_rep`` rows only."""
     comps = connected_components(
-        df.select(id_col), pairs, id_col=id_col, src_col=pair_a, dst_col=pair_b
+        df.select("doc_id"), pairs, id_col="doc_id", src_col="doc_a", dst_col="doc_b"
     )
-    return comps.select(F.col("id").alias(id_col), F.col("comp").alias("cluster_rep"))
+    return comps.select(F.col("id").alias("doc_id"), F.col("comp").alias("cluster_rep"))
 
 
 def part_baskets(li: DataFrame) -> DataFrame:
@@ -246,17 +239,14 @@ def connected_components_star(
     vertices: DataFrame,
     edges: DataFrame,
     *,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_iter: int = 40,
     pre_contract: bool = True,
 ) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star contraction — the
     O(log n)-round connected components of Kiveris et al., "Connected
-    Components in MapReduce and Beyond" (SoCC'14). Returns
-    ((id, comp) labels, rounds used); comp = min vertex id in the
-    component.
+    Components in MapReduce and Beyond" (SoCC'14). ``vertices`` has
+    ``id``, ``edges`` has ``(src, dst)``. Returns ((id, comp) labels,
+    rounds used); comp = min vertex id in the component.
 
     Why a second CC kernel beside ``connected_components``: min-label
     propagation needs DIAMETER rounds — fine for near-clique dedup
@@ -286,9 +276,7 @@ def connected_components_star(
     (worker.go:24-43 is grep-only); this is the brief's analytics
     extension surface.
     """
-    cur = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).where(F.col("src") != F.col("dst"))
+    cur = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     if pre_contract:
         # Round-0 local contraction (exact; see _precontract_local),
         # applied on the input's NATURAL partitioning and INSTEAD of the
@@ -363,7 +351,7 @@ def connected_components_star(
             f"connected_components_star did not converge in {max_iter} rounds"
         )
     labels = (
-        vertices.select(F.col(id_col).alias("id"))
+        vertices.select("id")
         .join(cur.withColumnRenamed("src", "id"), "id", "left")
         .select("id", F.coalesce(F.col("dst"), F.col("id")).alias("comp"))
     )

@@ -97,8 +97,6 @@ def distgrep(
     column: str = "value",
     mode: str = "contains",
     case_sensitive: bool = True,
-    line_alias: str = "line",
-    freq_alias: str = "freq",
     ordered: bool = False,
 ) -> DataFrame:
     """The reference's one query: DataFrame[(line, freq)].
@@ -114,11 +112,11 @@ def distgrep(
     """
     out = (
         grep_lines(df, pattern, column=column, mode=mode, case_sensitive=case_sensitive)
-        .groupBy(F.col(column).alias(line_alias))
-        .agg(F.count(F.lit(1)).alias(freq_alias))
+        .groupBy(F.col(column).alias("line"))
+        .agg(F.count(F.lit(1)).alias("freq"))
     )
     if ordered:
-        out = out.orderBy(F.col(freq_alias).desc(), F.col(line_alias))
+        out = out.orderBy(F.col("freq").desc(), F.col("line"))
     return out
 
 

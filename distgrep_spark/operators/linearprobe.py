@@ -172,7 +172,12 @@ def final_epoch_plan(
     )
 
 
-def loso_influence(docs: DataFrame, epochs: int = 3) -> DataFrame:
+# Training epochs of every loso_influence model. The DuckDB twin of
+# quality_probe_loso_influence unrolls exactly these 3 epochs (w1..w3).
+LOSO_EPOCHS = 3
+
+
+def loso_influence(docs: DataFrame) -> DataFrame:
     """Leave-one-source-out DATA VALUATION for the probe: train the
     full-corpus model AND one model per held-out source — all in the
     same jobs — and report, per source, how far the trained table
@@ -272,7 +277,7 @@ def loso_influence(docs: DataFrame, epochs: int = 3) -> DataFrame:
             }
             for h in models
         }
-    for _ in range(epochs - 1):
+    for _ in range(LOSO_EPOCHS - 1):
         if not w:
             break
         # The S x corpus work stays distributed but SHUFFLE-FREE until

@@ -27,11 +27,17 @@ FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes int, byte_entropy_bin int, byte_histogram array<double>"
 )
 
+# segment_audio's framing in samples: 4 s windows with a 2 s hop (50%
+# overlap) at the 16 kHz rate attach_fake_audio_meta declares. The
+# multimodal_audio_segments twin spells the same 64000 / 32000.
+AUDIO_WINDOW = 64_000
+AUDIO_HOP = 32_000
 
-def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+
+def attach_fake_payload(df: DataFrame) -> DataFrame:
     """Simulate a multimodal table: binary payload (utf-8 of the text — a
     deterministic stand-in for image bytes) + typed metadata struct."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8")).withColumn(
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8")).withColumn(
         "media_meta",
         F.struct(
             F.lit("fake/png").alias("format"),
@@ -91,9 +97,7 @@ def payload_metadata(df_with_payload: DataFrame) -> DataFrame:
     )
 
 
-def resize_dims(
-    df_with_meta: DataFrame, *, max_side: int = 224, id_col: str = "doc_id"
-) -> DataFrame:
+def resize_dims(df_with_meta: DataFrame, *, max_side: int = 224) -> DataFrame:
     """Aspect-preserving resize planning over the metadata struct: target
     dimensions fitting ``max_side`` on the longer edge, computed with
     exact integer math (scaled = short * max_side div long, floored to
@@ -113,7 +117,7 @@ def resize_dims(
         F.greatest(F.lit(1), F.expr(f"(media_meta.height * {max_side}) div media_meta.width"))
     ).otherwise(F.lit(max_side))
     return df_with_meta.select(
-        id_col,
+        "doc_id",
         w.alias("width"),
         h.alias("height"),
         new_w.cast("int").alias("target_w"),
@@ -121,60 +125,52 @@ def resize_dims(
     )
 
 
-def attach_fake_video_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_fake_video_meta(df: DataFrame) -> DataFrame:
     """Simulate video metadata: a deterministic per-doc frame count
     (1..300, derived from the id — a stand-in for container-header
     probing, which at scale is a cheap ranged read of the first KB of
     each payload, never a full decode)."""
-    return df.withColumn(
-        "n_frames", (F.col(id_col) % 300 + 1).cast("bigint")
-    )
+    return df.withColumn("n_frames", (F.col("doc_id") % 300 + 1).cast("bigint"))
 
 
-def attach_fake_audio_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_fake_audio_meta(df: DataFrame) -> DataFrame:
     """Simulate audio metadata: per-doc sample count (0.5..10.5 s at a
     16 kHz rate, derived from the id) — like the video twin, the
     stand-in for header probing."""
     # id % 160 scaled by 1000 so small-id corpora still sweep the full
     # 0.5..10.5 s duration range (and thus the multi-window path)
     return df.withColumn(
-        "n_samples", ((F.col(id_col) % 160) * 1_000 + 8_000).cast("bigint")
+        "n_samples", ((F.col("doc_id") % 160) * 1_000 + 8_000).cast("bigint")
     ).withColumn("sample_rate", F.lit(16_000))
 
 
-def segment_audio(
-    df: DataFrame,
-    *,
-    window: int = 64_000,
-    hop: int = 32_000,
-    max_segments: int = 8,
-    id_col: str = "doc_id",
-    samples_col: str = "n_samples",
-) -> DataFrame:
-    """Overlapping fixed-window audio segmentation: segment ``i`` covers
-    samples ``[i*hop, min(i*hop + window, n_samples))``, for
+def segment_audio(df: DataFrame, *, max_segments: int = 8) -> DataFrame:
+    """Overlapping fixed-window audio segmentation of ``(doc_id,
+    n_samples)`` rows: segment ``i`` covers samples ``[i*hop, min(i*hop +
+    window, n_samples))`` (``AUDIO_WINDOW``, ``AUDIO_HOP``), for
     ``i < min(max_segments, ceil(max(n - window, 0) / hop) + 1)`` — the
     framing step every speech/audio featurizer runs before the (stubbed)
     decode. Pure integer column math; ``max_segments`` bounds output to
     k rows per clip at 100 TB exactly like frame sampling. The last
     window is truncated at the clip edge, never padded (padding policy
     belongs to the decoder)."""
-    n = F.col(samples_col)
+    window, hop = AUDIO_WINDOW, AUDIO_HOP
+    n = F.col("n_samples")
     n_seg = F.least(
         F.lit(max_segments),
-        F.expr(f"(greatest({samples_col} - {window}, 0) + {hop} - 1) div {hop} + 1"),
+        F.expr(f"(greatest(n_samples - {window}, 0) + {hop} - 1) div {hop} + 1"),
     )
     return (
-        df.select(id_col, samples_col)
+        df.select("doc_id", "n_samples")
         .withColumn("_ns", n_seg)
         .select(
-            id_col,
-            samples_col,
+            "doc_id",
+            "n_samples",
             F.explode(F.sequence(F.lit(0), F.col("_ns") - 1)).alias("seg_ord"),
         )
         .select(
-            id_col,
-            samples_col,
+            "doc_id",
+            "n_samples",
             "seg_ord",
             (F.col("seg_ord") * hop).alias("seg_start"),
             F.least(F.col("seg_ord") * hop + window, n).alias("seg_end"),
@@ -182,10 +178,9 @@ def segment_audio(
     )
 
 
-def sample_frames(
-    df: DataFrame, *, k: int = 8, id_col: str = "doc_id", frames_col: str = "n_frames"
-) -> DataFrame:
-    """Uniform-stride frame sampling: for each video pick
+def sample_frames(df: DataFrame, *, k: int = 8) -> DataFrame:
+    """Uniform-stride frame sampling of ``(doc_id, n_frames)`` rows: for
+    each video pick
     ``m = min(k, n_frames)`` frame indices ``(i * n_frames) div m`` for
     ``i in [0, m)`` — the standard keyframe-ish subsample a video
     pipeline feeds to the (stubbed) decoder. Pure integer column math:
@@ -198,21 +193,21 @@ def sample_frames(
     [0, -1] and ``div _m`` divides by zero — a hard error under Spark 4
     ANSI mode. Zero samples for a zero-frame clip is also the right
     semantics."""
-    m = F.least(F.lit(k), F.col(frames_col))
+    m = F.least(F.lit(k), F.col("n_frames"))
     return (
-        df.select(id_col, frames_col)
-        .where(F.col(frames_col) >= 1)
+        df.select("doc_id", "n_frames")
+        .where(F.col("n_frames") >= 1)
         .withColumn("_m", m)
         .select(
-            id_col,
-            frames_col,
+            "doc_id",
+            "n_frames",
             "_m",
             F.explode(F.sequence(F.lit(0), F.col("_m") - 1)).alias("sample_ord"),
         )
         .selectExpr(
-            id_col,
-            frames_col,
+            "doc_id",
+            "n_frames",
             "sample_ord",
-            f"(sample_ord * {frames_col}) div _m AS frame_idx",
+            "(sample_ord * n_frames) div _m AS frame_idx",
         )
     )

@@ -110,17 +110,15 @@ def cosine(a: Column, b: Column) -> Column:
     return cos_normed(a, b, norm(a), norm(b))
 
 
-def _topk(
-    scored: DataFrame, k: int, query_id_col: str, id_col: str, exclude_self: bool
-) -> DataFrame:
-    """Per-query top-k of (query_id_col, id_col, cos_sim) rows: rank
-    1..k by (cos_sim DESC, id), after dropping the query's own row when
+def _topk(scored: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+    """Per-query top-k of (query_id, vec_id, cos_sim) rows: rank 1..k by
+    (cos_sim DESC, vec_id), after dropping the query's own row when
     ``exclude_self``."""
     if exclude_self:
-        scored = scored.where(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        scored = scored.where(F.col("query_id") != F.col("vec_id"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
     return scored.select(
-        query_id_col, id_col, "cos_sim", F.row_number().over(w).alias("rank")
+        "query_id", "vec_id", "cos_sim", F.row_number().over(w).alias("rank")
     ).where(F.col("rank") <= k)
 
 
@@ -129,30 +127,24 @@ def cosine_topk(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
-    ``queries`` needs (query_id_col, vec_col). Returns
+    ``corpus`` needs (vec_id, embedding), ``queries`` (query_id,
+    embedding). Returns
     (query_id, vec_id, cos_sim, rank) with rank 1..k per query, ties
     broken on vec_id so output is deterministic. ``exclude_self`` drops
     corpus rows whose id equals the query id BEFORE ranking (so rank 1 is
     the nearest *other* vector)."""
-    c = corpus.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("_cv")
-    )
-    q = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("_qv")
-    )
+    c = corpus.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_cv"))
+    q = queries.select(F.col("query_id"), as_double(F.col("embedding")).alias("_qv"))
     scored = c.crossJoin(broadcast(q)).select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         cosine(F.col("_cv"), F.col("_qv")).alias("cos_sim"),
     )
-    return _topk(scored, k, query_id_col, id_col, exclude_self)
+    return _topk(scored, k, exclude_self)
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -166,44 +158,38 @@ def ann_ivf_topk(
     queries: DataFrame,
     *,
     k: int = 10,
-    n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: coarse-quantize the corpus
-    into ``n_centroids`` lists by nearest centroid, probe the ``nprobe``
-    nearest lists per query, brute-force only inside them.
+    into 16 lists by nearest centroid, probe the ``nprobe`` nearest lists
+    per query, brute-force only inside them.
 
-    Expected cost ~ nprobe/n_centroids of brute force; recall depends on
-    how well the centroids tile the data. Centroids here are the first
-    ``n_centroids`` corpus vectors by id — a deterministic, id-pruned
+    Expected cost ~ nprobe/16 of brute force; recall depends on how well
+    the centroids tile the data. Centroids here are the first 16 corpus
+    vectors by id — a deterministic, id-pruned
     scan standing in for a k-means codebook (at 100 TB you'd train the
     codebook once on a sample and broadcast it; the assignment/probe/
     score dataflow — which is what this operator exercises — is
     identical). Assignment is map-side (centroids are plan literals, no
     shuffle); the probe join shuffles on the single int cluster id.
     """
-    cent_rows = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
-    )
-    cents = [[float(x) for x in r[vec_col]] for r in cent_rows]
+    cent_rows = corpus.select("vec_id", "embedding").orderBy("vec_id").limit(16).collect()
+    cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
     cents_lit = col_lit(cents, "array<array<double>>")
 
     c = (
-        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("_cv"))
+        corpus.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_cv"))
         .withColumn("_dists", F.transform(cents_lit, lambda p: l2sq(F.col("_cv"), p)))
         .withColumn(
             "_cluster", F.array_position(F.col("_dists"), F.array_min(F.col("_dists")))
         )
-        .select(id_col, "_cv", "_cluster")
+        .select("vec_id", "_cv", "_cluster")
     )
     # nprobe nearest centroids per query: sort (dist, idx) structs
     # lexicographically, slice, unpack
     q = (
-        queries.select(F.col(query_id_col), as_double(F.col(vec_col)).alias("_qv"))
+        queries.select(F.col("query_id"), as_double(F.col("embedding")).alias("_qv"))
         .withColumn("_dists", F.transform(cents_lit, lambda p: l2sq(F.col("_qv"), p)))
         .withColumn(
             "_probe",
@@ -220,14 +206,14 @@ def ann_ivf_topk(
                 )
             ),
         )
-        .select(query_id_col, "_qv", F.col("_probe.idx").cast("long").alias("_cluster"))
+        .select("query_id", "_qv", F.col("_probe.idx").cast("long").alias("_cluster"))
     )
     scored = c.join(broadcast(q), "_cluster").select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         cosine(F.col("_cv"), F.col("_qv")).alias("cos_sim"),
     )
-    return _topk(scored, k, query_id_col, id_col, exclude_self)
+    return _topk(scored, k, exclude_self)
 
 
 def _hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
@@ -280,10 +266,6 @@ def ann_lsh_topk(
     dim: int = 64,
     num_planes: int = 4,
     num_tables: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
     corpus_partitions: int | None = None,
 ) -> DataFrame:
@@ -310,27 +292,27 @@ def ann_lsh_topk(
     planes = [
         row
         for t in range(num_tables)
-        for row in _hyperplanes(dim, num_planes, seed + 7919 * t)
+        for row in _hyperplanes(dim, num_planes, 42 + 7919 * t)
     ]
     if corpus_partitions:
         corpus = corpus.repartition(corpus_partitions)
     c = (
-        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("_cv"))
+        corpus.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_cv"))
         .withColumn("_ncv", norm(F.col("_cv")))
         .withColumn("_dots", plane_dots("_cv", planes))
         .select(
-            id_col,
+            "vec_id",
             "_cv",
             "_ncv",
             F.explode(table_buckets("_dots", num_tables, num_planes)).alias("tb"),
         )
     )
     q = (
-        queries.select(F.col(query_id_col), as_double(F.col(vec_col)).alias("_qv"))
+        queries.select(F.col("query_id"), as_double(F.col("embedding")).alias("_qv"))
         .withColumn("_nqv", norm(F.col("_qv")))
         .withColumn("_dots", plane_dots("_qv", planes))
         .select(
-            query_id_col,
+            "query_id",
             "_qv",
             "_nqv",
             F.explode(table_buckets("_dots", num_tables, num_planes)).alias("tb"),
@@ -346,15 +328,15 @@ def ann_lsh_topk(
     scored = (
         c.join(broadcast(q), "tb")
         .select(
-            query_id_col,
-            id_col,
+            "query_id",
+            "vec_id",
             cos_normed(F.col("_cv"), F.col("_qv"), F.col("_ncv"), F.col("_nqv")).alias(
                 "cos_sim"
             ),
         )
-        .dropDuplicates([query_id_col, id_col])
+        .dropDuplicates(["query_id", "vec_id"])
     )
-    return _topk(scored, k, query_id_col, id_col, exclude_self)
+    return _topk(scored, k, exclude_self)
 
 
 def cosine_pandas_udf():
@@ -386,17 +368,14 @@ def cosine_topk_pandas(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
 ) -> DataFrame:
     """cosine_topk with the Pandas-UDF scorer (same plan shape:
     broadcast queries, map-side score, per-query top-k window)."""
     cos = cosine_pandas_udf()
-    c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("_cv"))
-    q = queries.select(F.col(query_id_col), as_double(F.col(vec_col)).alias("_qv"))
+    c = corpus.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_cv"))
+    q = queries.select(F.col("query_id"), as_double(F.col("embedding")).alias("_qv"))
     scored = c.crossJoin(broadcast(q)).select(
-        query_id_col, id_col, cos(F.col("_cv"), F.col("_qv")).alias("cos_sim")
+        "query_id", "vec_id", cos(F.col("_cv"), F.col("_qv")).alias("cos_sim")
     )
-    return _topk(scored, k, query_id_col, id_col, exclude_self)
+    return _topk(scored, k, exclude_self)

@@ -85,17 +85,14 @@ def countmin_probe(
 # Bitmap-exact distinct (mergeable, 32-bit words)
 # ---------------------------------------------------------------------------
 
+# Bits per bitmap word; bitmap_build's docstring says why 32, not 64.
+BITMAP_WORD_BITS = 32
 
-def bitmap_build(
-    df: DataFrame,
-    *,
-    key: str,
-    groups: list[str],
-    word_bits: int = 32,
-) -> DataFrame:
+
+def bitmap_build(df: DataFrame, *, key: str, groups: list[str]) -> DataFrame:
     """Per-group bitmap index over a non-negative integer key: one row
-    per (groups..., word) with ``w = bit_or(1 << key % word_bits)`` and
-    ``word = key DIV word_bits``. Unlike count-distinct this is a
+    per (groups..., word) with ``w = bit_or(1 << key % BITMAP_WORD_BITS)``
+    and ``word = key DIV BITMAP_WORD_BITS``. Unlike count-distinct this is a
     MERGEABLE EXACT structure: bitmaps over the same grouping union by
     ``bit_or`` on (groups..., word) — across partitions, micro-batches,
     days, or corpora — and ``bit_or`` is idempotent, so re-ingested
@@ -105,14 +102,14 @@ def bitmap_build(
 
     The 100-TB view: stage 1 is map-side combinable; the shuffle then
     carries one BIGINT per populated word — for dense key ranges that
-    is ~word_bits-fold fewer bytes than shuffling raw keys, and the
+    is ~BITMAP_WORD_BITS-fold fewer bytes than shuffling raw keys, and the
     materialized word table is the reusable index the per-period
     distinct rollups (daily actives, incremental loads) merge from."""
     return (
         df.selectExpr(
             *groups,
-            f"{key} DIV {word_bits} AS word",
-            f"shiftleft(CAST(1 AS BIGINT), CAST({key} % {word_bits} AS INT))"
+            f"{key} DIV {BITMAP_WORD_BITS} AS word",
+            f"shiftleft(CAST(1 AS BIGINT), CAST({key} % {BITMAP_WORD_BITS} AS INT))"
             " AS _mask",
         )
         .groupBy(*groups, "word")
@@ -121,7 +118,7 @@ def bitmap_build(
 
 
 def bitmap_merge(*bitmaps: DataFrame) -> DataFrame:
-    """Union bitmap word tables built with the same grouping/word_bits:
+    """Union bitmap word tables built with the same grouping:
     ``bit_or`` over (groups..., word). Exact under arbitrary overlap."""
     out = bitmaps[0]
     for b in bitmaps[1:]:

@@ -73,14 +73,12 @@ def grid_neighbor_pairs(
     pts: DataFrame,
     *,
     radius: int,
-    id_col: str = "k",
-    x_col: str = "x",
-    y_col: str = "y",
     hot_threshold: int | None = 1024,
     max_splits: int = 64,
 ) -> DataFrame:
-    """All pairs (key_a < key_b) within L-infinity ``radius`` in integer
-    (x, y) space, as rows (key_a, key_b, dx, dy).
+    """All pairs of ``pts`` rows (k, x, y) with key_a < key_b within
+    L-infinity ``radius`` in integer (x, y) space, as rows (key_a, key_b,
+    dx, dy).
 
     ``hot_threshold``: cells with more points than this are split into
     ``ceil(n / hot_threshold)`` salt buckets (at most ``max_splits``) so
@@ -91,11 +89,7 @@ def grid_neighbor_pairs(
     arithmetic; ANSI-safe DIV).
     """
     r = int(radius)
-    pts = pts.select(
-        F.col(id_col).alias("k"),
-        F.col(x_col).alias("x"),
-        F.col(y_col).alias("y"),
-    )
+    pts = pts.select("k", "x", "y")
     probe = pts.selectExpr(
         "k",
         "x",

@@ -31,12 +31,12 @@ STOPWORDS = ("the", "a", "of", "and")
 
 # Content-addressed train/val/test split rule (~80/10/10 via md5-prefix
 # thresholds 'cc'/'e6' = 204/26/26 of 256). THE single source of truth:
-# corpus_split_assign, dq_split_leakage, and dq_split_leakage_neardup all
-# format this string (Spark SQL and DuckDB produce identical lowercase-hex
-# md5, so the fragment is portable verbatim to both engines' SQL). Keying
-# on content — not row position — is the 100 TB property: the split
-# survives resharding and appends, and exact duplicates land in one split
-# by construction.
+# corpus_split_assign, dq_split_leakage, dq_split_leakage_neardup and
+# corpus_curation_pipeline all format this string (Spark SQL and DuckDB
+# produce identical lowercase-hex md5, so the fragment is portable
+# verbatim to both engines' SQL). Keying on content — not row position —
+# is the 100 TB property: the split survives resharding and appends, and
+# exact duplicates land in one split by construction.
 SPLIT_CASE = (
     "CASE WHEN substr(md5({c}), 1, 2) < 'cc' THEN 'train'"
     " WHEN substr(md5({c}), 1, 2) < 'e6' THEN 'val'"
@@ -44,11 +44,11 @@ SPLIT_CASE = (
 )
 
 
-def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def text_stats(df: DataFrame) -> DataFrame:
     """Per-document stats: chars, tokens, avg token length, stopword ratio."""
-    c = F.col(text_col)
+    c = F.col("text")
     return df.select(
-        id_col,
+        "doc_id",
         F.length(c).alias("n_chars_calc"),
         token_count(c).alias("n_tokens"),
         avg_token_len(c).alias("avg_token_len"),
@@ -56,13 +56,13 @@ def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     )
 
 
-def quality_expr(text_col: str = "text") -> "F.Column":
+def quality_expr() -> "F.Column":
     """The composite quality score in [0,1] as a COLUMN expression
     (length saturation + stopword signal + char saturation), so callers
     can project it alongside other columns without a self-join back to
     the source table. Fixed IEEE evaluation order: the DuckDB oracle is
     bit-identical."""
-    c = F.col(text_col)
+    c = F.col("text")
     nt = token_count(c)
     return (
         F.lit(0.4) * F.least(F.lit(1.0), nt / F.lit(100.0))
@@ -71,22 +71,22 @@ def quality_expr(text_col: str = "text") -> "F.Column":
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Composite quality score per doc (the standard cheap pre-filter
     before expensive LLM-pipeline stages); see ``quality_expr``."""
-    return df.select(id_col, quality_expr(text_col).alias("quality"))
+    return df.select("doc_id", quality_expr().alias("quality"))
 
 
-def lang_guess(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_guess(df: DataFrame) -> DataFrame:
     """Heuristic language ID: stopword-density n-gram-free classifier.
 
     The fixture corpus shares one vocabulary across its `lang` labels, so
     this is exercised as a deterministic two-way rule (en-like vs other);
     swapping in per-language stopword tables turns it into a real
     classifier without touching the plan shape."""
-    c = F.col(text_col)
+    c = F.col("text")
     guess = F.when(stopword_ratio(c, STOPWORDS) > 0.05, "en_like").otherwise("other")
-    return df.select(id_col, guess.alias("lang_guess"))
+    return df.select("doc_id", guess.alias("lang_guess"))
 
 
 def fingerprint_md5(col: Column) -> Column:
@@ -110,18 +110,18 @@ def fingerprint_rolling(col: Column) -> Column:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    c = F.col(text_col)
+def fingerprints(df: DataFrame) -> DataFrame:
+    c = F.col("text")
     return df.select(
-        id_col,
+        "doc_id",
         fingerprint_md5(c).alias("fp_md5"),
         fingerprint_rolling(c).alias("fp_rolling"),
     )
 
 
-def token_counts_by(df: DataFrame, group_col: str, text_col: str = "text") -> DataFrame:
+def token_counts_by(df: DataFrame, group_col: str) -> DataFrame:
     """Corpus token accounting per group (integer sums → exact)."""
-    c = F.col(text_col)
+    c = F.col("text")
     return df.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_count(c)).alias("ws_tokens"),
@@ -130,13 +130,7 @@ def token_counts_by(df: DataFrame, group_col: str, text_col: str = "text") -> Da
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    *,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, *, k: int = 3) -> DataFrame:
     """Top-k tokens per document by tf-idf.
 
     Scoring uses the rational form tf * N / df instead of tf * ln(N/df):
@@ -159,23 +153,23 @@ def tfidf_top_terms(
     # the corpus at 100 TB. As a plan-side scalar it runs in the same job
     # and the single-row side broadcasts for free.
     n_docs = df.agg(F.count(F.lit(1)).cast("double").alias("_n_docs"))
-    toks = df.select(id_col, F.explode(tokens(F.col(text_col))).alias("tok"))
-    tf = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
+    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dft = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         tf.join(F.broadcast(dft), "tok")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "tok",
             (F.col("tf").cast("double") * F.col("_n_docs") / F.col("df")).alias(
                 "score"
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("tok"))
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("tok"))
     return scored.select(
-        id_col, "tok", "score", F.row_number().over(w).alias("rnk")
+        "doc_id", "tok", "score", F.row_number().over(w).alias("rnk")
     ).where(F.col("rnk") <= k)
 
 
@@ -184,8 +178,6 @@ def chunk_documents(
     *,
     chunk_tokens: int = 64,
     overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Split documents into overlapping fixed-token chunks — the context
     -window preprocessing step of every LLM training pipeline. Returns
@@ -199,7 +191,7 @@ def chunk_documents(
     stride = chunk_tokens - overlap
     if stride <= 0:
         raise ValueError("overlap must be smaller than chunk_tokens")
-    toks = df.select(id_col, tokens(F.col(text_col)).alias("_toks"))
+    toks = df.select("doc_id", tokens(F.col("text")).alias("_toks"))
     # chunk starts: 1, 1+stride, ... while start <= max(n - overlap, 1)
     starts = F.sequence(
         F.lit(1),
@@ -208,12 +200,12 @@ def chunk_documents(
     )
     return (
         toks.select(
-            id_col,
+            "doc_id",
             F.posexplode(starts).alias("chunk_id", "_start"),
             F.col("_toks"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_id",
             F.concat_ws(" ", F.slice("_toks", F.col("_start"), chunk_tokens)).alias(
                 "chunk_text"
@@ -223,9 +215,7 @@ def chunk_documents(
     )
 
 
-def dup_span_fraction(
-    df: DataFrame, *, n: int = 5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dup_span_fraction(df: DataFrame, *, n: int = 5) -> DataFrame:
     """Per-document fraction of n-gram shingles shared with ANY other
     document — the RefinedWeb/Gopher-style cross-document repetition
     signal (high fraction = boilerplate / near-dup material worth
@@ -240,20 +230,20 @@ def dup_span_fraction(
     index is shareable between the two (and the gram key would be its
     8-byte xxhash64, exactly like dedup_hash vs dedup_exact)."""
 
-    toks = df.select(id_col, tokens(F.col(text_col)).alias("_t"))
+    toks = df.select("doc_id", tokens(F.col("text")).alias("_t"))
     grams = toks.select(
-        id_col, F.explode(ngrams_of_tokens(F.col("_t"), n)).alias("gram")
+        "doc_id", F.explode(ngrams_of_tokens(F.col("_t"), n)).alias("gram")
     ).distinct()
-    dfreq = grams.groupBy("gram").agg(F.countDistinct(id_col).alias("ndocs"))
+    dfreq = grams.groupBy("gram").agg(F.countDistinct("doc_id").alias("ndocs"))
     return (
         grams.join(dfreq, "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.count(F.when(F.col("ndocs") >= 2, 1)).alias("n_dup_grams"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             "n_dup_grams",
             (F.col("n_dup_grams") * F.lit(1.0) / F.col("n_grams")).alias("dup_frac"),
@@ -261,9 +251,7 @@ def dup_span_fraction(
     )
 
 
-def remove_dup_sentences(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def remove_dup_sentences(df: DataFrame) -> DataFrame:
     """Drop every sentence ('. '-separated, the udtf_split_sentences
     convention) that appears in MORE than one document, then reassemble
     the survivors in original order — C4/RefinedWeb's exact line-dedup
@@ -279,11 +267,11 @@ def remove_dup_sentences(
     xxhash64 — shuffle 8-byte keys, not prose — with an identical plan
     shape."""
     s = df.select(
-        id_col, F.posexplode(F.split(text_col, r"\. ")).alias("pos", "sentence")
+        "doc_id", F.posexplode(F.split("text", r"\. ")).alias("pos", "sentence")
     ).where(F.col("sentence") != "")
-    freq = s.groupBy("sentence").agg(F.countDistinct(id_col).alias("ndocs"))
+    freq = s.groupBy("sentence").agg(F.countDistinct("doc_id").alias("ndocs"))
     kept = s.join(freq, "sentence").where(F.col("ndocs") == 1)
-    ka = kept.groupBy(id_col).agg(
+    ka = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.array_join(
             F.expr(
@@ -293,21 +281,16 @@ def remove_dup_sentences(
             ". ",
         ).alias("clean_text"),
     )
-    tot = s.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sents"))
-    return tot.join(ka, id_col, "left").select(
-        id_col,
+    tot = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sents"))
+    return tot.join(ka, "doc_id", "left").select(
+        "doc_id",
         "n_sents",
         F.coalesce("n_kept", F.lit(0).cast("bigint")).alias("n_kept"),
         F.coalesce("clean_text", F.lit("")).alias("clean_text"),
     )
 
 
-def cdc_chunk_hashes(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: tuple[str, ...] = ("source",),
-) -> DataFrame:
+def cdc_chunk_hashes(df: DataFrame) -> DataFrame:
     r"""Content-defined chunking: cut each document's token stream at
     positions where the rolling 3-gram hash lands in a 1/8 band, and
     return one row per chunk with its md5 content hash.
@@ -324,38 +307,36 @@ def cdc_chunk_hashes(
     (never a per-position HOF fold — the nested-HOF codegen cliff) ->
     boundary flag -> running-sum chunk index (gaps-and-islands) ->
     chunk reassembly ordered by pos. All three windows and the rollup
-    ride ONE id_col-keyed exchange; the output carries 16-byte md5
+    ride ONE doc_id-keyed exchange; the output carries 16-byte md5
     digests plus token counts, never text.
 
-    Returns columns: ``(id_col, *keep_cols, chunk_idx, chunk_hash,
-    n_toks)``.
+    Returns columns: ``(doc_id, source, chunk_idx, chunk_hash, n_toks)``.
     """
-    keep = list(keep_cols)
     toks = df.selectExpr(
-        id_col,
-        *keep,
-        f"posexplode({tokens_sql(text_col)}) AS (pos0, tok)",
-    ).selectExpr(id_col, *keep, "tok", "pos0 + 1 AS pos")
+        "doc_id",
+        "source",
+        f"posexplode({tokens_sql()}) AS (pos0, tok)",
+    ).selectExpr("doc_id", "source", "tok", "pos0 + 1 AS pos")
     flags = toks.selectExpr(
-        id_col,
-        *keep,
+        "doc_id",
+        "source",
         "tok",
         "pos",
         "CASE WHEN pos >= 3"
         " AND substr(md5("
-        f"   lag(tok, 2) OVER (PARTITION BY {id_col} ORDER BY pos) || ' ' ||"
-        f"   lag(tok, 1) OVER (PARTITION BY {id_col} ORDER BY pos) || ' ' ||"
+        "   lag(tok, 2) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' ||"
+        "   lag(tok, 1) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' ||"
         "   tok), 1, 1) < '2'"
         " THEN 1 ELSE 0 END AS boundary",
     )
     assigned = flags.selectExpr(
-        id_col,
-        *keep,
+        "doc_id",
+        "source",
         "tok",
         "pos",
-        f"sum(boundary) OVER (PARTITION BY {id_col} ORDER BY pos) AS chunk_idx",
+        "sum(boundary) OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_idx",
     )
-    return assigned.groupBy(id_col, *keep, "chunk_idx").agg(
+    return assigned.groupBy("doc_id", "source", "chunk_idx").agg(
         F.expr(
             "md5(concat_ws(' ',"
             " transform(array_sort(collect_list(struct(pos, tok))),"
@@ -365,18 +346,22 @@ def cdc_chunk_hashes(
     )
 
 
-def exact_substr_scrub(
-    df: DataFrame,
-    *,
-    n: int = 3,
-    min_df: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+# exact_substr_scrub's span rule: a token is scrubbed when a
+# SCRUB_N-gram covering it occurs in >= SCRUB_MIN_DF distinct documents.
+# 2 is the canonical cross-document rule ("appears in any other
+# document"), which holds at every scale where an absolute df cut would
+# encode a fixture size. text_exact_substr_scrub's DuckDB twin spells the
+# same trigram and 2.
+SCRUB_N = 3
+SCRUB_MIN_DF = 2
+
+
+def exact_substr_scrub(df: DataFrame) -> DataFrame:
     """ExactSubstr-style duplicated-span SCRUBBING (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better", §4.1,
     token-level approximation): remove every token covered by an n-gram
-    that occurs in >= ``min_df`` distinct documents, and emit the
+    (n = ``SCRUB_N``) that occurs in >= ``SCRUB_MIN_DF`` distinct
+    documents, and emit the
     cleaned text plus kept/removed counts. Where dup_span_fraction
     MEASURES cross-document repetition, this one ACTS on it — the
     pre-training pass that deletes boilerplate spans instead of whole
@@ -402,9 +387,8 @@ def exact_substr_scrub(
     Reference: massimostanzione/distgrep is grep-only (worker.go:24-43);
     LLM-pipeline extension surface per SURVEY.md §2.2.
     """
-    toks = df.selectExpr(
-        f"{id_col} AS doc_id", f"{tokens_sql(text_col)} AS t"
-    ).localCheckpoint(eager=False)
+    n = SCRUB_N
+    toks = df.selectExpr("doc_id", f"{tokens_sql()} AS t").localCheckpoint(eager=False)
     # r11: toks fans out to THREE consumers (grams, pos, the n_tokens
     # projection) and re-tokenized the corpus per branch; the lazy
     # checkpoint materializes it once (interleaved x5 A/B at sf0.1:
@@ -422,7 +406,7 @@ def exact_substr_scrub(
         .distinct()
         .groupBy("gram")
         .count()
-        .where(F.col("count") >= min_df)
+        .where(F.col("count") >= SCRUB_MIN_DF)
         .select("gram")
     )
     cov = (

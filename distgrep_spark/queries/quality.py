@@ -359,9 +359,7 @@ def q_layout_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT digest, doc_id, lang, n_copies,
            CAST(length(clean_text) AS BIGINT) AS n_clean_chars,
-           CASE WHEN substr(md5(clean_text), 1, 2) < 'cc' THEN 'train'
-                WHEN substr(md5(clean_text), 1, 2) < 'e6' THEN 'val'
-                ELSE 'test' END AS split
+           {SPLIT_CASE.format(c="clean_text")} AS split
     FROM ded
     """,
 )
@@ -405,14 +403,13 @@ def q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-    sp = F.substring(F.md5("clean_text"), 1, 2)
     return ded.select(
         "digest",
         "doc_id",
         "lang",
         "n_copies",
         F.length("clean_text").cast("bigint").alias("n_clean_chars"),
-        F.when(sp < "cc", "train").when(sp < "e6", "val").otherwise("test").alias("split"),
+        F.expr(SPLIT_CASE.format(c="clean_text")).alias("split"),
     )
 
 

@@ -115,7 +115,7 @@ def load_table(
     return _spread_single_split(spark, df, path) if spread else df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register fixture tables as temp views so ``spark.sql`` can use them."""
-    for name in names or TABLES:
+    for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

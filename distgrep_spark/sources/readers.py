@@ -27,11 +27,11 @@ def read_csv(
     path: str,
     schema: StructType | str,
     *,
-    header: bool = True,
     sep: str = ",",
 ) -> DataFrame:
-    """CSV with an explicit schema — inference would cost a second scan."""
-    return spark.read.csv(path, schema=schema, header=header, sep=sep)
+    """CSV with a header row and an explicit schema — inference would
+    cost a second scan."""
+    return spark.read.csv(path, schema=schema, header=True, sep=sep)
 
 
 def read_json(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:

@@ -40,13 +40,13 @@ def _with_watermark(df: DataFrame, watermark: str | None) -> DataFrame:
     return df
 
 
-def grep_event_counts(df: DataFrame, pattern: str, column: str = "event_type") -> DataFrame:
+def grep_event_counts(df: DataFrame, pattern: str) -> DataFrame:
     """The distgrep query, streamified: running count of matching events
-    per distinct value — same filter→groupBy→count plan as the batch
-    flagship (operators/grep.py), fed by a stream."""
+    per distinct ``event_type`` — same filter→groupBy→count plan as the
+    batch flagship (operators/grep.py), fed by a stream."""
     return (
-        df.where(F.col(column).contains(pattern))
-        .groupBy(F.col(column).alias("line"))
+        df.where(F.col("event_type").contains(pattern))
+        .groupBy(F.col("event_type").alias("line"))
         .agg(F.count(F.lit(1)).alias("freq"))
     )
 
@@ -73,17 +73,20 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    df: DataFrame,
-    *,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str | None = "30 minutes",
-) -> DataFrame:
+# sliding_counts' windows: SLIDE_WINDOW long, one every SLIDE_EVERY, so
+# each event lands in exactly 2 windows; the events_sliding_counts twin
+# enumerates those 2 candidate buckets per row. The watermark is the
+# 30-minute horizon tumbling_counts and session_counts default to.
+SLIDE_WINDOW = "10 minutes"
+SLIDE_EVERY = "5 minutes"
+SLIDE_WATERMARK = "30 minutes"
+
+
+def sliding_counts(df: DataFrame) -> DataFrame:
     """Sliding-window counts: each event lands in window/slide windows."""
     return (
-        _with_watermark(df, watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
+        _with_watermark(df, SLIDE_WATERMARK)
+        .groupBy(F.window("ts", SLIDE_WINDOW, SLIDE_EVERY).alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -115,31 +118,20 @@ def session_counts(
     )
 
 
-def stateful_dedup(
-    df: DataFrame,
-    *,
-    key: str = "event_id",
-    watermark: str | None = "30 minutes",
-) -> DataFrame:
-    """Exactly-once-style dedup by key within the watermark horizon.
-    The watermark bounds the dedup state store; events with the same key
-    arriving inside the horizon are dropped."""
+def stateful_dedup(df: DataFrame, *, watermark: str | None = "30 minutes") -> DataFrame:
+    """Exactly-once-style dedup by ``event_id`` within the watermark
+    horizon. The watermark bounds the dedup state store; events with the
+    same id arriving inside the horizon are dropped."""
     d = _with_watermark(df, watermark)
     if df.isStreaming and watermark is not None:
         # watermark-scoped state expiry; without it state grows unbounded
-        return d.dropDuplicatesWithinWatermark([key])
-    return d.dropDuplicates([key])
+        return d.dropDuplicatesWithinWatermark(["event_id"])
+    return d.dropDuplicates(["event_id"])
 
 
-def enrich_events_with_dim(
-    events: DataFrame,
-    dim: DataFrame,
-    *,
-    on_left: str = "user_id",
-    on_right: str = "c_custkey",
-) -> DataFrame:
+def enrich_events_with_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join: each event decorated with its
-    customer dimension attributes.
+    customer dimension attributes (``user_id`` = ``c_custkey``).
 
     The canonical streaming-enrichment shape: the STATIC side is
     explicitly broadcast, so every micro-batch is a map-side hash join
@@ -152,7 +144,7 @@ def enrich_events_with_dim(
     from pyspark.sql.functions import broadcast
 
     return events.join(
-        broadcast(dim), events[on_left] == dim[on_right], "left"
+        broadcast(dim), events["user_id"] == dim["c_custkey"], "left"
     ).select(
         "event_id",
         "user_id",
@@ -167,18 +159,17 @@ def interval_join_clicks_errors(
     clicks: DataFrame,
     errors: DataFrame,
     *,
-    lookback: str = "10 minutes",
-    watermark: str = "30 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream join: each click paired with every error by the
-    same user in the preceding ``lookback`` (inclusive both ends).
+    same user in the preceding 10 minutes (inclusive both ends).
 
-    Both inputs must carry watermarks and the join condition must bound
-    event time on BOTH sides — that pair of constraints is what lets the
-    engine expire buffered state; an unbounded stream-stream join would
-    hold both streams forever. In batch the same expression is a plain
-    range join (the DuckDB oracle for the registry twin).
+    Both inputs must carry watermarks (30 minutes here) and the join
+    condition must bound event time on BOTH sides — that pair of
+    constraints is what lets the engine expire buffered state; an
+    unbounded stream-stream join would hold both streams forever. In
+    batch the same expression is a plain range join (the DuckDB oracle
+    for the registry twin).
 
     ``how='left_outer'`` keeps clicks with no error in the window:
     matched rows emit immediately, but the NULL-padded row for an
@@ -195,13 +186,11 @@ def interval_join_clicks_errors(
     """
     if how not in ("inner", "left_outer"):
         raise ValueError(f"how must be inner|left_outer, got {how!r}")
-    c = _with_watermark(clicks, watermark)
-    e = errors
-    if errors.isStreaming and watermark is not None:
-        e = errors.withWatermark("err_ts", watermark)
+    c = _with_watermark(clicks, "30 minutes")
+    e = errors.withWatermark("err_ts", "30 minutes") if errors.isStreaming else errors
     cond = (
         (c["user_id"] == e["err_user_id"])
-        & (e["err_ts"] >= F.col("ts") - F.expr(f"INTERVAL {lookback}"))
+        & (e["err_ts"] >= F.col("ts") - F.expr("INTERVAL 10 minutes"))
         & (e["err_ts"] <= F.col("ts"))
     )
     return c.join(e, cond, how).select(

@@ -548,12 +548,7 @@ def _make_throttle_buffered(ttl_us: int):
     return _throttle_buffered
 
 
-def throttle_dedup_eventtime(
-    df: DataFrame,
-    *,
-    watermark: str = "30 minutes",
-    ttl_seconds: int | None = None,
-) -> DataFrame:
+def throttle_dedup_eventtime(df: DataFrame, *, watermark: str = "30 minutes") -> DataFrame:
     """Event-time-DETERMINISTIC TTL-keyed suppression dedup on
     (user_id, event_type) — the watermark-buffered sibling of
     :func:`throttle_dedup`.
@@ -585,10 +580,10 @@ def throttle_dedup_eventtime(
     Reference: server.go:176-191 groups before reducing — the same
     buffer-then-decide shape, here gated by event-time completeness."""
     if not df.isStreaming:
-        return throttle_dedup(df, watermark=watermark, ttl_seconds=ttl_seconds)
+        return throttle_dedup(df, watermark=watermark)
     return _throttle_stream(
         df,
-        _make_throttle_buffered(_ttl_us(ttl_seconds)),
+        _make_throttle_buffered(_THROTTLE_TTL_US),
         BUFFERED_STATE_SCHEMA,
         watermark,
     )

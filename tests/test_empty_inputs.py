@@ -15,13 +15,9 @@ import pytest
 
 import distgrep_spark.queries as q
 from __spark_entry__ import SCOREBOARD_PREFIX
-from distgrep_spark.sources.catalog import load_table
+from distgrep_spark.sources.catalog import TABLES, load_table
 from tests.conftest import SF_SMALL
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 @pytest.fixture(scope="module")
 def empty_sf(spark, tmp_path_factory):

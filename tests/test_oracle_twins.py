@@ -26,6 +26,7 @@ import pytest
 
 import distgrep_spark.queries as q
 from distgrep_spark.functions.textfns import TOKENS_DUCK
+from distgrep_spark.sources.catalog import TABLES
 from tests.conftest import SF_ORACLE
 
 _JACCARD_BRUTE_TAIL = """
@@ -222,11 +223,6 @@ BRUTE["join_scd2_point_in_time"] = """
      AND (d.valid_to IS NULL OR f.l_shipdate < d.valid_to)
     GROUP BY 1, 2
 """
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="module")

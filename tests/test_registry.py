@@ -97,17 +97,14 @@ def test_every_oracle_is_live_at_sf001():
     HERE, with a reason."""
     import duckdb
 
+    from distgrep_spark.sources.catalog import TABLES
     from tests.conftest import SF_ORACLE
 
     zero_row_allowlist = {
         "grep_zero_matches",  # 0-row parity with the reference IS the test
     }
-    tables = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
     con = duckdb.connect()
-    for t in tables:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
         )
@@ -774,6 +771,156 @@ def q_seeded(spark, cents, rows):
         "one-row range": 1,
     }
     assert _literal_sites("functions/literals.py", seeded) == {}
+
+
+def _unset_keywords(defs: dict[str, str], calls: list[str]) -> set[tuple[str, str]]:
+    """(function, parameter) for every defaulted parameter of a function
+    in the ``defs`` modules ({path: source}) that no call in ``calls``
+    (module sources) passes, by keyword or by position. Registered
+    ``q_*`` queries are skipped: their signature is the driver contract.
+    A call matches on the callee's bare name, so a same-named function
+    elsewhere can only make the scan more lenient. ``f(**kw)`` inside a
+    function whose own ``**kw`` it is forwards to ``f`` every keyword
+    that function's callers pass."""
+    import ast
+    from collections import defaultdict
+
+    params = []  # (function, parameter, positional index or None)
+    for src in defs.values():
+        for fn in ast.walk(ast.parse(src)):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+                for d in fn.decorator_list
+            ):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            self_arg = 1 if pos and pos[0].arg in ("self", "cls") else 0
+            first = len(pos) - len(a.defaults)
+            params += [(fn.name, p.arg, i - self_arg) for i, p in enumerate(pos) if i >= first]
+            params += [
+                (fn.name, p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+    keywords: dict = defaultdict(set)
+    positional: dict = defaultdict(int)
+    forwards = []  # (callee, function whose **kw the call passes on)
+    for src in calls:
+        tree = ast.parse(src)
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            starred = any(isinstance(a, ast.Starred) for a in call.args)
+            positional[name] = max(positional[name], 1 << 30 if starred else len(call.args))
+            for k in call.keywords:
+                if k.arg is not None:
+                    keywords[name].add(k.arg)
+                    continue
+                fn = parent.get(call)
+                while fn is not None and not (
+                    isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and fn.args.kwarg is not None
+                    and isinstance(k.value, ast.Name)
+                    and fn.args.kwarg.arg == k.value.id
+                ):
+                    fn = parent.get(fn)
+                if fn is not None:
+                    forwards.append((name, fn.name))
+    changed = True
+    while changed:
+        changed = False
+        for callee, via in forwards:
+            if not keywords[via] <= keywords[callee]:
+                keywords[callee] |= keywords[via]
+                changed = True
+    return {
+        (fn, name)
+        for fn, name, i in params
+        if name not in keywords[fn] and (i is None or i >= positional[fn])
+    }
+
+
+# Defaulted package parameters that only tests set, each with a test that
+# sets it: dropping one would delete checked behaviour.
+_TEST_ONLY_KEYWORDS = {
+    ("centroids_by", "group_col"): "test_clustering.py::test_centroids_by_label_long_form",
+    ("minhash_lsh_pairs", "n"): "test_dedup.py::test_minhash_estimate_invariants",
+    ("minhash_lsh_pairs", "num_hashes"): "test_dedup.py::test_minhash_rejects_indivisible_bands",
+    ("minhash_lsh_pairs", "bands"): "test_dedup.py::test_minhash_rejects_indivisible_bands",
+    ("salted_join", "how"): "test_dedup.py::test_salted_join_rejects_right_preserving",
+    ("connected_components", "max_iter"): "test_graph.py::test_convergence_guard_raises",
+    ("connected_components_star", "max_iter"): "test_graph.py::test_star_cc_convergence_guard_raises",
+    ("connected_components_star", "pre_contract"):
+        "test_graph.py::test_star_cc_precontract_matches_plain_on_all_shapes",
+    ("count_greater_join", "n_buckets"):
+        "test_rangejoin_property.py::test_banded_count_greater_matches_quadratic",
+    ("ann_lsh_topk", "dim"): "test_similarity.py::test_ann_deterministic",
+    ("ann_lsh_topk", "num_planes"): "test_similarity.py::test_zero_vector_scores_null_and_ranks_last",
+    ("ann_lsh_topk", "num_tables"): "test_similarity.py::test_zero_vector_scores_null_and_ranks_last",
+    ("countmin_build", "d"): "test_sketches_property.py::test_countmin_never_undercounts_and_builds_agree",
+    ("countmin_build", "w"): "test_sketches_property.py::test_countmin_never_undercounts_and_builds_agree",
+    ("countmin_probe", "d"): "test_sketches_property.py::test_countmin_unseen_key_estimates_bounded",
+    ("countmin_probe", "w"): "test_sketches_property.py::test_countmin_unseen_key_estimates_bounded",
+    ("grid_neighbor_pairs", "hot_threshold"): "test_spatial.py::test_salted_equals_unsalted",
+    ("grid_neighbor_pairs", "max_splits"): "test_spatial.py::test_split_factor_cap",
+    ("read_csv", "sep"): "test_sources.py::test_read_csv_explicit_schema",
+    ("sessionize_with_timeout", "watermark"): "test_streaming.py::test_sessionize_with_timeout",
+}
+
+
+def test_operator_keywords_have_a_caller():
+    """An operator parameter exists only when a caller outside the tests
+    sets it; a default nobody overrides is a literal at its use site (94
+    such parameters in 45 functions had piled up). Callers are the
+    package, tools/, bench.py, __spark_entry__.py and perfbench/. The
+    allowlist must stay exact: each entry is still unset outside the
+    tests and still set by one."""
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+
+    def sources(*patterns):
+        paths = sorted({p for pat in patterns for p in glob.glob(os.path.join(root, pat), recursive=True)})
+        return {os.path.relpath(p, root): open(p).read() for p in paths}
+
+    pkg = sources("distgrep_spark/**/*.py")
+    callers = list(pkg.values()) + list(
+        sources("tools/**/*.py", "bench.py", "__spark_entry__.py", "perfbench/**/*.py").values()
+    )
+    tests = list(sources("tests/**/*.py").values())
+    unset = _unset_keywords(pkg, callers)
+    assert sorted(unset - set(_TEST_ONLY_KEYWORDS)) == []
+    assert sorted(set(_TEST_ONLY_KEYWORDS) - unset) == []
+    assert sorted(_unset_keywords(pkg, callers + tests) & set(_TEST_ONLY_KEYWORDS)) == []
+
+
+def test_keyword_lint_catches_seeded_option():
+    seeded = """
+@query("q")
+def q_seeded(spark, sf_dir, limit=10):
+    return op(spark.table("t"), 3)
+
+def op(df, k=2, text_col="text", *, how="inner", id_col="doc_id"):
+    return run(df, how="left")
+
+def run(df, **kw):
+    return join(df, **kw)
+
+def join(df, how="inner", tie="id"):
+    return df
+"""
+    assert _unset_keywords({"seeded.py": seeded}, [seeded]) == {
+        ("op", "text_col"),
+        ("op", "how"),
+        ("op", "id_col"),
+        ("join", "tie"),
+    }
+    assert _unset_keywords({"seeded.py": seeded}, [seeded, "op(df, how='x', id_col='y')"]) == {
+        ("op", "text_col"),
+        ("join", "tie"),
+    }
 
 
 def test_tokenizer_lives_only_in_textfns():

@@ -35,10 +35,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+from distgrep_spark.sources.catalog import TABLES
 
 # Operators whose output cardinality is bounded by a constant regardless
 # of input scale — a cross product against one of these is a broadcast,

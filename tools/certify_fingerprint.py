@@ -26,11 +26,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from distgrep_spark.sources.catalog import TABLES
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/tmp/soak_sf_x64"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
 
 # Per-query fingerprint SELECT (dialect-shared; runs over `t` = the full
 # result set on both engines). Every aggregate is DECIMAL(38,0)-exact.

@@ -42,8 +42,9 @@ from decimal import Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from distgrep_spark.sources.catalog import TABLES
+
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def norm_cell(v):

@@ -42,7 +42,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem events embeddings".split()
+from distgrep_spark.sources import catalog
+
+# Every fixture table except the documents table this tool replaces.
+TABLES = [t for t in catalog.TABLES if t != "documents"]
 
 # BM25's fixed query vocabulary (queries/llm.py _BM25_QT) pinned at
 # spread ranks — rank ~5 is near-stopword-common, rank ~1200 is rare.

@@ -39,10 +39,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from distgrep_spark.sources.catalog import TABLES
+
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/tmp/soak_sf_x64"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/x64_planted"
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 # Fresh vocabulary: none of these tokens occur in the fixture corpus
 # (the 31-token measured vocabulary is lowercase SQL-ish words).

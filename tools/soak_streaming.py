@@ -254,7 +254,6 @@ def soak_churn(
     seconds: int,
     gen_seconds: int = 20,
     ttl_seconds: int = 15,
-    op=throttle_dedup,
 ) -> list[dict]:
     """Churn soak for throttle_dedup (round-6 verdict ask #4): rotate
     the key population every `gen_seconds` with a `ttl_seconds` TTL and
@@ -262,7 +261,7 @@ def soak_churn(
     capacity-planning evidence is state bytes FALLING after each
     cohort's last_seen + TTL passes the watermark, i.e. a non-monotone
     curve, not a plateau."""
-    df = op(
+    df = throttle_dedup(
         rate_events_churn(spark, rate, gen_seconds),
         watermark="5 seconds",
         ttl_seconds=ttl_seconds,
