@@ -11,8 +11,9 @@ now gone entirely: count-greater is an ORDER STATISTIC, so the operator
 is the distrank cumsum pattern (operators/distrank.py) over the UNION
 of values and probes:
 
-    boundaries = approx_percentile(value, B-1 fracs)      -- one pass
-    union      = values(tag 0) ++ probes(tag 1), bucketed map-side
+    union      = values(tag 0) ++ probes(tag 1)
+    boundaries = approx_percentile(union value, B-1 fracs) -- one pass
+    buckets    = assigned map-side
     n_le(p)    = offset[bucket] + running count of value rows
                  OVER (PARTITION BY bucket ORDER BY val, tag)
     n_greater  = |V| - n_le                               -- map-side
@@ -36,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distgrep_spark.operators.distrank import BUCKETS, rank_buckets
+
 
 def count_greater_join(
     probes: DataFrame,
@@ -44,20 +47,14 @@ def count_greater_join(
     probe_col: str,
     value_col: str,
     keys: list[str],
-    n_buckets: int = 64,
+    n_buckets: int = BUCKETS,
 ) -> DataFrame:
     """For each probe row, count value rows with value strictly greater
     than the probe's. Returns ``keys + [n_greater]``, omitting probes
     with a zero count (inner-join semantics, matching the plain theta
-    join + groupBy it replaces). ``keys`` must identify probe rows."""
-    from distgrep_spark.functions.literals import array_lit
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
-
-    bs = percentile_boundaries(values, value_col, n_buckets)
+    join + groupBy it replaces). ``keys`` must identify probe rows.
+    As in SQL ``v > p``, a NULL value is never counted and a NULL probe
+    has no row."""
     v = values.select(
         F.col(value_col).cast("double").alias("_val"),
         F.lit(0).alias("_tag"),
@@ -66,29 +63,29 @@ def count_greater_join(
             for k in keys
         ],
     )
-    p = probes.select(
+    p = probes.where(F.col(probe_col).isNotNull()).select(
         F.col(probe_col).cast("double").alias("_val"),
         F.lit(1).alias("_tag"),
         *keys,
     )
-    u = v.unionByName(p).selectExpr(
-        "*", f"{bucket_expr('_val', bs, 'double')} AS _bk"
+    # NULL values sort first into bucket 0, so every probe's n_le counts
+    # them and the total cancels them.
+    u, offs, tot = rank_buckets(
+        v.unionByName(p),
+        {"_bk": "_val"},
+        {"vc": ("sum", "1 - _tag")},
+        n_buckets=n_buckets,
     )
-    pre, tot = exclusive_prefixes(
-        u, "_bk", {"vc": "CAST(sum(1 - _tag) AS BIGINT)"}, {"vc": "sum"}
-    )
-    total = tot["vc"]
-    offs = array_lit(pre["vc"], "bigint")
     ranked = u.selectExpr(
         *keys,
         "_tag",
-        f"element_at({offs}, _bk + 1) + "
+        f"{offs['_bk', 'vc']} + "
         "sum(CASE WHEN _tag = 0 THEN 1 ELSE 0 END) OVER "
         "(PARTITION BY _bk ORDER BY _val, _tag "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _n_le",
     )
     return (
         ranked.where("_tag = 1")
-        .selectExpr(*keys, f"CAST({total} - _n_le AS BIGINT) AS n_greater")
+        .selectExpr(*keys, f"CAST({tot['vc']} - _n_le AS BIGINT) AS n_greater")
         .where(F.col("n_greater") > 0)
     )

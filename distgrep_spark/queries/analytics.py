@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.literals import array_lit, local_table
+from distgrep_spark.functions.literals import local_table
 from distgrep_spark.functions.numeric import dsum, sorted_sum
 from distgrep_spark.functions.pairs import cross_pairs, list_pairs, postings
 from distgrep_spark.functions.textfns import (
@@ -564,10 +564,7 @@ def q_orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned. At 100 TB only the bucket count changes.
     Companion ``orders_rfm_quartiles`` keeps the approximate-boundary
     map-side-assignment variant (no rank at all)."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        ntile_expr,
-    )
+    from distgrep_spark.operators.distrank import ntile_expr, rank_buckets
 
     o = load_table(spark, sf_dir, "orders")
     rfm = (
@@ -582,71 +579,27 @@ def q_orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    # One job pulls all three boundary sets (<= 3*63 scalars).
-    fracs = ", ".join(repr(i / 64) + "D" for i in range(1, 64))
-    brow = rfm.agg(
-        *[
-            F.expr(f"approx_percentile({k}, array({fracs}), 10000)").alias(k)
-            for k in ("recency_days", "frequency", "monetary")
-        ]
-    ).first()
-
-    def _bounds(key: str) -> list:
-        raw = [] if brow is None or brow[key] is None else brow[key]
-        return sorted({b for b in raw if b is not None})
-
-    dims = [
-        ("r", "recency_days", "bigint", _bounds("recency_days")),
-        ("f", "frequency", "bigint", _bounds("frequency")),
-        ("m", "monetary", "double", _bounds("monetary")),
-    ]
-    bucketed = rfm.selectExpr(
+    # ONE boundary job and ONE offsets job for all three dimensions
+    # (x16 soak: the per-pass cost scales with the entity count, so
+    # pass-count is the x1 overhead knob).
+    dims = {"r": "recency_days", "f": "frequency", "m": "monetary"}
+    bucketed, offs, tot = rank_buckets(
+        rfm, {f"{d}_bk": key for d, key in dims.items()}, {"n": ("sum", "1")}
+    )
+    n = tot["n"]
+    ranked = bucketed.selectExpr(
         "o_custkey",
-        "recency_days",
-        "frequency",
         "monetary",
         *[
-            f"{bucket_expr(key, bs, typ)} AS {d}_bk"
-            for d, key, typ, bs in dims
+            f"{offs[f'{d}_bk', 'n']} + row_number() OVER "
+            f"(PARTITION BY {d}_bk ORDER BY {key}, o_custkey) AS {d}_rnk"
+            for d, key in dims.items()
         ],
     )
-    # ONE offsets job for all three dimensions (explode the three bucket
-    # ids into (dim, bucket) rows): 3 x <=64 counts to the driver in a
-    # single pass over the checkpointed rollup instead of three
-    # exclusive_prefixes jobs (x16 soak: the per-pass cost scales with
-    # the entity count, so pass-count is the x1 overhead knob).
-    cnt_rows = (
-        bucketed.selectExpr(
-            "explode(array("
-            "named_struct('d', 'r', 'bk', r_bk), "
-            "named_struct('d', 'f', 'bk', f_bk), "
-            "named_struct('d', 'm', 'bk', m_bk))) AS e"
-        )
-        .groupBy("e.d", "e.bk")
-        .count()
-        .collect()
-    )
-    by_dim: dict = {"r": {}, "f": {}, "m": {}}
-    for row in cnt_rows:
-        by_dim[row["d"]][row["bk"]] = row["count"]
-    n = sum(by_dim["r"].values())
-    rank_exprs = []
-    for d, key, _typ, _bs in dims:
-        cnts = by_dim[d]
-        pre, acc = [], 0
-        for b in range(max(cnts, default=0) + 1):
-            pre.append(acc)
-            acc += cnts.get(b, 0)
-        offs = array_lit(pre or [0], "bigint")
-        rank_exprs.append(
-            f"element_at({offs}, {d}_bk + 1) + row_number() OVER "
-            f"(PARTITION BY {d}_bk ORDER BY {key}, o_custkey) AS {d}_rnk"
-        )
-    ranked = bucketed.selectExpr("o_custkey", "monetary", *rank_exprs)
     tiled = ranked.selectExpr(
         "o_custkey",
         "monetary",
-        *[f"{ntile_expr(f'{d}_rnk', n, 5)} AS {d}" for d, *_ in dims],
+        *[f"{ntile_expr(f'{d}_rnk', n, 5)} AS {d}" for d in dims],
     )
     return tiled.groupBy(
         F.concat(
@@ -1475,11 +1428,7 @@ def q_part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-price count and the join broadcasts; no single-partition
     window anywhere. Exactness is boundary-independent (the unchanged
     quadratic-free oracle certifies it)."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
 
     p = load_table(spark, sf_dir, "part").selectExpr(
         "p_partkey",
@@ -1491,16 +1440,11 @@ def q_part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("CAST(max(size) AS BIGINT)").alias("msize"))
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(m, "cents", 64)
-    mb = m.selectExpr(
-        "cents", "msize", f"{bucket_expr('cents', bs, 'bigint')} AS bk"
-    )
-    pre, _tot = exclusive_prefixes(mb, "bk", {"mx": "max(msize)"}, {"mx": "max"})
-    offs = array_lit(pre["mx"], "bigint")
+    mb, offs, _ = rank_buckets(m, {"bk": "cents"}, {"mx": ("max", "msize")})
     scored = mb.selectExpr(
         "cents",
         "msize AS best_same_price",
-        f"greatest(element_at({offs}, bk + 1), "
+        f"greatest({offs['bk', 'mx']}, "
         "max(msize) OVER (PARTITION BY bk ORDER BY cents "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)) AS best_cheaper",
     )
@@ -2248,11 +2192,7 @@ def q_part_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame
     ``sum() OVER ()``. One partkey exchange for both rollups; no
     Exchange SinglePartition; the unchanged global-window oracle
     certifies exactness."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
     li = load_table(spark, sf_dir, "lineitem")
     monthly = (
         li.selectExpr(
@@ -2277,19 +2217,16 @@ def q_part_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(per_part, "revenue_cents", 64, descending=True)
-    pb = per_part.selectExpr(
-        "*",
-        f"{bucket_expr('revenue_cents', bs, 'bigint', descending=True)} AS bk",
-    )
-    pre, tot = exclusive_prefixes(
-        pb, "bk", {"s": "CAST(sum(revenue_cents) AS BIGINT)"}, {"s": "sum"}
+    pb, offs, tot = rank_buckets(
+        per_part,
+        {"bk": "revenue_cents"},
+        {"s": ("sum", "revenue_cents")},
+        descending=True,
     )
     total_rev = tot["s"]
-    offs = array_lit(pre["s"], "bigint")
     ranked = pb.selectExpr(
         "*",
-        f"CAST(element_at({offs}, bk + 1) + "
+        f"CAST({offs['bk', 's']} + "
         "sum(revenue_cents) OVER (PARTITION BY bk "
         "ORDER BY revenue_cents DESC, l_partkey "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)"
@@ -2938,11 +2875,7 @@ def q_orders_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cents, custkey) total order so tied spends don't make G
     layout-dependent; no Exchange SinglePartition over the rollup. The
     unchanged global-window oracle certifies exactness."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
 
     orders = load_table(spark, sf_dir, "orders")
     spend = (
@@ -2953,17 +2886,10 @@ def q_orders_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("CAST(sum(c) AS BIGINT) AS cents"))
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(spend, "cents", 64)
-    sb = spend.selectExpr(
-        "o_custkey", "cents", f"{bucket_expr('cents', bs, 'bigint')} AS bk"
-    )
-    pre, _tot = exclusive_prefixes(
-        sb, "bk", {"cnt": "CAST(count(*) AS BIGINT)"}, {"cnt": "sum"}
-    )
-    offs = array_lit(pre["cnt"], "bigint")
+    sb, offs, _ = rank_buckets(spend, {"bk": "cents"}, {"cnt": ("sum", "1")})
     ranked = sb.selectExpr(
         "cents",
-        f"element_at({offs}, bk + 1) + row_number() OVER "
+        f"{offs['bk', 'cnt']} + row_number() OVER "
         "(PARTITION BY bk ORDER BY cents, o_custkey) AS rnk",
     )
     s = ranked.agg(
@@ -4117,11 +4043,7 @@ def q_orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     date filters push to the same parquet scan), distrank's bounded
     driver passes per period, and a key-partitioned full-outer join —
     nothing funnels through one task as customers grow."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
 
     o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
@@ -4139,27 +4061,20 @@ def q_orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.expr("CAST(sum(cents) AS BIGINT) AS cents"))
             .localCheckpoint(eager=False)
         )
-        bs = percentile_boundaries(r, "cents", 64, descending=True)
-        rb = r.selectExpr(
-            "o_custkey",
-            "cents",
-            f"{bucket_expr('cents', bs, 'bigint', descending=True)} AS bk",
+        rb, offs, tot = rank_buckets(
+            r, {"bk": "cents"}, {"c": ("sum", "cents")}, descending=True
         )
-        pre, tot = exclusive_prefixes(
-            rb, "bk", {"c": "CAST(sum(cents) AS BIGINT)"}, {"c": "sum"}
+        cum = (
+            f"({offs['bk', 'c']}"
+            " + sum(cents) OVER (PARTITION BY bk ORDER BY cents DESC,"
+            " o_custkey ROWS UNBOUNDED PRECEDING))"
         )
-        offs = array_lit(pre["c"], "bigint")
-        total = int(tot["c"] or 0)
         return rb.selectExpr(
             f"o_custkey AS {out_key}",
-            f"CASE WHEN (element_at({offs}, bk + 1)"
-            " + sum(cents) OVER (PARTITION BY bk ORDER BY cents DESC,"
-            " o_custkey ROWS UNBOUNDED PRECEDING)) * 100"
-            f" <= CAST({total} AS BIGINT) * 80 THEN 'A'"
-            f" WHEN (element_at({offs}, bk + 1)"
-            " + sum(cents) OVER (PARTITION BY bk ORDER BY cents DESC,"
-            " o_custkey ROWS UNBOUNDED PRECEDING)) * 100"
-            f" <= CAST({total} AS BIGINT) * 95 THEN 'B'"
+            f"CASE WHEN {cum} * 100"
+            f" <= CAST({tot['c']} AS BIGINT) * 80 THEN 'A'"
+            f" WHEN {cum} * 100"
+            f" <= CAST({tot['c']} AS BIGINT) * 95 THEN 'B'"
             f" ELSE 'C' END AS {out_cls}",
         )
 
@@ -4555,11 +4470,7 @@ def q_orders_fsegment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded boundary/offsets pull (<= 2 x 64 scalars), one
     co-partitioned self-join on customer for the matrix; output is
     <= 36 cells."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        ntile_expr,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import ntile_expr, rank_buckets
 
     o = load_table(spark, sf_dir, "orders")
     span = o.agg(
@@ -4577,37 +4488,19 @@ def q_orders_fsegment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("CAST(count(*) AS BIGINT) AS freq"))
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(fc, "freq", 64)
-    fb = fc.selectExpr(
-        "h", "o_custkey", "freq", f"{bucket_expr('freq', bs, 'bigint')} AS bk"
-    )
-    cnt_rows = fb.groupBy("h", "bk").count().collect()
-    by_h: dict = {1: {}, 2: {}}
-    for row in cnt_rows:
-        by_h[row["h"]][row["bk"]] = row["count"]
-    offs_sql = {}
-    n_h = {}
-    for h in (1, 2):
-        cnts = by_h[h]
-        pre, acc = [], 0
-        for b in range(max(cnts, default=0) + 1):
-            pre.append(acc)
-            acc += cnts.get(b, 0)
-        offs_sql[h] = array_lit(pre or [0], "bigint")
-        n_h[h] = acc
+    fb, offs, tot = rank_buckets(fc, {"bk": "freq"}, {"n": ("sum", "1")}, by="h")
+    n_h = tot["n"]
     ranked = fb.selectExpr(
         "h",
         "o_custkey",
-        f"CASE WHEN h = 1 THEN element_at({offs_sql[1]}, bk + 1)"
-        f" ELSE element_at({offs_sql[2]}, bk + 1) END"
-        " + row_number() OVER (PARTITION BY h, bk"
+        f"{offs['bk', 'n']} + row_number() OVER (PARTITION BY h, bk"
         " ORDER BY freq, o_custkey) AS rnk",
     )
     tiled = ranked.selectExpr(
         "h",
         "o_custkey",
-        f"CASE WHEN h = 1 THEN {ntile_expr('rnk', n_h[1], 5)}"
-        f" ELSE {ntile_expr('rnk', n_h[2], 5)} END AS f",
+        f"CASE WHEN h = 1 THEN {ntile_expr('rnk', n_h.get(1, 0), 5)}"
+        f" ELSE {ntile_expr('rnk', n_h.get(2, 0), 5)} END AS f",
     )
     h1 = tiled.where("h = 1").selectExpr("o_custkey", "f AS f1")
     h2 = tiled.where("h = 2").selectExpr("o_custkey", "f AS f2")

@@ -58,7 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.literals import array_lit, local_table
+from distgrep_spark.functions.literals import local_table
 from distgrep_spark.functions.pairs import list_pairs
 from distgrep_spark.operators.similarity import INT8_GRID, int_l2sq
 from distgrep_spark.queries.analytics import _ER_RECS_SQL
@@ -437,29 +437,17 @@ def q_corpus_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same distrank treatment keyed per source (boundaries from
     approx_percentile grouped by source) — the machinery is
     composition-ready, the shipped plan shows the pooled side."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
 
     docs = (
         load_table(spark, sf_dir, "documents")
         .selectExpr("doc_id", "source", "CAST(n_chars AS BIGINT) AS v")
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(docs, "v", 64)
-    db = docs.selectExpr(
-        "doc_id", "source", "v", f"{bucket_expr('v', bs, 'bigint')} AS bk"
-    )
-    pre, tot = exclusive_prefixes(
-        db, "bk", {"cnt": "CAST(count(*) AS BIGINT)"}, {"cnt": "sum"}
-    )
-    n_total = int(tot["cnt"] or 0)
-    offs = array_lit(pre["cnt"], "bigint")
+    db, offs, tot = rank_buckets(docs, {"bk": "v"}, {"cnt": ("sum", "1")})
     pooled = db.selectExpr(
         "v AS pooled_val",
-        f"element_at({offs}, bk + 1) + row_number() OVER"
+        f"{offs['bk', 'cnt']} + row_number() OVER"
         " (PARTITION BY bk ORDER BY v, doc_id) AS t",
     )
     src = docs.selectExpr(
@@ -471,7 +459,7 @@ def q_corpus_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt = src.selectExpr(
         "source",
         "v",
-        f"((2 * r - 1) * CAST({n_total} AS BIGINT)) DIV (2 * ns) + 1 AS t",
+        f"((2 * r - 1) * CAST({tot['cnt']} AS BIGINT)) DIV (2 * ns) + 1 AS t",
     )
     m = tgt.join(pooled, "t")
     return m.groupBy("source").agg(

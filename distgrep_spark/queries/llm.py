@@ -1559,11 +1559,7 @@ def q_pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     is localCheckpoint'ed so the boundary/offset passes don't re-split
     every document. No Exchange SinglePartition; the unchanged
     global-window oracle certifies the bucketed cumsum exactly."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
 
     d = load_table(spark, sf_dir, "documents")
     toks = (
@@ -1572,18 +1568,11 @@ def q_pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(toks, "doc_id", 64)
-    tb = toks.selectExpr(
-        "doc_id", "n_tokens", f"{bucket_expr('doc_id', bs, 'bigint')} AS bk"
-    )
-    pre, _tot = exclusive_prefixes(
-        tb, "bk", {"s": "CAST(sum(n_tokens) AS BIGINT)"}, {"s": "sum"}
-    )
-    offs = array_lit(pre["s"], "bigint")
+    tb, offs, _ = rank_buckets(toks, {"bk": "doc_id"}, {"s": ("sum", "n_tokens")})
     return tb.selectExpr(
         "doc_id",
         "n_tokens",
-        f"CAST((element_at({offs}, bk + 1) + sum(n_tokens) OVER "
+        f"CAST(({offs['bk', 's']} + sum(n_tokens) OVER "
         "(PARTITION BY bk ORDER BY doc_id "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens) "
         "DIV 2048 AS BIGINT) AS batch_id",

@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.literals import array_lit
 from distgrep_spark.functions.pairs import list_pairs, postings
 from distgrep_spark.functions.textfns import (
     TOKENS_DUCK,
@@ -1691,11 +1690,7 @@ def q_events_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     cumulative share is a ratio of exact BIGINTs; max() per decile is
     order-free; the unchanged global-window oracle certifies the
     bucketed form exactly."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
 
     ev = load_table(spark, sf_dir, "events")
     per_user = (
@@ -1703,26 +1698,18 @@ def q_events_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(per_user, "n", 64, descending=True)
-    pb = per_user.selectExpr(
-        "user_id",
-        "n",
-        f"{bucket_expr('n', bs, 'bigint', descending=True)} AS bk",
-    )
-    pre, tot = exclusive_prefixes(
-        pb,
-        "bk",
-        {"cnt": "CAST(count(*) AS BIGINT)", "s": "CAST(sum(n) AS BIGINT)"},
-        {"cnt": "sum", "s": "sum"},
+    pb, offs, tot = rank_buckets(
+        per_user,
+        {"bk": "n"},
+        {"cnt": ("sum", "1"), "s": ("sum", "n")},
+        descending=True,
     )
     n_users = max(tot["cnt"], 1)
     total_n = max(tot["s"], 1)
-    cnt_offs = array_lit(pre["cnt"], "bigint")
-    sum_offs = array_lit(pre["s"], "bigint")
     ranked = pb.selectExpr(
-        f"element_at({cnt_offs}, bk + 1) + row_number() OVER "
+        f"{offs['bk', 'cnt']} + row_number() OVER "
         "(PARTITION BY bk ORDER BY n DESC, user_id) AS rk",
-        f"CAST(element_at({sum_offs}, bk + 1) + sum(n) OVER "
+        f"CAST({offs['bk', 's']} + sum(n) OVER "
         "(PARTITION BY bk ORDER BY n DESC, user_id "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_n",
     )

@@ -80,7 +80,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distgrep_spark.functions.literals import array_lit
 from distgrep_spark.operators.graph import copurchase_edges
 from distgrep_spark.queries.registry import query
 from distgrep_spark.sources.catalog import load_table
@@ -1416,11 +1415,7 @@ def q_stats_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition; the final reduce is a 4-scalar aggregate. The oracle
     twin is the plain global window — the same exactness certificate as
     orders_gini_spend."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
 
     orders = load_table(spark, sf_dir, "orders")
     pool = orders.where(
@@ -1437,18 +1432,11 @@ def q_stats_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(v, "cents", 64)
-    vb = v.selectExpr(
-        "cents", "n_v", "a_v", f"{bucket_expr('cents', bs, 'bigint')} AS bk"
-    )
-    pre, _tot = exclusive_prefixes(
-        vb, "bk", {"cnt": "CAST(sum(n_v) AS BIGINT)"}, {"cnt": "sum"}
-    )
-    offs = array_lit(pre["cnt"], "bigint")
+    vb, offs, _ = rank_buckets(v, {"bk": "cents"}, {"cnt": ("sum", "n_v")})
     r = vb.selectExpr(
         "n_v",
         "a_v",
-        f"element_at({offs}, bk + 1) + sum(n_v) OVER "
+        f"{offs['bk', 'cnt']} + sum(n_v) OVER "
         "(PARTITION BY bk ORDER BY cents "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_v AS c_lt",
     )
@@ -2336,11 +2324,7 @@ def q_stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the plain global window. The crossing scan is one
     map-side-combinable conditional-min aggregate — sequential
     semantics without a sequential executor."""
-    from distgrep_spark.operators.distrank import (
-        bucket_expr,
-        exclusive_prefixes,
-        percentile_boundaries,
-    )
+    from distgrep_spark.operators.distrank import rank_buckets
 
     ev = load_table(spark, sf_dir, "events")
     u = (
@@ -2356,23 +2340,14 @@ def q_stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    bs = percentile_boundaries(u, "user_id", 64)
-    ub = u.selectExpr(
-        "user_id", "conv", f"{bucket_expr('user_id', bs, 'bigint')} AS bk"
+    ub, offs, _ = rank_buckets(
+        u, {"bk": "user_id"}, {"cnt": ("sum", "1"), "sc": ("sum", "conv")}
     )
-    pre, _tot = exclusive_prefixes(
-        ub,
-        "bk",
-        {"cnt": "CAST(count(*) AS BIGINT)", "sc": "CAST(sum(conv) AS BIGINT)"},
-        {"cnt": "sum", "sc": "sum"},
-    )
-    offs_t = array_lit(pre["cnt"], "bigint")
-    offs_s = array_lit(pre["sc"], "bigint")
     w = ub.selectExpr(
         "conv",
-        f"element_at({offs_t}, bk + 1) + row_number() OVER"
+        f"{offs['bk', 'cnt']} + row_number() OVER"
         " (PARTITION BY bk ORDER BY user_id) AS t",
-        f"element_at({offs_s}, bk + 1) + sum(conv) OVER"
+        f"{offs['bk', 'sc']} + sum(conv) OVER"
         " (PARTITION BY bk ORDER BY user_id ROWS UNBOUNDED PRECEDING) AS s",
     )
     llr = w.selectExpr("t", f"{_SPRT_STEP} * (2 * s - t) AS l").localCheckpoint(eager=False)

@@ -1,58 +1,57 @@
 """Property-based verification of the distributed order-statistic
 machinery (operators/distrank.py): for ARBITRARY small inputs, the
-bucketed two-pass forms must equal the plain global window / Python
-reference — ties, negatives, duplicates, empty inputs, and tiny bucket
-counts (B=2..4 forces rows across bucket boundaries, the off-by-one
-surface). The fixture oracles prove one dataset per query; these prove
-the algebra the five rewritten queries and count_greater_join share."""
+bucketed two-pass forms must equal the plain global window — ties,
+negatives, duplicates, NULL keys, empty inputs, and tiny bucket counts
+(B=2..4 forces rows across bucket boundaries, the off-by-one surface).
+The fixture oracles prove one dataset per query; these prove the
+algebra that the twelve ``rank_buckets`` callers share."""
 
 from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from distgrep_spark.functions.literals import array_lit
-from distgrep_spark.operators.distrank import (
-    bucket_expr,
-    exclusive_prefixes,
-    ntile_expr,
-    percentile_boundaries,
-)
+from distgrep_spark.operators.distrank import ntile_expr, rank_buckets
 
-# boundary-hugging values: duplicates and negatives on purpose
+# boundary-hugging values: duplicates, negatives and NULLs on purpose
 _KEYS = st.lists(
-    st.sampled_from([-3, -1, 0, 0, 1, 2, 2, 2, 5, 7, 11]),
+    st.sampled_from([None, -3, -1, 0, 0, 1, 2, 2, 2, 5, 7, 11]),
     min_size=0,
     max_size=12,
 )
 
 
 def _ranked(spark, keys, n_buckets, descending=False):
+    """(bucketed, global) rows of rank and running sum per rid."""
     df = spark.createDataFrame(
-        [(i, int(k)) for i, k in enumerate(keys)], "rid long, k long"
+        list(enumerate(keys)), "rid long, k long"
     ).localCheckpoint()
-    bs = percentile_boundaries(df, "k", n_buckets, descending=descending)
-    b = df.selectExpr(
-        "rid", "k", f"{bucket_expr('k', bs, 'bigint', descending=descending)} AS bk"
-    )
-    pre, tot = exclusive_prefixes(
-        b,
-        "bk",
-        {"cnt": "CAST(count(*) AS BIGINT)", "s": "CAST(sum(k) AS BIGINT)"},
-        {"cnt": "sum", "s": "sum"},
+    b, offs, tot = rank_buckets(
+        df,
+        {"bk": "k"},
+        {"cnt": ("sum", "1"), "s": ("sum", "k")},
+        descending=descending,
+        n_buckets=n_buckets,
     )
     order = "k DESC, rid" if descending else "k, rid"
-    out = b.selectExpr(
-        "rid",
-        "k",
-        f"element_at({array_lit(pre['cnt'], 'bigint')}, bk + 1) + "
-        f"row_number() OVER (PARTITION BY bk ORDER BY {order}) AS rnk",
-        f"element_at({array_lit(pre['s'], 'bigint')}, bk + 1) + "
-        f"sum(k) OVER (PARTITION BY bk ORDER BY {order} "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum",
-    ).collect()
-    return out, tot
+
+    def windows(part):
+        return (
+            f"row_number() OVER ({part} ORDER BY {order}) AS rnk",
+            f"sum(k) OVER ({part} ORDER BY {order} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum",
+        )
+
+    rnk, cum = windows("PARTITION BY bk")
+    got = b.selectExpr(
+        "rid", f"{offs['bk', 'cnt']} + {rnk}", f"{offs['bk', 's']} + {cum}"
+    )
+    want = df.selectExpr("rid", *windows(""))
+    return (
+        {r["rid"]: (r["rnk"], r["cum"]) for r in got.collect()},
+        {r["rid"]: (r["rnk"], r["cum"]) for r in want.collect()},
+        tot,
+    )
 
 
 @settings(
@@ -62,18 +61,10 @@ def _ranked(spark, keys, n_buckets, descending=False):
 )
 @given(keys=_KEYS, n_buckets=st.sampled_from([2, 3, 4, 64]))
 def test_bucketed_rank_and_cumsum_match_global(spark, keys, n_buckets):
-    rows, tot = _ranked(spark, keys, n_buckets)
-    # python reference: global order (k, rid)
-    order = sorted(range(len(keys)), key=lambda i: (keys[i], i))
-    want_rank = {rid: r + 1 for r, rid in enumerate(order)}
-    want_cum, acc = {}, 0
-    for rid in order:
-        acc += keys[rid]
-        want_cum[rid] = acc
+    got, want, tot = _ranked(spark, keys, n_buckets)
     assert tot["cnt"] == len(keys)
-    for r in rows:
-        assert r["rnk"] == want_rank[r["rid"]], (keys, n_buckets)
-        assert r["cum"] == want_cum[r["rid"]], (keys, n_buckets)
+    assert tot["s"] == sum(k for k in keys if k is not None)
+    assert got == want, (keys, n_buckets)
 
 
 @settings(
@@ -83,11 +74,10 @@ def test_bucketed_rank_and_cumsum_match_global(spark, keys, n_buckets):
 )
 @given(keys=_KEYS)
 def test_bucketed_rank_descending(spark, keys):
-    rows, _ = _ranked(spark, keys, 3, descending=True)
-    order = sorted(range(len(keys)), key=lambda i: (-keys[i], i))
-    want = {rid: r + 1 for r, rid in enumerate(order)}
-    for r in rows:
-        assert r["rnk"] == want[r["rid"]], keys
+    """Ranks only: NULL keys sort last, so a bucket may open with NULL
+    summands, where a window sum reads NULL (rank_buckets docstring)."""
+    got, want, _ = _ranked(spark, keys, 3, descending=True)
+    assert {r: v[0] for r, v in got.items()} == {r: v[0] for r, v in want.items()}, keys
 
 
 @settings(
@@ -115,13 +105,12 @@ def test_ntile_expr_matches_sql_standard(spark, keys, n, k):
 
 def test_empty_input_degrades(spark):
     df = spark.createDataFrame([], "rid long, k long")
-    bs = percentile_boundaries(df, "k", 64)
-    assert bs == []
-    assert bucket_expr("k", bs, "bigint") == "CAST(0 AS INT)"
-    pre, tot = exclusive_prefixes(
-        df.selectExpr("rid", "k", "0 AS bk"),
-        "bk",
-        {"cnt": "CAST(count(*) AS BIGINT)"},
-        {"cnt": "sum"},
+    b, offs, tot = rank_buckets(
+        df, {"bk": "k"}, {"cnt": ("sum", "1"), "mx": ("max", "k")}
     )
-    assert pre == {"cnt": [0]} and tot == {"cnt": 0}
+    assert b.columns == ["rid", "k", "bk"] and b.count() == 0
+    one = spark.range(1).selectExpr("0 AS bk").selectExpr(
+        f"{offs['bk', 'cnt']} AS cnt", f"{offs['bk', 'mx']} AS mx"
+    )
+    assert one.first().asDict() == {"cnt": 0, "mx": None}
+    assert tot == {"cnt": 0, "mx": None}

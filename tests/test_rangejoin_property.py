@@ -14,16 +14,11 @@ from distgrep_spark.operators.rangejoin import count_greater_join
 
 # Values cluster around bucket boundaries (width 1.0 below) on purpose:
 # exact multiples, ties, and negatives are the cases a banded
-# decomposition gets wrong if the bucket math is off by one.
-_VALS = st.lists(
-    st.sampled_from([-2.0, -1.0, -0.5, 0.0, 0.5, 1.0, 1.5, 2.0, 3.0]),
-    max_size=10,
-)
-_PROBES = st.lists(
-    st.sampled_from([-2.0, -1.0, -0.5, 0.0, 0.5, 1.0, 1.5, 2.0, 3.0]),
-    min_size=1,
-    max_size=6,
-)
+# decomposition gets wrong if the bucket math is off by one. NULL
+# follows SQL ``v > p``: never counted, and a NULL probe has no row.
+_POINTS = [None, -2.0, -1.0, -0.5, 0.0, 0.5, 1.0, 1.5, 2.0, 3.0]
+_VALS = st.lists(st.sampled_from(_POINTS), max_size=10)
+_PROBES = st.lists(st.sampled_from(_POINTS), min_size=1, max_size=6)
 
 
 @settings(
@@ -33,14 +28,8 @@ _PROBES = st.lists(
 )
 @given(probes=_PROBES, values=_VALS)
 def test_banded_count_greater_matches_quadratic(spark, probes, values):
-    pdf = spark.createDataFrame(
-        [(i, float(p)) for i, p in enumerate(probes)], "pid long, pval double"
-    )
-    vdf = (
-        spark.createDataFrame([(float(v),) for v in values], "vval double")
-        if values
-        else spark.createDataFrame([], "vval double")
-    )
+    pdf = spark.createDataFrame(list(enumerate(probes)), "pid long, pval double")
+    vdf = spark.createDataFrame([(v,) for v in values], "vval double")
     got = {
         r["pid"]: r["n_greater"]
         for r in count_greater_join(
@@ -49,7 +38,7 @@ def test_banded_count_greater_matches_quadratic(spark, probes, values):
         ).collect()
     }
     for i, p in enumerate(probes):
-        want = sum(1 for v in values if v > p)
+        want = sum(1 for v in values if None not in (v, p) and v > p)
         if want:
             assert got[i] == want, (i, p, values)
         else:

@@ -653,7 +653,7 @@ _POSTING_SPELLINGS = {
 }
 
 
-def _posting_sites(src: str) -> dict[tuple[str, str], int]:
+def _posting_sites(src: str, spellings: dict = _POSTING_SPELLINGS) -> dict[tuple[str, str], int]:
     """{(top-level def, spelling): count} of hand-built posting lists and
     pair expansions in one module's code. ``ast.unparse`` merges adjacent
     string literals, so a fragment split over lines is seen whole;
@@ -672,7 +672,7 @@ def _posting_sites(src: str) -> dict[tuple[str, str], int]:
     sites: Counter = Counter()
     for stmt in tree.body:
         code = ast.unparse(stmt)
-        for spelling, rx in _POSTING_SPELLINGS.items():
+        for spelling, rx in spellings.items():
             sites[(getattr(stmt, "name", "<module>"), spelling)] += len(rx.findall(code))
     return {k: n for k, n in sites.items() if n}
 
@@ -719,6 +719,57 @@ def q_seeded(df):
         ("q_seeded", "posting list"): 1,
         ("q_seeded", "filter pairing"): 1,
         ("q_seeded", "cross expansion"): 1,
+    }
+
+
+_ORDER_STAT_SPELLINGS = {
+    "fraction sweep": re.compile(r"approx_percentile\(.*?,\s*array\("),
+    "offset lookup": re.compile(r"element_at\(.*?,\s*[\w{}]*bk\s*\+\s*1\s*\)"),
+    "private step": re.compile(
+        r"distrank(?:\s+import\s+[^\n]*?\b|\.)"
+        r"(?:_\w+|percentile_boundaries|bucket_expr|exclusive_prefixes)\b"
+    ),
+    "scalar literal": re.compile(r"\+\s*['\"][DL]['\"]|\}[DL]\b"),
+}
+
+
+def test_order_statistics_live_only_in_distrank():
+    """Every global rank, running sum and prefix max goes through
+    operators/distrank.rank_buckets: the boundary sweep, the bucket
+    offset lookup and the driver-value D/L literal are spelled there
+    only (the recipe had been pasted into 12 queries and the range
+    join). A scalar approx_percentile quality gate is not a sweep."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    found = {}
+    for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(p, pkg).replace(os.sep, "/")
+        if rel != "operators/distrank.py":
+            for (site, spelling), n in _posting_sites(open(p).read(), _ORDER_STAT_SPELLINGS).items():
+                found[(rel, site, spelling)] = n
+    assert found == {}
+
+
+def test_order_statistics_lint_catches_seeded_copies():
+    seeded = '''
+@query("q", oracle="SELECT approx_percentile(v, array(0.5D), 100)")
+def q_seeded(spark, df):
+    """approx_percentile(k, array(0.5D)) in a docstring is prose."""
+    from distgrep_spark.operators.distrank import _boundaries, ntile_expr
+    gate = df.agg(F.expr("approx_percentile(o_totalprice, 0.5, 10000)"))
+    fracs = ", ".join(repr(i / 64) + "D" for i in range(1, 64))
+    bs = df.agg(F.expr(f"approx_percentile(k, array({fracs}), 10000)")).first()
+    cut = " + ".join(f"CAST(k > {int(b)}L AS INT)" for b in bs[0])
+    return df.selectExpr(f"element_at({array_lit(pre, 'bigint')}, {d}_bk + 1)",
+                         f"element_at({w}, bucket + 1)")
+'''
+    assert _posting_sites(seeded, _ORDER_STAT_SPELLINGS) == {
+        ("q_seeded", "fraction sweep"): 1,
+        ("q_seeded", "offset lookup"): 1,
+        ("q_seeded", "private step"): 1,
+        ("q_seeded", "scalar literal"): 2,
     }
 
 
