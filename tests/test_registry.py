@@ -654,10 +654,11 @@ _POSTING_SPELLINGS = {
 
 
 def _posting_sites(src: str, spellings: dict = _POSTING_SPELLINGS) -> dict[tuple[str, str], int]:
-    """{(top-level def, spelling): count} of hand-built posting lists and
-    pair expansions in one module's code. ``ast.unparse`` merges adjacent
-    string literals, so a fragment split over lines is seen whole;
-    docstrings and decorators (the DuckDB twins) are dropped first."""
+    """{(top-level def, spelling): count} of ``spellings`` (by default
+    hand-built posting lists and pair expansions) in one module's code.
+    ``ast.unparse`` merges adjacent string literals, so a fragment split
+    over lines is seen whole; docstrings and decorators (the DuckDB
+    twins) are dropped first."""
     import ast
     from collections import Counter
 
