@@ -22,11 +22,17 @@ one-row ``range`` in this module.
 from __future__ import annotations
 
 import json
+import re
 from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, StructType
+
+
+# A surrogate code point in a Python string is no character: a JVM
+# string would carry it as '?', createDataFrame stores U+FFFD.
+_SURROGATE = re.compile("[\ud800-\udfff]")
 
 
 def _has_str(v: Any) -> bool:
@@ -49,7 +55,8 @@ def array_lit(values: list[Any], sql_type: str) -> str:
 def col_lit(value: Any, ddl_type: str | DataType) -> Column:
     """``value`` as one constant Column of type ``ddl_type``: nested
     lists for arrays, dicts for maps (string keys) and structs."""
-    return F.from_json(F.lit(json.dumps(value)), ddl_type)
+    text = json.dumps(value, ensure_ascii=False)
+    return F.from_json(F.lit(_SURROGATE.sub("\ufffd", text)), ddl_type)
 
 
 def local_table(spark: SparkSession, rows: Sequence[Sequence[Any]], ddl: str) -> DataFrame:

@@ -28,6 +28,12 @@ def postings(df: DataFrame, key: str | Column, member: str | Column, name: str) 
     return df.groupBy(key).agg(F.sort_array(F.collect_set(member)).alias(name))
 
 
+def postings_sql(member: str) -> str:
+    """SQL fragment: the ``postings`` list of ``member`` as an aggregate,
+    for ``spark.sql`` text that groups by the key itself."""
+    return f"sort_array(collect_set({member}))"
+
+
 def list_pairs(arr: str, fields: str) -> str:
     """SQL fragment: ``array<struct<fields>>`` of every ordered pair
     (x, y) with x at a lower index than y in ``arr``.

@@ -62,6 +62,7 @@ from distgrep_spark.functions.textfns import (
 )
 from distgrep_spark.operators.dedup import shingle_profiles
 from distgrep_spark.operators.graph import copurchase_edges
+from distgrep_spark.operators.preference import mmr_pick
 from distgrep_spark.operators.similarity import (
     INT8_GRID,
     PQ_D,
@@ -4342,8 +4343,9 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever crosses).
 
     Plan shape: relevance is one scan + broadcast of the 1-row query
-    vector with a TakeOrdered top-20; the greedy itself then runs on
-    the DRIVER over the collected 20-row candidate page (the bounded
+    vector with a TakeOrdered top-20; the greedy itself
+    (operators/preference.mmr_pick, weight 3) then runs on the DRIVER
+    over the collected 20-row candidate page (the bounded
     codebook-pull precedent — operators/distrank.py, clustering.py:
     pools of constant size move to the driver, never data). This is
     also where production rerankers run MMR: on the retrieved page,
@@ -4355,7 +4357,7 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     run. All scores are exact BIGINTs (int8-grid dots, 3*rel - maxsim),
     ties broken on vec_id: the greedy trajectory is fully deterministic
     in both implementations. At 100 TB only the top-20 retrieval
-    touches data; MMR is O(k * pool^2) = O(2000) everywhere."""
+    touches data; MMR is O(k * pool) = O(100) dots everywhere."""
     emb = load_table(spark, sf_dir, "embeddings")
     emb.createOrReplaceTempView("mmr_emb_v")
     dot = (
@@ -4373,35 +4375,9 @@ def q_sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) ORDER BY rel DESC, vec_id LIMIT 20
         """
     ).collect()
-    cand = [(r["vec_id"], r["rel"], list(r["qv"])) for r in cand_rows]
-    sim = {
-        (a[0], b[0]): sum(x * y for x, y in zip(a[2], b[2]))
-        for a in cand
-        for b in cand
-        if a[0] != b[0]
-    }
-    picked: list[tuple[int, int, int, int]] = []
-    remaining = {v: rel for v, rel, _ in cand}
-    while remaining and len(picked) < 5:
-        if not picked:
-            # argmax rel, tie vec_id asc
-            v = min(remaining, key=lambda x: (-remaining[x], x))
-            picked.append((1, v, remaining[v], 0))
-        else:
-            sel = [p[1] for p in picked]
-            best = min(
-                remaining,
-                key=lambda x: (
-                    -(3 * remaining[x] - max(sim[(x, s_)] for s_ in sel)),
-                    x,
-                ),
-            )
-            red = max(sim[(best, s_)] for s_ in sel)
-            picked.append((len(picked) + 1, best, remaining[best], red))
-        del remaining[picked[-1][1]]
-    out = [
-        (o, v, rel, red, 3 * rel - red) for (o, v, rel, red) in picked
-    ]
+    rel = {r["vec_id"]: r["rel"] for r in cand_rows}
+    qv = {r["vec_id"]: r["qv"] for r in cand_rows}
+    out = [(o, v, rel[v], red, 3 * rel[v] - red) for o, v, red in mmr_pick(rel, qv, 5, 3)]
     return local_table(
         spark,
         out,

@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.literals import local_table
-from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.operators.preference import match_matrix, mm_step
 from distgrep_spark.operators.similarity import INT8_GRID, int_l2sq
 from distgrep_spark.queries.analytics import _ER_RECS_SQL
 from distgrep_spark.queries.registry import ORACLES, query
@@ -645,25 +645,6 @@ def _brand_baskets(li: DataFrame, part: DataFrame) -> DataFrame:
     )
 
 
-def _bt_match_matrix(baskets: DataFrame) -> DataFrame:
-    """(bi, bj, n_ij, w_ij): per brand pair bi < bj, the number of
-    decided matches (equal quantities are ties, skipped) and bi's wins.
-    Pairing is in-basket, k(k-1)/2 per order; the rollup is
-    |brands|^2-bounded at any fact scale."""
-    return (
-        baskets.select(
-            F.explode(F.expr(list_pairs("bs", "x.b AS bi, y.b AS bj, x.q AS qi, y.q AS qj")))
-            .alias("m")
-        )
-        .where("m.qi <> m.qj")
-        .groupBy("m.bi", "m.bj")
-        .agg(
-            F.expr("CAST(count(*) AS BIGINT) AS n_ij"),
-            F.expr("CAST(sum(CASE WHEN m.qi > m.qj THEN 1 ELSE 0 END) AS BIGINT) AS w_ij"),
-        )
-    )
-
-
 @query(
     "orders_bradley_terry_step",
     oracle="""
@@ -728,17 +709,10 @@ def q_orders_bradley_terry_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeats with w0 = w1 (the graph_pagerank_step discipline: the
     oracle certifies one iteration's relational body).
 
-    Cross-engine float discipline (the events_ewma lesson, applied to
-    DIVISION instead of dyadic folds): every per-term value is a chain
-    of IEEE-correctly-rounded ops on identical operands (one int/int
-    divide, one add, one divide, one EXACT multiply by 2^20), so both
-    engines compute bit-identical doubles; each term is floored to
-    integer 2^-20 units and the per-brand denominator crosses engines
-    as an exact BIGINT sum — float summation ORDER (the engine's
-    choice) never touches a float accumulator. w0_i + w0_j > 0 by
-    theorem (every counted match has a winner, so two brands that met
-    cannot both have zero total wins) — no DIVIDE_BY_ZERO guard needed,
-    unlike stats_ab_power_mde's data-dependent denominator.
+    The step itself is operators/preference.mm_step, shared with
+    rlhf_preference_curation; its module docstring states the
+    cross-engine float discipline (int/int divides, one exact 2^20
+    shift, BIGINT sums).
 
     The 100-TB shape: ONE fact shuffle builds per-order brand baskets
     (groupBy + collect_list — the market_basket_lift pattern; pairing
@@ -748,47 +722,17 @@ def q_orders_bradley_terry_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     — broadcast-sized at any fact scale."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    # |brands|^2-bounded match matrix: checkpoint so the w0 / term /
-    # denominator branches below read ~300 materialized rows instead
+    # |brands|^2-bounded match matrix: checkpoint so mm_step's w0 /
+    # term / denominator branches read ~300 materialized rows instead
     # of re-executing the fact-scan + basket explode once per branch
     # (first audit of this plan counted 28 shuffles; 4 after)
-    pair = _bt_match_matrix(_brand_baskets(li, part)).localCheckpoint(eager=False)
-    dirs = pair.selectExpr(
-        "bi AS b", "bj AS o", "n_ij", "w_ij AS w"
-    ).unionByName(
-        pair.selectExpr("bj AS b", "bi AS o", "n_ij", "n_ij - w_ij AS w")
-    )
-    w0 = dirs.groupBy("b").agg(
-        F.expr("CAST(sum(n_ij) AS BIGINT) AS n_i"),
-        F.expr("CAST(sum(w) AS BIGINT) AS wins_i"),
-    ).selectExpr(
-        "b", "n_i", "wins_i",
-        "CAST(wins_i AS DOUBLE) / CAST(n_i AS DOUBLE) AS r0",
-    )
-    wi = w0.selectExpr("b AS _bi", "r0 AS _ri")
-    wj = w0.selectExpr("b AS _bj", "r0 AS _rj")
-    denom = (
-        dirs.join(F.broadcast(wi), F.col("b") == F.col("_bi"))
-        .join(F.broadcast(wj), F.col("o") == F.col("_bj"))
-        .selectExpr(
-            "b",
-            "CAST(floor(CAST(n_ij AS DOUBLE) / (_ri + _rj) * 1048576 + 0.5)"
-            " AS BIGINT) AS t",
-        )
-        .groupBy("b")
-        .agg(F.expr("CAST(sum(t) AS BIGINT) AS den"))
-        .selectExpr("b AS _bd", "den")
-    )
-    return (
-        w0.join(F.broadcast(denom), F.col("b") == F.col("_bd"))
-        .selectExpr(
-            "b AS brand",
-            "n_i AS n_comparisons",
-            "wins_i AS wins",
-            "round(r0, 6) AS win_rate",
-            "round(CAST(wins_i AS DOUBLE) * 1048576 / CAST(den AS DOUBLE), 6)"
-            " AS bt_strength",
-        )
+    pair = match_matrix(_brand_baskets(li, part)).localCheckpoint(eager=False)
+    return mm_step(pair).selectExpr(
+        "b AS brand",
+        "n_i AS n_comparisons",
+        "wins_i AS wins",
+        "round(r0, 6) AS win_rate",
+        "bt_strength",
     )
 
 
@@ -992,7 +936,7 @@ def _bt_iters(spark: SparkSession, sf_dir: str, k: int):
     orders_bradley_terry_step."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    pair = _bt_match_matrix(_brand_baskets(li, part))
+    pair = match_matrix(_brand_baskets(li, part))
     # Bounded codebook pull: |brands|^2 rows regardless of corpus size.
     mat = [
         (r["bi"], r["bj"], r["n_ij"], r["w_ij"]) for r in pair.collect()

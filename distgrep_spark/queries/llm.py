@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.literals import array_lit, col_lit, local_table
-from distgrep_spark.functions.pairs import cross_pairs, list_pairs, postings
+from distgrep_spark.functions.pairs import cross_pairs, list_pairs, postings, postings_sql
 from distgrep_spark.functions.textfns import (
     BPE_ISH_DUCK,
     TOKENS_DUCK,
@@ -4276,9 +4276,8 @@ def q_dedup_simhash_radius_report(
                  ELSE array() END) AS i
         )
         SELECT doc_id,
-               md5(concat_ws(char(31), sort_array(collect_set(gram))))
-                 AS pid,
-               sort_array(collect_set(gram)) AS gs
+               md5(concat_ws(char(31), {postings_sql("gram")})) AS pid,
+               {postings_sql("gram")} AS gs
         FROM grams GROUP BY doc_id
         """
     ).localCheckpoint(eager=False).createOrReplaceTempView("shr_prof_v")
@@ -4352,9 +4351,7 @@ def q_dedup_simhash_radius_report(
           FROM prow LATERAL VIEW explode(sequence(0, 3)) AS k
         ),
         posts AS (
-          SELECT k, val,
-                 sort_array(collect_list(struct(pid, m, b0, b1, b2, b3)))
-                   AS s
+          SELECT k, val, {postings_sql("struct(pid, m, b0, b1, b2, b3)")} AS s
           FROM buckets GROUP BY k, val
         ),
         pairs AS (

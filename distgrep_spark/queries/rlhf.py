@@ -8,12 +8,12 @@ data team actually runs, composed from the engine's certified kernels:
                              never prose; min-doc_id survivor)
   2. DSIR importance        (text_dsir_importance: linearized likelihood
                              ratio, every term an exact BIGINT)
-  3. Bradley-Terry          (orders_bradley_terry_step: source strengths
-                             from pairwise basket matches, one MM step)
+  3. Bradley-Terry          (operators/preference.mm_step: source
+                             strengths from pairwise basket matches)
   4. split-conformal gate   (stats_conformal_calibration: per-lang
                              clamped-rank threshold on importance)
-  5. MMR diversification    (sim_mmr_diversify: greedy re-rank of the
-                             top-20 page on int8-grid embedding dots)
+  5. MMR diversification    (operators/preference.mmr_pick: greedy re-rank
+                             of the top-20 page on int8-grid embedding dots)
 
 Reference parity note: the reference (massimostanzione/distgrep,
 client.go:56-60 + worker.go:31-62) is scan → filter → aggregate; this
@@ -28,8 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distgrep_spark.functions.literals import local_table
-from distgrep_spark.functions.pairs import list_pairs
+from distgrep_spark.functions.pairs import postings
 from distgrep_spark.functions.textfns import TOKENS_DUCK, tokens_sql
+from distgrep_spark.operators.preference import match_matrix, mm_step, mmr_pick
 from distgrep_spark.operators.similarity import INT8_GRID
 from distgrep_spark.queries.analytics import _QUANT_DUCK
 from distgrep_spark.queries.registry import query
@@ -263,19 +264,20 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
        256) cells; within a basket a source's entrant is its BEST doc
        score (max, never sum: a summed-BIGINT q would sit ~2.4e18 at
        x16, one densification decade from overflow), pairwise wins feed
-       one Hunter-2004 MM step in the orders_bradley_terry_step float
-       discipline (int/int divides, one exact 2^20 shift, BIGINT sums —
-       bit-identical cross-engine).
+       one Hunter-2004 MM step (operators/preference.mm_step: int/int
+       divides, one exact 2^20 shift, BIGINT sums — bit-identical
+       cross-engine).
     4. SPLIT-CONFORMAL GATE — calibration half doc_id % 2 = 0 (parity
        survives the key-shifted corpora: shifts are even); per-lang
        threshold = clamped-rank ceil((n+1)/10)-th smallest score,
        computed as (n+10) DIV 10 — integer on both engines, no float
        quantile. covered = score >= lang threshold.
     5. MMR SELECTION — top-20 page by (score DESC, doc_id) via
-       TakeOrderedAndProject, then the sim_mmr_diversify driver greedy
-       picks k=5 maximizing rel - max_dot(picked): rel = (21-rank)*2^20
-       rank units, redundancy = int8-grid embedding dots (<= 64*127^2),
-       all BIGINT, ties on doc_id — the trajectory is deterministic and
+       TakeOrderedAndProject, then the driver greedy
+       operators/preference.mmr_pick picks k=5 maximizing
+       rel - max_dot(picked): rel = (21-rank)*2^20 rank units,
+       redundancy = int8-grid embedding dots (<= 64*127^2), all
+       BIGINT, ties on doc_id — the trajectory is deterministic and
        the DuckDB twin replays it as a chained CTE.
 
     The 100-TB shape: the document scan happens ONCE (dedup digests
@@ -300,12 +302,13 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # call 0.90 s, scored 0.72 s, pair 0.42 s — every Dataset
     # transformation eagerly re-analyzes its whole plan, and
     # localCheckpoint(eager=False) pays physical planning at CALL
-    # time). Each distributed stage is now ONE spark.sql analysis pass
-    # over temp views, with the SAME checkpoints at the same fan-out
-    # points and the same broadcast hints; the distributed plan shape,
-    # every expression, and the result are unchanged (all-arms
-    # collect-equality in tools/ab_r12.py at cf796df; interleaved A/B
-    # in OPTIMIZATION_r12.md). cg is additionally checkpointed (it fans
+    # time). Each distributed stage but the shared Bradley-Terry kernel
+    # (stage 3) is now ONE spark.sql analysis pass over temp views, with
+    # the SAME checkpoints at the same fan-out points and the same
+    # broadcast hints; the distributed plan shape, every expression,
+    # and the result are unchanged (all-arms collect-equality in
+    # tools/ab_r12.py at cf796df; interleaved A/B in
+    # OPTIMIZATION_r12.md). cg is additionally checkpointed (it fans
     # out to tstat, the corpus totals, and the dscore probe — the
     # tokenize + trigram pipeline previously re-executed 3x), and the
     # totals come straight from cg (sum over grams of f_t == sum over
@@ -380,56 +383,15 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Stage 3: Bradley-Terry over (lang, length-cell) basket matches;
     # pair is the |sources|^2-bounded match matrix (<= 400 rows at any
-    # scale), checkpointed because dirs/w0/denom fan out from it.
-    spark.sql(
-        f"""
-        WITH bq AS (
-          SELECT lang, n_chars DIV 256 AS bk, source, max(score_num) AS q
-          FROM rlhf_scored_v GROUP BY lang, n_chars DIV 256, source
-        ),
-        baskets AS (
-          SELECT lang, bk,
-                 sort_array(collect_list(struct(source AS s, q))) AS bs
-          FROM bq GROUP BY lang, bk
-        )
-        SELECT m.bi, m.bj, CAST(count(*) AS BIGINT) AS n_ij,
-               CAST(sum(CASE WHEN m.qi > m.qj THEN 1 ELSE 0 END)
-                    AS BIGINT) AS w_ij
-        FROM baskets
-        LATERAL VIEW explode({list_pairs("bs", "x.s AS bi, y.s AS bj, x.q AS qi, y.q AS qj")})
-          AS m
-        WHERE m.qi <> m.qj
-        GROUP BY m.bi, m.bj
-        """
-    ).localCheckpoint(eager=False).createOrReplaceTempView("rlhf_pair_v")
-    bt = spark.sql(
-        """
-        WITH dirs AS (
-          SELECT bi AS b, bj AS o, n_ij, w_ij AS w FROM rlhf_pair_v
-          UNION ALL
-          SELECT bj AS b, bi AS o, n_ij, n_ij - w_ij AS w FROM rlhf_pair_v
-        ),
-        w0 AS (
-          SELECT b, n_i, wins_i,
-                 CAST(wins_i AS DOUBLE) / CAST(n_i AS DOUBLE) AS r0
-          FROM (SELECT b, CAST(sum(n_ij) AS BIGINT) AS n_i,
-                       CAST(sum(w) AS BIGINT) AS wins_i
-                FROM dirs GROUP BY b)
-        ),
-        denom AS (
-          SELECT /*+ BROADCAST(wi), BROADCAST(wj) */ d.b,
-                 CAST(sum(CAST(floor(CAST(d.n_ij AS DOUBLE)
-                   / (wi.r0 + wj.r0) * 1048576 + 0.5) AS BIGINT))
-                   AS BIGINT) AS den
-          FROM dirs d JOIN w0 wi ON d.b = wi.b JOIN w0 wj ON d.o = wj.b
-          GROUP BY d.b
-        )
-        SELECT /*+ BROADCAST(dn) */ w0.b AS source,
-               round(CAST(w0.wins_i AS DOUBLE) * 1048576
-                     / CAST(dn.den AS DOUBLE), 6) AS bt_strength
-        FROM w0 JOIN denom dn ON w0.b = dn.b
-        """
+    # scale), checkpointed because mm_step's branches fan out from it.
+    bq = (
+        spark.table("rlhf_scored_v")
+        .groupBy("lang", F.expr("n_chars DIV 256 AS bk"), "source")
+        .agg(F.max("score_num").alias("q"))
     )
+    baskets = postings(bq, F.struct("lang", "bk"), F.struct(F.col("source").alias("b"), "q"), "bs")
+    pair = match_matrix(baskets).localCheckpoint(eager=False)
+    bt = mm_step(pair).selectExpr("b AS source", "bt_strength")
 
     # Stage 4: split-conformal per-lang threshold (clamped integer rank).
     thr = spark.sql(
@@ -474,37 +436,8 @@ def q_rlhf_preference_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["doc_id"]: (21 - rank) * 1048576
         for rank, r in enumerate(page, start=1)
     }
-    rank_of = {r["doc_id"]: rank for rank, r in enumerate(page, start=1)}
-
-    def dot(a: int, b: int) -> int:
-        return sum(x * y for x, y in zip(qv[a], qv[b]))
-
-    picked: list[tuple[int, int, int, int]] = []  # (order, id, red, mmr)
-    remaining = set(rel)
-    while remaining and len(picked) < 5:
-        if not picked:
-            d = min(remaining, key=lambda x: (-rel[x], x))
-            picked.append((1, d, 0, rel[d]))
-        else:
-            sel = [p[1] for p in picked]
-            d = min(
-                remaining,
-                key=lambda x: (-(rel[x] - max(dot(x, s) for s in sel)), x),
-            )
-            red = max(dot(d, s) for s in sel)
-            picked.append((len(picked) + 1, d, red, rel[d] - red))
-        remaining.discard(picked[-1][1])
-    by_id = {p[1]: p for p in picked}
-    pick_rows = [
-        (
-            d,
-            rank_of[d],
-            by_id[d][0] if d in by_id else None,
-            by_id[d][2] if d in by_id else None,
-            by_id[d][3] if d in by_id else None,
-        )
-        for d in rel
-    ]
+    by_id = {d: (o, red, rel[d] - red) for o, d, red in mmr_pick(rel, qv, 5, 1)}
+    pick_rows = [(d, rank, *by_id.get(d, (None,) * 3)) for rank, d in enumerate(rel, start=1)]
     picks = local_table(
         spark,
         pick_rows,

@@ -3,11 +3,13 @@ driver-to-plan literal core: ``local_table`` and the ``col_lit`` Column
 form must return the rows and schema ``spark.createDataFrame`` returns
 for the same rows, in one partition, including the empty table (schema
 kept, 0 rows), NULLs, bigint and double extremes, and strings that JSON
-or SQL quoting could break. ``array_lit`` refuses strings, whose quote
-would end its SQL literal."""
+or SQL quoting could break. A surrogate code point, which no JVM string
+can hold, comes back as U+FFFD from all three. ``array_lit`` refuses
+strings, whose quote would end its SQL literal."""
 
 from __future__ import annotations
 
+import re
 import struct
 
 import pytest
@@ -42,6 +44,12 @@ def _bits(rows) -> list[tuple]:
     return [(i, None if d is None else struct.pack(">d", d), s) for i, d, s in map(tuple, rows)]
 
 
+def _stored(rows) -> list[tuple]:
+    """What createDataFrame stores for ``rows``: each surrogate code
+    point of a string becomes U+FFFD."""
+    return [(i, d, s and re.sub("[\ud800-\udfff]", "\ufffd", s)) for i, d, s in rows]
+
+
 @_SETTINGS
 @given(rows=_ROWS)
 @example(rows=[])
@@ -53,10 +61,11 @@ def _bits(rows) -> list[tuple]:
         (0, -0.0, "it's É 😀 \\' \"x\""),
     ]
 )
+@example(rows=[(None, None, "\ud800")])
 def test_local_table_and_col_lit_match_create_dataframe(spark, rows):
     ref = spark.createDataFrame(rows, DDL)
     want = _bits(ref.collect())
-    assert want == _bits(rows)
+    assert want == _bits(_stored(rows))
 
     table = local_table(spark, rows, DDL)
     assert table.schema == ref.schema

@@ -679,12 +679,12 @@ def _posting_sites(src: str, spellings: dict = _POSTING_SPELLINGS) -> dict[tuple
 
 
 def test_posting_lists_live_only_in_pairs():
-    """Every posting list is built by functions/pairs.postings and paired
-    only by list_pairs / cross_pairs (10 lists, 4 cross expansions and 2
-    filter pairings had been written by hand). The allowlist names exact
-    sites: three ordered multisets (the sorted-fold sum and extras.py's
-    per-order quantity lists), where repeats are data, and the two
-    spark.sql texts that still spell their lists inline."""
+    """Every posting list is built by functions/pairs.postings (or its
+    spark.sql form postings_sql) and paired only by list_pairs /
+    cross_pairs (13 lists, 4 cross expansions and 2 filter pairings had
+    been written by hand). The allowlist names the three ordered
+    multisets (the sorted-fold sum and extras.py's per-order quantity
+    lists), where repeats are data."""
     import glob
     import os
 
@@ -693,8 +693,6 @@ def test_posting_lists_live_only_in_pairs():
         ("functions/numeric.py", "sorted_sum", "posting list"): 1,
         ("queries/extras.py", "q_scalar_array_fns", "posting list"): 1,
         ("queries/extras.py", "q_scalar_map_fns", "posting list"): 1,
-        ("queries/rlhf.py", "q_rlhf_preference_curation", "posting list"): 1,
-        ("queries/llm.py", "q_dedup_simhash_radius_report", "posting list"): 3,
     }
     found = {}
     for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
@@ -720,6 +718,80 @@ def q_seeded(df):
         ("q_seeded", "posting list"): 1,
         ("q_seeded", "filter pairing"): 1,
         ("q_seeded", "cross expansion"): 1,
+    }
+
+
+_PREFERENCE_SPELLINGS = {
+    "MM term": re.compile(r"\*(?:\s|\\n)*1048576(?:\s|\\n)*\+(?:\s|\\n)*0\.5"),
+    "greedy loop": re.compile(r"picked\.append\("),
+}
+
+
+def _spark_side(src: str) -> str:
+    """``src`` without its oracle SQL: the module-level names that only
+    ``@query`` decorators read (a DuckDB twin's text or builder) are
+    dropped, and so are the decorators. A constant the Spark body reads
+    too stays."""
+    import ast
+
+    tree = ast.parse(src)
+    oracle = set()
+    for node in ast.walk(tree):
+        for d in getattr(node, "decorator_list", []):
+            oracle |= {n.id for n in ast.walk(d) if isinstance(n, ast.Name)}
+        if hasattr(node, "decorator_list"):
+            node.decorator_list = []
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+
+    def defines(stmt) -> set:
+        if isinstance(stmt, ast.Assign):
+            return {t.id for t in stmt.targets if isinstance(t, ast.Name)}
+        return {getattr(stmt, "name", None)}
+
+    tree.body = [s for s in tree.body if not (defines(s) & oracle) or defines(s) & used]
+    return ast.unparse(tree)
+
+
+def test_preference_kernels_live_only_in_preference():
+    """The Bradley-Terry MM step and the MMR greedy are written once, in
+    operators/preference.py (mm_step, mmr_pick); the MM step had been
+    written twice (integration.py, rlhf.py) and the greedy twice
+    (rlhf.py, analytics.py). The DuckDB twins keep their own SQL."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "distgrep_spark")
+    found = {}
+    for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(p, pkg).replace(os.sep, "/")
+        if rel != "operators/preference.py":
+            src = _spark_side(open(p).read())
+            for (site, spelling), n in _posting_sites(src, _PREFERENCE_SPELLINGS).items():
+                found[(rel, site, spelling)] = n
+    assert found == {}
+
+
+def test_preference_lint_catches_seeded_copies():
+    seeded = '''
+_TWIN = """SELECT CAST(floor(n / (a.r0 + b.r0) * 1048576
+             + 0.5) AS BIGINT) AS t FROM dir"""
+_SHARED = "floor(n_ij / (_ri + _rj) * 1048576 + 0.5)"
+
+
+@query("q", oracle=_TWIN)
+def q_seeded(spark, rel):
+    """floor(n / (r_i + r_j) * 1048576 + 0.5) in a docstring is prose."""
+    den = spark.sql(f"""SELECT sum(CAST(floor(n_ij / (r0_i + r0_j) * 1048576
+                       + 0.5) AS BIGINT)) FROM dirs""")
+    picked = []
+    while len(picked) < 5:
+        picked.append(min(rel, key=lambda x: (-rel[x], x)))
+    return den.selectExpr(_SHARED)
+'''
+    assert _posting_sites(_spark_side(seeded), _PREFERENCE_SPELLINGS) == {
+        ("q_seeded", "MM term"): 1,
+        ("q_seeded", "greedy loop"): 1,
+        ("<module>", "MM term"): 1,
     }
 
 
